@@ -1442,26 +1442,39 @@ class LakeTable:
     def _bucket_col(self) -> F.Column:
         return F.pmod(F.hash(*[F.col(k) for k in self.primary_key]), F.lit(self.n_buckets))
 
-    # logical-plan node names that mark a delta lineage as expensive to
-    # re-execute AND re-plan (multi-join changelog diffs, aggregations,
-    # Python kernels); matched at line starts of the analyzed plan tree
-    _HEAVY_PLAN_RE = re.compile(
-        r"^[\s+:\-]*(Join|Aggregate|Window|Generate|Expand|"
-        r"(?:Arrow|Batch)EvalPython|MapInPandas|PythonMapInArrow|"
-        r"FlatMapGroupsInPandas|GlobalLimit|Sort|Union)\b",
-        re.M,
+    # Catalyst tree patterns that mark a delta lineage as expensive to
+    # re-execute AND re-plan: multi-join changelog diffs, aggregations,
+    # and Python kernels — PYTHON_UDF covers scalar pandas/Python UDF
+    # expressions as well as the function of MapInPandas,
+    # FlatMapGroupsInPandas and MapInArrow nodes
+    _HEAVY_PATTERNS = (
+        "JOIN", "AGGREGATE", "WINDOW", "GENERATE", "UNION", "SORT", "LIMIT",
+        "PYTHON_UDF",
     )
+
+    def _heavy_lineage(self, df: DataFrame) -> bool:
+        """Structural check of the ANALYZED plan: does any node or
+        expression in it carry one of ``_HEAVY_PATTERNS``? Catalyst keeps
+        each tree's pattern bits as the union over its nodes, its
+        children and its expressions, so each pattern is one JVM call,
+        with no plan-string parsing."""
+        tp = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        analyzed = df._jdf.queryExecution().analyzed()
+        return any(
+            analyzed.containsPattern(getattr(tp, p)()) for p in self._HEAVY_PATTERNS
+        )
 
     def _materialize_delta(self, df: DataFrame):
         """Delta-frame policy for multi-action consumers (merge/delete):
         the frame feeds 2-3 separate Spark actions (stats/guard collect,
         then the write).
 
-        - HEAVY lineage (joins/aggregates/Python — IVM refreshes, CDC
-          mirror diffs): eager ``localCheckpoint`` — the lineage executes
-          exactly ONCE and is truncated, so every downstream action
-          analyzes a leaf scan instead of re-running Catalyst over the
-          changelog tree per action (measured r13: 42-56% of merge-family
+        - HEAVY lineage (``_heavy_lineage``: joins/aggregates/Python UDFs
+          and kernels — IVM refreshes, CDC mirror diffs): eager
+          ``localCheckpoint`` — the lineage executes exactly ONCE and is
+          truncated, so every downstream action analyzes a leaf scan
+          instead of re-running Catalyst over the changelog tree per
+          action (measured r13: 42-56% of merge-family
           wall was BETWEEN jobs, i.e. per-action planning; guide §5
           "localCheckpoint is a cheaper way to cut lineage").
         - TRIVIAL lineage (scan/local frame + row-level ops only): no
@@ -1478,11 +1491,7 @@ class LakeTable:
             p = df.persist()
             return p, p.unpersist
         try:
-            heavy = bool(
-                self._HEAVY_PLAN_RE.search(
-                    df._jdf.queryExecution().analyzed().toString()
-                )
-            )
+            heavy = self._heavy_lineage(df)
         except Exception:
             heavy = True  # unknown plan shape: materializing is the safe default
         if not heavy:

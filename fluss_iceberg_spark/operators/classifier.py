@@ -30,7 +30,6 @@ logit is exact integer arithmetic both engines replay bit-for-bit.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -105,32 +104,13 @@ def train_logreg(
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        from fluss_iceberg_spark.operators.util import arrow_local_df
-
-        # FLUSS_GD_COLW=1: epoch weights enter as a broadcast 1-ROW
-        # FRAME instead of literals, keeping the codegen source (and so
-        # the Janino compile cache) stable across epochs; arithmetic is
-        # bit-identical (tests/test_classifier.py pins exact equality).
-        # Whether the saved recompiles beat the added per-epoch
-        # broadcast is environment-dependent — adjudicated by
-        # interleaved A/B (OPTIMIZATION_r13.md).
-        col_w = os.environ.get("FLUSS_GD_COLW", "0") == "1"
-        w_schema = ", ".join(f"__w{j} double" for j in range(len(w)))
         for _ in range(epochs):
-            if col_w:
-                wrow = arrow_local_df(spark, [tuple(w)], w_schema)
-                src = proj.crossJoin(F.broadcast(wrow))
-                z = F.col("__w0")
-                for j, c in enumerate(cols):
-                    z = z + F.col(f"__w{j + 1}") * zcol(c)
-            else:
-                src = proj
-                z = F.lit(w[0])
-                for j, c in enumerate(cols):
-                    z = z + F.lit(w[j + 1]) * zcol(c)
+            z = F.lit(w[0])
+            for j, c in enumerate(cols):
+                z = z + F.lit(w[j + 1]) * zcol(c)
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
             err = p - F.col(label_col)
-            grads = src.agg(
+            grads = proj.agg(
                 F.sum(err).alias("g0"),
                 *[
                     F.sum(err * zcol(c)).alias(f"g{j + 1}")

@@ -401,7 +401,12 @@ def simhash_near_pairs(
     docs: DataFrame, max_hamming: int = 3, text_col: str = "text"
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, banded into 4× 16-bit
-    chunks (pigeonhole guarantee for distance ≤ 3)."""
+    chunks (pigeonhole guarantee for distance ≤ 3).
+
+    The chunk rows are hash-partitioned on the join key before the self
+    join: both join sides then plan the same exchange, which AQE reuses,
+    so the tokenize + hash + kernel pipeline runs once instead of once
+    per side — without a persist."""
     fp = simhash_fingerprints(docs, text_col)
     chunks = fp.select(
         "doc_id",
@@ -419,7 +424,7 @@ def simhash_near_pairs(
                 ]
             )
         ).alias("cc"),
-    ).select("doc_id", "simhash", "cc.chunk", "cc.cv")
+    ).select("doc_id", "simhash", "cc.chunk", "cc.cv").repartition("chunk", "cv")
     cand = (
         chunks.alias("x")
         .join(chunks.alias("y"), on=["chunk", "cv"])

@@ -16,8 +16,11 @@ Scale posture (for a real multi-executor cluster the same confs apply):
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+_STOCK_DAEMON = "pyspark.daemon"
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -59,12 +62,24 @@ def get_spark(
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     )
+    daemon = _STOCK_DAEMON
     if os.environ.get("FLUSS_PY_DAEMON", "1") != "0":
-        builder = builder.config(
-            "spark.python.daemon.module", "fluss_iceberg_spark.pydaemon"
-        ).config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        daemon = "fluss_iceberg_spark.pydaemon"
+        builder = builder.config("spark.python.daemon.module", daemon).config(
+            "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # the daemon module is fixed when the SparkContext starts: a reused
+    # session keeps the daemon it was created with
+    active = spark.sparkContext.getConf().get("spark.python.daemon.module", _STOCK_DAEMON)
+    if active != daemon:
+        warnings.warn(
+            f"get_spark reused a session whose Python worker daemon is "
+            f"{active!r}; the requested {daemon!r} (FLUSS_PY_DAEMON) takes "
+            f"effect only in a new session",
+            stacklevel=2,
+        )
     return spark

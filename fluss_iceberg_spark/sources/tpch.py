@@ -14,6 +14,8 @@ sql-client.sql:1-48) lives in :func:`reference_views`.
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,11 +37,59 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Parquet confs that change the schema Spark infers from the same file.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+# session -> {(file identity, inference confs): inferred schema}
+_inferred: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, skipping schema inference when this
+    session already inferred the schema of the same file under the same
+    inference confs. A parquet read without a schema runs a one-task
+    Spark job to read the footer; with one it runs none."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        # a directory's schema depends on every file in it (and on its
+        # partition layout); only single files are cached
+        return spark.read.parquet(path)
+    key = (
+        st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns,
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    schemas = _inferred.setdefault(spark, {})
+    schema = schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Plain parquet scan → Catalyst gets full
-    pushdown/pruning; no caching so each query plans its own minimal scan."""
+    pushdown/pruning; no caching of rows, so each query plans its own
+    minimal scan.
+
+    The inferred schema is cached per session, keyed by the file's
+    identity (device, inode, size, mtime_ns) and the parquet confs that
+    change inference (``_INFERENCE_CONFS``): a repeat load of an unchanged
+    file reads with that schema and submits no Spark job, and a file
+    rewritten at the same path is inferred again."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS) which Spark 4 rejects
         # (PARQUET_TYPE_ILLEGAL). Read nanos as long (session-settable legacy
@@ -47,11 +97,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # microsecond TimestampType column — same truncation DuckDB's
         # epoch_us applies.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

@@ -2,9 +2,9 @@
 sessions so minutes-long host-contention windows hit both variants
 equally. Prints per-variant best and median of per-round bests.
 
-Usage: AB_ENV=FLUSS_MERGE_PERSIST python scripts/ab_run.py q1 q2 -- rounds
-AB_VALS=valA,valB overrides the toggle values (default "0,1"); the
-summary's OFF column is valA, ON is valB.
+Usage: AB_ENV=FLUSS_MERGE_DELTA python scripts/ab_run.py q1 q2 -- rounds
+AB_VALS=valA,valB sets the two toggle values (default "auto,persist");
+the summary's OFF column is valA, ON is valB.
 """
 
 from __future__ import annotations
@@ -43,7 +43,12 @@ def run_round(names, env_val, env_key):
 
 
 def main():
-    env_key = os.environ.get("AB_ENV", "FLUSS_MERGE_PERSIST")
+    env_key = os.environ.get("AB_ENV", "FLUSS_MERGE_DELTA")
+    vals = os.environ.get("AB_VALS", "auto,persist").split(",")
+    if len(vals) != 2:
+        print(f"usage: AB_VALS must name exactly two values, got {vals!r}",
+              file=sys.stderr)
+        sys.exit(2)
     args = sys.argv[1:]
     rounds = 3
     if "--" in args:
@@ -51,7 +56,6 @@ def main():
         rounds = int(args[i + 1])
         args = args[:i]
     registry.load_all()
-    vals = os.environ.get("AB_VALS", "0,1").split(",")
     a: dict[str, list] = {}
     b: dict[str, list] = {}
     for r in range(rounds):

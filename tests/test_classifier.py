@@ -95,57 +95,3 @@ def test_teacher_labels_match_rule(spark):
     # doc 1: tokens=1, chars=200, punct=0 -> 8 < 200 -> 0
     assert got == {0: 1, 1: 0}
 
-
-def test_column_weight_epochs_bitwise_equal_literal_form(spark):
-    """r13: train_logreg's FLUSS_GD_COLW=1 path feeds epoch weights
-    through a broadcast 1-row frame (codegen-cache-stable) instead of
-    literals. The arithmetic must be BIT-identical to the literal form
-    — same IEEE ops in the same order — not merely close. (The literal
-    form stays the default: the r13 interleaved A/B read the broadcast
-    per epoch as costlier than the recompiles it saves on this box.)"""
-    import os
-
-    from pyspark.sql import functions as F
-
-    rows = _toy_rows()
-    df = spark.createDataFrame(
-        rows, "doc_id long, y int, f_tokens long, f_chars long, "
-        "f_digits long, f_punct long",
-    ).coalesce(1)
-    os.environ["FLUSS_GD_COLW"] = "1"
-    try:
-        got = train_logreg(df, COLS, epochs=7, lr=2.0)
-    finally:
-        os.environ.pop("FLUSS_GD_COLW", None)
-
-    # literal-form replay (the pre-r13 shape), same stats pass
-    proj = df.select("y", *COLS).persist()
-    stats = proj.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.avg(c).alias(f"m_{c}") for c in COLS],
-        *[F.stddev_pop(c).alias(f"s_{c}") for c in COLS],
-    ).collect()[0]
-    n = int(stats["n"])
-    mean = {c: float(stats[f"m_{c}"]) for c in COLS}
-    std = {c: float(stats[f"s_{c}"]) or 1.0 for c in COLS}
-
-    def zcol(c):
-        return (F.col(c) - mean[c]) / std[c]
-
-    w = [0.0] * (len(COLS) + 1)
-    for _ in range(7):
-        z = F.lit(w[0])
-        for j, c in enumerate(COLS):
-            z = z + F.lit(w[j + 1]) * zcol(c)
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        err = p - F.col("y")
-        g = proj.agg(
-            F.sum(err).alias("g0"),
-            *[F.sum(err * zcol(c)).alias(f"g{j + 1}") for j, c in enumerate(COLS)],
-        ).collect()[0]
-        for j in range(len(w)):
-            w[j] -= 2.0 * float(g[f"g{j}"]) / n
-    proj.unpersist()
-    bias = w[0] - sum(w[j + 1] * mean[c] / std[c] for j, c in enumerate(COLS))
-    want = [bias] + [w[j + 1] / std[c] for j, c in enumerate(COLS)]
-    assert got == want  # exact float equality, not isclose

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -177,3 +178,39 @@ def test_sql_version_as_of_tag(spark, tmp_path):
         "SELECT k FROM ntag VERSION AS OF 'baseline'").collect()}
     assert got == {1}
     assert {r.k for r in eng.sql("SELECT k FROM ntag").collect()} == {1, 2}
+
+
+def test_merge_delta_with_pandas_udf_runs_udf_once(spark, cat):
+    """A delta whose key comes from a scalar pandas UDF is heavy: the
+    merge checkpoints it once instead of re-running the UDF in each of
+    its 2-3 actions (every one of them reads the key)."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("int")
+    def key_of(raw: pd.Series) -> pd.Series:
+        calls.add(len(raw))
+        return raw - 100
+
+    t = cat.create_table("udf_delta", PK_SCHEMA, primary_key=["k"], n_buckets=4)
+    t.merge(_df(spark, [(i, "a", None) for i in range(10)]))
+    src = spark.createDataFrame([(i + 100,) for i in range(5, 15)], "raw int")
+    t.merge(
+        src.select(
+            key_of("raw").alias("k"),
+            F.concat(F.lit("u"), (F.col("raw") - 100).cast("string")).alias("v"),
+            F.lit(None).cast("decimal(15,2)").alias("amt"),
+        )
+    )
+    assert calls.value == 10
+    assert {r.k: r.v for r in t.read().collect()} == {
+        **{i: "a" for i in range(5)}, **{i: f"u{i}" for i in range(5, 15)}
+    }
+
+
+def test_scan_filter_delta_stays_unmaterialized(spark, cat, tmp_path):
+    t = cat.create_table("scan_delta", PK_SCHEMA, primary_key=["k"], n_buckets=4)
+    _df(spark, [(1, "a", None), (2, "b", None)]).write.parquet(str(tmp_path / "src"))
+    scan = spark.read.parquet(str(tmp_path / "src")).filter(F.col("k") > 1)
+    frame, release = t._materialize_delta(scan)
+    assert frame is scan
+    release()

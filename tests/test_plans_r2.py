@@ -31,6 +31,20 @@ def test_simhash_fingerprints_zero_key_shuffle(spark):
     assert "MapInPandas" in plan
 
 
+def test_simhash_near_pairs_runs_kernel_once(spark):
+    """Both sides of the chunk self-join read one hash exchange: after an
+    action the final AQE plan holds a single MapInPandas, and the other
+    join side is a ReusedExchange of it — the tokenize + hash + kernel
+    pipeline runs in one stage, not one per side."""
+    df = DD.simhash_near_pairs(load_table(spark, SF, "documents"), 3)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("MapInPandas") == 1
+    assert "ReusedExchange" in final
+
+
 def test_simhash_kernel_matches_rowwise_reference(spark):
     """The vectorized bit-vote kernel must equal a straightforward per-doc
     Python reference on the same token hashes (guards the reduceat /
