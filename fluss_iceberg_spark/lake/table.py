@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 # Arrow-path local frames for metadata tables (guide §6): the classic
 # list path pickles rows into a 32-partition Python RDD — every read of
 # $snapshots/$files/$history then pays Python workers for metadata
-from fluss_iceberg_spark.operators.util import arrow_local_df
+from fluss_iceberg_spark.operators.util import arrow_local_df, release_checkpoint
 from pyspark.sql import types as T
 
 
@@ -1484,12 +1484,7 @@ class LakeTable:
           lake_scd2_dimension, stream_txn_two_sinks; adjudicated by the
           interleaved A/B in OPTIMIZATION_r13.md).
 
-        ``FLUSS_MERGE_DELTA=persist`` restores the r12 unconditional
-        persist (the A/B toggle). Returns ``(frame, release_fn)``."""
-        mode = os.environ.get("FLUSS_MERGE_DELTA", "auto")
-        if mode == "persist":
-            p = df.persist()
-            return p, p.unpersist
+        Returns ``(frame, release_fn)``."""
         try:
             heavy = self._heavy_lineage(df)
         except Exception:
@@ -1497,17 +1492,7 @@ class LakeTable:
         if not heavy:
             return df, lambda: None
         cp = df.localCheckpoint(eager=True)
-
-        def _release() -> None:
-            # free the checkpoint blocks now rather than waiting for the
-            # ContextCleaner (best-effort — internal seam, cleaner still
-            # reclaims on drift); same pattern as neardup_admit_batch
-            try:
-                cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
-
-        return cp, _release
+        return cp, lambda: release_checkpoint(cp)
 
     @contextmanager
     def _micros_timestamps(self):

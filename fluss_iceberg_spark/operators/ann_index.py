@@ -46,6 +46,7 @@ from fluss_iceberg_spark.operators.similarity import (
     train_ivf_centroids,
 )
 from fluss_iceberg_spark.operators.dedup import dot_expanded
+from fluss_iceberg_spark.operators.util import release_checkpoint
 
 _POSTINGS_SCHEMA = (
     "list_id int, vec_id long, v array<double>, nrm double"
@@ -228,12 +229,7 @@ class IvfIndex:
                 net, to_v, dim, max_inline_keys, id_col, vec_col
             )
         finally:
-            # release checkpoint blocks now (best-effort; ContextCleaner
-            # reclaims on drift) — same seam as neardup_admit_batch
-            try:
-                net._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
+            release_checkpoint(net)
 
     def _apply_net_changes(
         self,
@@ -384,15 +380,10 @@ class IvfIndex:
 
     def release_route_cache(self) -> None:
         """Free the checkpoint blocks a previous >ROUTE_DRIVER_MAX-query
-        search left behind (best-effort, same internal seam as
-        neardup_admit_batch's per-tick release — on any drift the
-        ContextCleaner still reclaims the blocks eventually)."""
+        search left behind."""
         cp, self._route_cp = self._route_cp, None
         if cp is not None:
-            try:
-                cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
+            release_checkpoint(cp)
 
     def search(
         self,

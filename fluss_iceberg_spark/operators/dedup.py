@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fluss_iceberg_spark.operators.text import tokens
+from fluss_iceberg_spark.operators.util import release_checkpoint
 
 
 def normalize(text_col) -> F.Column:
@@ -1478,14 +1479,7 @@ def neardup_admit_batch(
         for df in cached:
             df.unpersist()
         for df in checkpointed:
-            # release the checkpoint blocks NOW instead of waiting for
-            # the ContextCleaner's GC-driven sweep (best-effort: the
-            # LogicalRDD handle is an internal seam; on any drift the
-            # cleaner still reclaims the blocks eventually)
-            try:
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
+            release_checkpoint(df)
     return n_admitted
 
 

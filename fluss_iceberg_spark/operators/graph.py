@@ -35,17 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fluss_iceberg_spark.operators.util import release_checkpoint
+
 SCALE = 10**12
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint's RDD blocks (best-effort — the same
-    internal seam as ann_index.release_route_cache; on any drift the
-    ContextCleaner still reclaims them eventually)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def synth_link_graph(docs: DataFrame) -> DataFrame:
@@ -206,7 +198,7 @@ def hits(
     hub = nodes.select("id", F.lit(HITS_SCALE).cast("long").alias("hub"))
     prev_cps: list[DataFrame] = []  # last iteration's checkpoints, dead
     # once the current iteration's are materialized (r9 ADVICE: release
-    # them, mirroring ann_index.release_route_cache)
+    # them with util.release_checkpoint)
     for _ in range(iterations):
         # eager localCheckpoint per iteration (the repo's standard move
         # for iterative DataFrame loops, cf. neardup admission): each
@@ -251,7 +243,7 @@ def hits(
         # h_raw (eager) sealed this iteration: the previous iteration's
         # two checkpoints can no longer be referenced by anything live
         for cp in prev_cps:
-            _release_checkpoint(cp)
+            release_checkpoint(cp)
         prev_cps = [a_raw, h_raw]
     # seal the result as ONE eager node-sized checkpoint, then free the
     # final iteration's raw frames too — a 3-iteration run now leaves a
@@ -261,7 +253,7 @@ def hits(
         eager=True
     )
     for cp in prev_cps:
-        _release_checkpoint(cp)
+        release_checkpoint(cp)
     e.unpersist()
     return out
 

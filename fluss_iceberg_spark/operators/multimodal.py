@@ -488,18 +488,18 @@ def ahash_near_pairs(
             f"({max_hamming} >= {n_bands})"
         )
     width = 64 // n_bands
-    # persist the FINGERPRINT frame (doc_id + 8-byte hash — the
-    # lightweight proxy, guide §8): it feeds four subtrees (vocabulary
-    # distinct, both re-expansion joins, the intra-hash self-join), and
-    # without a cache each one re-ran the upstream raster-decode kernel
-    # (r13 profile: three ~3.5 s single-task broadcast builds = the same
-    # decode, serially, three times). The raster itself is never cached.
-    # ContextCleaner unpersists when the plan is garbage collected (the
-    # minhash_lsh_pairs precedent).
+    # The FINGERPRINT frame (doc_id + 8-byte hash) feeds four subtrees:
+    # the vocabulary distinct, both re-expansion joins and the intra-hash
+    # self-join. Hash-partitioning it on ahash gives the three doc-level
+    # subtrees one exchange, which Spark reuses, so with nothing cached
+    # (and nothing left to release) the raster-decode kernel runs twice:
+    # once there, once under the vocabulary's column-pruned copy. The
+    # doc_id filter is the one the self-join's `<` implies; stating it
+    # here keeps that subtree's exchange identical to the other two.
     h = (
-        hashes.where(F.col("ahash").isNotNull())
+        hashes.where(F.col("ahash").isNotNull() & F.col("doc_id").isNotNull())
         .select("doc_id", "ahash")
-        .persist()
+        .repartition("ahash")
     )
     # Band-join over DISTINCT hash VALUES, not documents: a duplicate-heavy
     # corpus has vastly fewer fingerprints than rows (the whole point of

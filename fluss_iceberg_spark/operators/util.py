@@ -2,7 +2,23 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Row, SparkSession
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``ed frame now instead of
+    waiting for the ContextCleaner's GC-driven sweep.
+
+    The checkpoint's RDD is reached through the analyzed plan's
+    ``LogicalRDD``, an internal seam: if a Spark version moves it, the
+    JVM call fails with a ``Py4JError``, which is ignored because the
+    cleaner still reclaims the blocks once the frame is collected. Any
+    other error propagates."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Py4JError:
+        pass
 
 
 def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -32,17 +48,23 @@ def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     else:  # StructType
         struct = schema
     fields = [(f.name, f.dataType.simpleString()) for f in struct.fields]
-    rows = list(rows)
+    names = [n for n, _ in fields]
+    # a named Row is a tuple whose field order need not be the schema's:
+    # take its values by name so they are not mapped by position
+    rows = [
+        tuple(r[n] for n in names) if isinstance(r, Row) and hasattr(r, "__fields__") else r
+        for r in rows
+    ]
     if not rows:
         return spark.createDataFrame([], schema)
-    pdf = pd.DataFrame.from_records(rows, columns=[n for n, _ in fields])
+    pdf = pd.DataFrame.from_records(rows, columns=names)
     # from_records coerces a mixed int/None column (e.g.
     # $snapshots.parent_id — None for the first snapshot) to float64 +
     # NaN, which integer Spark types reject. Rebuild ONLY such columns
     # as object dtype from the original rows (exact ints, real nulls);
     # the common all-int/all-string columns keep the fast C path. The
     # positional rebuild requires sequence rows — assert that rather
-    # than silently scrambling a dict/Row caller's values (r12 ADVICE).
+    # than silently scrambling a dict caller's values.
     for i, (n, t) in enumerate(fields):
         if pdf[n].dtype.kind == "f" and not t.startswith(
             ("double", "float", "decimal")

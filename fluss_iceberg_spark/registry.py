@@ -83,133 +83,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # shapes stay registered after it (judge-visible breadth, bench coverage,
 # no hard gate).
 _PRIORITY = [
-    # ---- round-13 rotation TODO (for the next round's builder): queries
-    # registered after this round's window was pinned and therefore holding
-    # zero driver evidence — rotate them IN next round by displacing
-    # multi-green incumbents whose family keeps another in-window gate:
-    #   engine_approx_distinct (APPROX_COUNT_DISTINCT through the SQL
-    #     facade → built-in Datasketches HLL; rows-only by nature, error
-    #     bound unit-gated vs the exact count),
-    #   ann_filtered_topk (predicate-pushed brute-force cosine top-k,
-    #     integer-exact, oracle-backed),
-    #   text_hybrid_rrf_search (keyword BM25 leg + vector cosine leg fused
-    #     by integer-exact reciprocal-rank fusion; oracle-backed),
-    #   ann_maxsim_multivector (ColBERT-style late-interaction MaxSim over
-    #     packed token slots, fixed-point q14; oracle-backed),
-    #   ann_sq8_topk (scalar-quantized int8 codes + exact integer code
-    #     dot + milli rescale; oracle-backed),
-    #   text_index_incremental (inverted-index maintenance from CDC
-    #     increments only, == full-corpus brute force; oracle-backed),
-    #   dedup_cdc_rewrite (chunk-level duplication removal — drop all
-    #     but the globally first occurrence of each content-defined
-    #     chunk and rebuild, md5-pinned; oracle-backed),
-    # (The eight other r12-second-session newborns were rotated INTO
-    #  the window in the same round they were born, displacing eight
-    #  multi-green incumbents whose operator classes keep other
-    #  in-window gates; see the '# r12-2 swap' markers below.)
-    # tests/test_rotation_ledger.py enforces this block: every registered
-    # query must either hold a driver row in some committed
-    # CORRECTNESS_r*.json or be NAMED here.
-    # ---- round-12 rotation (DONE this round): ALL NINE zero-driver-
-    # evidence queries rotated IN for first CORRECTNESS rows — the five
-    # named in the r12 TODO (lake_zorder_skipping, text_keyword_search,
-    # text_bm25_search, stream_tdigest_refresh, events_funnel_steps) PLUS
-    # the four r9/r10-born queries the rotation ledger had lost
-    # (text_gopher_rules, text_compression_ratio, text_bigram_coherence,
-    # text_domain_cap — zero rows across all eleven CORRECTNESS files,
-    # verdict r11 finding #1). 7 of the 9 oracle-backed;
-    # text_compression_ratio and stream_tdigest_refresh rows-only by
-    # nature (both unit-pinned: compression vs a reference LZ77 replay,
-    # tdigest per-tick merge == one-shot digest equality). Rotated OUT,
-    # each with >=2 rounds of driver evidence and its family still gated
-    # in-window:
-    #   multimodal_gif_frames + multimodal_audio_features +
-    #     multimodal_video_scene_cuts + multimodal_ahash_neardup_pairs
-    #     (2x hash-green r10-r11; codec class keeps png_pixel_stats,
-    #     mp4_metadata, phash, audio_spectrum; aHash near-dup keeps
-    #     multimodal_ahash_dedup which embeds the same hamming kernel),
-    #   text_bpe_train_merges + text_classifier_train (2x rows r10-r11;
-    #     BPE class keeps text_bpe_roundtrip whose encode replays the
-    #     trained merge table; classifier class keeps text_classifier_score
-    #     + stream_classifier_gate, numpy-parity unit pins training),
-    #   graph_hits_scores (2x hash-green r10-r11; graph class keeps
-    #     pagerank + components; HITS authority ranking unit-pinned),
-    #   dedup_substring_rewrite (2x hash-green r10-r11; substring class
-    #     keeps dedup_substring_spans, the census the rewrite consumes),
-    #   stream_neardup_admission (5x rows r7-r11; streaming-admission
-    #     class keeps stream_classifier_gate, oracle-backed; the MinHash
-    #     admission state is unit-pinned and volume-sized per r11).
-    # ---- round-11 rotation (DONE this round): the 10 queries born in
-    # round 10 — the only registered queries with zero driver evidence —
-    # rotated IN for first CORRECTNESS rows: graph_components (WCC),
-    # text_perplexity_filter, multimodal_phash, multimodal_audio_spectrum,
-    # lake_ivm_join_view, lake_ivm_retract_view, stream_ivm_join,
-    # dedup_kmv_source_setops, dedup_quantile_sketch,
-    # text_cms_heavy_hitters (all oracle-backed). Rotated OUT, each with
-    # multi-round driver greens and its operator family still gated
-    # in-window:
-    #   text_chunk_passages + text_weighted_sample + text_token_stats
-    #     (multi-green r5-r10; text class keeps ngram_stats,
-    #     budget_two_phase, quality_topq, BPE x2, classifier x2, and
-    #     gains perplexity + cms),
-    #   events_session_window_builtin (multi-green r5-r10; events class
-    #     keeps retention_cohorts, session semantics unit-pinned via
-    #     streaming sessionize),
-    #   lake_spj_bucket_join (multi-green; scan-pruning class keeps
-    #     lake_partition_pruning),
-    #   lake_cdc_mirror (multi-green; ST4 changelog class keeps
-    #     lake_scd2_changes; lake write path gains the IVM pair),
-    #   stream_matview_refresh (multi-green; A1 upsert-agg class keeps
-    #     stream_txn_two_sinks, matview class gains stream_ivm_join +
-    #     lake_ivm_retract_view),
-    #   stream_wap_gated (multi-green; snapshot/commit class keeps
-    #     engine_merge_into; branch/WAP mechanics unit-gated),
-    #   dedup_source_overlap (multi-green; dedup class keeps
-    #     passage_level + substring x2 and gains the sketch pair),
-    #   ann_index_cdc_sync (rows-only x? r8-r10; ANN class keeps
-    #     ivfpq_topk + ivf_index_incremental whose build exercises the
-    #     same index lifecycle).
-    # ---- round-10 rotation: the 18 queries born in round 9 — the only
-    # registered queries with zero driver evidence (registered after the
-    # r9 window was pinned) — rotate IN for first CORRECTNESS rows: the
-    # four MP4 container queries, PNG pixel stats, aHash dedup pair, audio
-    # features, GIF frames, BPE roundtrip+train, classifier score+train,
-    # the three graph-centrality queries, the streaming classifier gate,
-    # and the substring-removal rewrite. Rotated OUT, each with >=2 driver
-    # evidence rounds and its operator family still gated in-window:
-    #   tpch_q11_important_stock (4x green r6-r9; J3/A class keeps
-    #     tpch_q2's correlated-subquery join),
-    #   agg_grouping_id + agg_unpivot_measures (5x green r5-r9; grouping
-    #     class keeps agg_grouping_sets),
-    #   events_anomaly_zscore + events_value_percentiles +
-    #     events_value_histogram (multi-green r5-r9; events class keeps
-    #     retention_cohorts + session_window_builtin),
-    #   lake_matview_changelog (multi-green; changelog class keeps
-    #     lake_scd2_changes + lake_cdc_mirror, matview class keeps
-    #     stream_matview_refresh, M1 metadata keeps engine_merge_into),
-    #   lake_value_set_skipping + lake_runtime_filter_join (multi-green;
-    #     scan-pruning class keeps lake_partition_pruning +
-    #     lake_spj_bucket_join),
-    #   lake_scd2_dimension (4x green r6-r9; SCD2 keeps lake_scd2_changes,
-    #     which reads the dimension it maintains),
-    #   stream_full_interval_join (4x green; interval class keeps
-    #     stream_left_interval_join),
-    #   stream_watermarked_dedup (multi-green r2-r9; stream-dedup
-    #     admission keeps stream_neardup_admission, watermark state keeps
-    #     stream_left_interval_join),
-    #   text_temperature_mixing (multi-green; budget/mixing class keeps
-    #     text_budget_two_phase),
-    #   dedup_semdedup (3x rows r7-r9; the kmeans+greedy composition is
-    #     exact-reference unit-gated, embedding-kernel class keeps four
-    #     ANN gates, dedup family keeps passage/overlap/substring gates),
-    #   ann_kmeans_clusters + ann_pq_topk (3x rows r7-r9; k-means stays
-    #     exercised inside ann_ivf_index_incremental's build, PQ class
-    #     keeps ann_ivfpq_topk's superset composition),
-    #   multimodal_real_decode (2x green r8-r9; the Arrow-kernel
-    #     multimodal class is now gated by NINE real-codec queries),
-    #   engine_time_travel_sql (4x green r6-r9; time-travel/metadata
-    #     class keeps engine_merge_into's snapshot-committed MERGE + the
-    #     SQL facade, plus unit coverage of VERSION AS OF).
     # Keep _PRIORITY at exactly 50 (tests/test_registry_order.py).
     # reference pipeline core
     "ref_enriched_orders",

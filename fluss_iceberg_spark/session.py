@@ -16,11 +16,8 @@ Scale posture (for a real multi-executor cluster the same confs apply):
 from __future__ import annotations
 
 import os
-import warnings
 
 from pyspark.sql import SparkSession
-
-_STOCK_DAEMON = "pyspark.daemon"
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -39,8 +36,7 @@ def get_spark(
     # first Arrow-kernel stage of a fresh session stops paying ~32
     # concurrent cold imports (measured 19.9 s → 3.4 s for a 32-task
     # pandas-UDF stage; guide §4.5). The repo root rides PYTHONPATH so
-    # the daemon resolves the module from any driver cwd. FLUSS_PY_DAEMON=0
-    # restores the stock daemon (the A/B toggle).
+    # the daemon resolves the module from any driver cwd.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     py_path = os.environ.get("PYTHONPATH", "")
     if repo_root not in py_path.split(os.pathsep):
@@ -61,25 +57,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+        .config("spark.python.daemon.module", "fluss_iceberg_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
-    daemon = _STOCK_DAEMON
-    if os.environ.get("FLUSS_PY_DAEMON", "1") != "0":
-        daemon = "fluss_iceberg_spark.pydaemon"
-        builder = builder.config("spark.python.daemon.module", daemon).config(
-            "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # the daemon module is fixed when the SparkContext starts: a reused
-    # session keeps the daemon it was created with
-    active = spark.sparkContext.getConf().get("spark.python.daemon.module", _STOCK_DAEMON)
-    if active != daemon:
-        warnings.warn(
-            f"get_spark reused a session whose Python worker daemon is "
-            f"{active!r}; the requested {daemon!r} (FLUSS_PY_DAEMON) takes "
-            f"effect only in a new session",
-            stacklevel=2,
-        )
     return spark

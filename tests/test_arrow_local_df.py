@@ -84,3 +84,10 @@ def test_repair_rejects_non_sequence_rows(spark):
             [{"k": 1, "v": None}, {"k": 2, "v": 7}],
             "k long, v long",
         )
+
+
+def test_named_row_values_follow_the_schema_by_name(spark):
+    from pyspark.sql import Row
+
+    df = arrow_local_df(spark, [Row(b="x", a=1)], "a int, b string")
+    assert [(r.a, r.b) for r in df.collect()] == [(1, "x")]

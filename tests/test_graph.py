@@ -133,10 +133,8 @@ def test_graph_operators_leave_no_cached_blocks(spark):
     blocks. hits leaves exactly its one result-sized checkpoint, freed
     by the documented release seam. Delta-based on RDD ids: other tests'
     leftovers and async ContextCleaner removals must not flake this."""
-    from fluss_iceberg_spark.operators.graph import (
-        _release_checkpoint,
-        hits,
-    )
+    from fluss_iceberg_spark.operators.graph import hits
+    from fluss_iceberg_spark.operators.util import release_checkpoint
 
     docs = spark.createDataFrame([(i,) for i in range(41)], "doc_id long")
 
@@ -149,7 +147,7 @@ def test_graph_operators_leave_no_cached_blocks(spark):
     out.count()
     # only the sealed result checkpoint may remain
     assert len(_persistent_ids(spark) - before) <= 1
-    _release_checkpoint(out)
+    release_checkpoint(out)
     assert _persistent_ids(spark) - before == set()
 
 

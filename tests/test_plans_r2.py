@@ -45,6 +45,20 @@ def test_simhash_near_pairs_runs_kernel_once(spark):
     assert "ReusedExchange" in final
 
 
+def test_ahash_near_pairs_reuses_the_fingerprint_exchange(spark):
+    """With no cached fingerprint frame, the three doc-level subtrees of
+    ahash_near_pairs read one reused exchange: the final AQE plan holds
+    two aHash kernels (that exchange and the vocabulary's pruned copy),
+    not one per subtree."""
+    df = registry.QUERIES["multimodal_ahash_neardup_pairs"](spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("MapInPandas") == 2
+    assert "ReusedExchange" in final
+
+
 def test_simhash_kernel_matches_rowwise_reference(spark):
     """The vectorized bit-vote kernel must equal a straightforward per-doc
     Python reference on the same token hashes (guards the reduceat /

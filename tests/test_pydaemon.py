@@ -1,5 +1,4 @@
-"""The Python worker daemon's zip directory reuse hook, and get_spark's
-warning when a reused session keeps a different worker daemon."""
+"""The Python worker daemon's zip directory reuse hook."""
 
 from __future__ import annotations
 
@@ -8,8 +7,6 @@ import os
 import sys
 import zipfile
 import zipimport
-
-import pytest
 
 from fluss_iceberg_spark import pydaemon
 
@@ -52,11 +49,3 @@ def test_unchanged_zip_is_not_reread_and_replaced_zip_is(tmp_path, monkeypatch):
     assert reads == [archive]
     assert importlib.import_module(mod_b).Y == 2
 
-
-def test_get_spark_warns_when_reused_session_keeps_another_daemon(spark, monkeypatch):
-    from fluss_iceberg_spark.session import get_spark
-
-    active = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
-    monkeypatch.setenv("FLUSS_PY_DAEMON", "0" if active != "pyspark.daemon" else "1")
-    with pytest.warns(UserWarning, match="FLUSS_PY_DAEMON"):
-        assert get_spark() is spark

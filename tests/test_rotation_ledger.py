@@ -3,9 +3,9 @@ benched, and then forgotten by the rotation bookkeeping — zero driver
 CORRECTNESS rows in any round and no plan to ever get one).
 
 Contract enforced here: every registered query must EITHER hold a driver
-evidence row in some committed ``CORRECTNESS_r*.json`` OR be named in the
-registry's current rotation-TODO comment block, so a query can never again
-fall out of the ledger silently.
+evidence row in some committed ``CORRECTNESS_r*.json``, sit in the gated
+window, OR be named in ROADMAP.md's "Driver-window rotation candidates"
+open item, so a query can never again fall out of the ledger silently.
 """
 
 from __future__ import annotations
@@ -28,15 +28,16 @@ def _driver_evidence() -> set[str]:
 
 
 def _rotation_todo_names() -> set[str]:
-    """Query names mentioned in the CURRENT rotation-TODO comment block
-    (from the first '---- round-N rotation TODO' line to the next
-    '---- round-' marker inside _PRIORITY's comment header)."""
-    src = inspect.getsource(registry)
+    """Query names in ROADMAP.md's "Driver-window rotation candidates"
+    item: the backticked names from its first line up to the next list
+    item, heading or blank line."""
+    text = (REPO / "ROADMAP.md").read_text()
     m = re.search(
-        r"rotation TODO.*?(?=# ---- round-\d+ rotation \(DONE)", src, re.DOTALL
+        r"^- \*\*Driver-window rotation candidates.*?(?=\n(?:- |#|\n)|\Z)",
+        text, re.DOTALL | re.MULTILINE,
     )
-    assert m, "registry.py must keep a '---- round-N rotation TODO' block"
-    return set(re.findall(r"\b([a-z][a-z0-9]*(?:_[a-z0-9]+)+)\b", m.group(0)))
+    assert m, "ROADMAP.md must keep a 'Driver-window rotation candidates' item"
+    return set(re.findall(r"`([a-z][a-z0-9]*(?:_[a-z0-9]+)+)`", m.group(0)))
 
 
 def test_every_registered_query_is_ledgered():
@@ -53,7 +54,7 @@ def test_every_registered_query_is_ledgered():
     ]
     assert not orphans, (
         "queries with zero driver CORRECTNESS evidence and no rotation plan "
-        f"(name them in registry.py's rotation TODO): {sorted(orphans)}"
+        f"(name them in ROADMAP.md's rotation candidates): {sorted(orphans)}"
     )
 
 
