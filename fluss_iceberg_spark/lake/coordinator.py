@@ -4,8 +4,9 @@ The reference serializes snapshot commits through an Iceberg REST
 catalog's compare-and-swap (docker-compose.yml:126-137 runs the catalog
 service; trino/iceberg.properties:2-6 points engines at it). This repo's
 filesystem stand-in serializes the same critical section — the
-check→flip of each table's VERSION pointer — behind ``_commit_lock``
-(lake/table.py). That lock has two interchangeable implementations:
+check→flip of each table's VERSION pointer — behind
+``commit.commit_section`` (lake/commit.py). That section has two
+interchangeable implementations:
 
 1. **flock** (default): an ``fcntl.flock`` on a warehouse-level lock
    file. Correct across processes on one host; released by the OS on
@@ -16,7 +17,7 @@ check→flip of each table's VERSION pointer — behind ``_commit_lock``
    the commit section FROM THE SERVICE — the exact topology of a REST
    catalog deployment, where the catalog process (not the writers'
    filesystem) is the serialization point. Swapping 1 → 2 changes no
-   commit-protocol code: the seam is ``_commit_lock`` itself.
+   commit-protocol code: the seam is ``commit_section`` itself.
 
 Protocol (line-oriented over ``AF_UNIX``, one lock per connection):
 
@@ -45,18 +46,15 @@ import socketserver
 import threading
 import uuid
 
+from fluss_iceberg_spark.lake import commit
+
 
 def endpoint_for(warehouse: str) -> str | None:
     """The coordinator endpoint a warehouse opted into, or None (flock).
 
     ``_catalog.json`` sits at the warehouse root — the stand-in for the
     catalog URI in a real deployment's table metadata."""
-    cfg = os.path.join(warehouse, "_catalog.json")
-    try:
-        with open(cfg) as f:
-            return json.load(f).get("commit-coordinator") or None
-    except (OSError, ValueError):
-        return None
+    return commit.catalog_key(warehouse, "commit-coordinator")
 
 
 def merge_catalog_key(warehouse: str, key: str, value: str) -> None:
@@ -66,8 +64,6 @@ def merge_catalog_key(warehouse: str, key: str, value: str) -> None:
     path mid-rewrite. (Two concurrent ENABLES can still last-write-win
     each other's key — opt-ins are deployment-time configuration, not a
     data path, so that's accepted.)"""
-    import uuid as _uuid
-
     os.makedirs(warehouse, exist_ok=True)
     cfg_path = os.path.join(warehouse, "_catalog.json")
     cfg = {}
@@ -77,10 +73,7 @@ def merge_catalog_key(warehouse: str, key: str, value: str) -> None:
     except (OSError, ValueError):
         pass
     cfg[key] = value
-    tmp = f"{cfg_path}.{_uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(cfg, f)
-    os.replace(tmp, cfg_path)
+    commit.atomic_write(cfg_path, json.dumps(cfg))
 
 
 def enable(warehouse: str, socket_path: str) -> None:

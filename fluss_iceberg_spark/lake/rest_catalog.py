@@ -27,7 +27,7 @@ directory, speaking the REST-catalog interaction shapes —
   "assert-current-version", "version": N}], "updates": [{"action":
   "set-current-version", "version": M}]}`` compare-and-swaps the
   VERSION pointer N→M atomically UNDER THE SAME COMMIT SECTION every
-  writer uses (flock or coordinator service — lake/coordinator.py),
+  writer uses (``commit.publish_pointer``, lake/commit.py),
   answering 409 on a stale expectation (the Iceberg REST
   ``CommitFailedException`` shape). M must name an existing
   staged/published snapshot — the facade moves pointers, it never
@@ -35,12 +35,12 @@ directory, speaking the REST-catalog interaction shapes —
 - ``POST /v1/transactions/commit``         → the spec's
   commitTransaction shape: ``{"table-changes": [{"name": ...,
   "requirements": [...], "updates": [...], "staged-versions": [...]},
-  ...]}`` — ALL tables' expectations verified, ALL staged snapshots
-  linked public, an intent file written (the commit point — the same
-  ``_txn/`` roll-forward protocol LakeCatalog recovery replays), then
-  every pointer flipped, all under ONE commit section. Any failure
-  before the intent aborts every table; readers never observe a
-  partial transaction.
+  ...]}`` — ``commit.publish_txn``, the same call an in-process
+  CatalogTransaction makes: ALL tables' expectations verified, ALL
+  staged snapshots linked public, an intent file written (the commit
+  point), then every pointer flipped, all under ONE commit section. A
+  failure before the intent aborts every table, one after it rolls
+  forward; readers never observe a partial transaction.
 
 Legacy flat routes (``/v1/tables...``, POST ``.../commit`` with the
 dict-shaped body) remain as aliases. Route/payload divergence from the
@@ -62,8 +62,11 @@ stand-in's (snapshot-log JSON + parquet), not Iceberg's binary
 manifests — the remaining third of S18, untestable without the
 Spark–Iceberg runtime jars.
 
-Deliberately Spark-free: readers (and the server) import only the
-standard library, so a consumer process needs no JVM.
+The server and the client helpers use only the standard library and
+lake/commit.py, but importing this module loads the package, and the
+package ``__init__`` loads pyspark. A consumer process needs none of
+it: any HTTP client reads the tables (tests/test_rest_catalog.py's
+reader subprocess imports nothing from the engine).
 """
 
 from __future__ import annotations
@@ -73,10 +76,10 @@ import os
 import threading
 import urllib.error
 import urllib.request
-from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from fluss_iceberg_spark.lake import coordinator
+from fluss_iceberg_spark.lake import commit, coordinator
+from fluss_iceberg_spark.lake.commit import CommitConflictError
 
 
 def enable_for_writers(warehouse: str, endpoint: str) -> None:
@@ -92,56 +95,17 @@ def enable_for_writers(warehouse: str, endpoint: str) -> None:
     coordinator.merge_catalog_key(warehouse, "rest-catalog", endpoint)
 
 
-def _is_valid_name(name: str) -> bool:
-    """Same rule as LakeCatalog.create_table (lake/table.py): a table
-    name resolves to a DIRECT child of the warehouse, never outside."""
-    return bool(name) and name not in (".", "..") and "/" not in name and "\\" not in name
-
-
-@contextmanager
-def _commit_section(warehouse: str):
-    """The SAME critical section every writer's pointer flip takes
-    (lake/table._commit_lock): coordinator service when the warehouse
-    opted in via _catalog.json, else flock on _commit.lock. Reimplemented
-    here (not imported) so the facade stays importable without pyspark;
-    the lock file name and coordinator scope string match table.py's
-    byte-for-byte — tests pin mutual exclusion across both entry
-    points."""
-    import fcntl
-
-    wh = os.path.abspath(warehouse).rstrip(os.sep)
-    endpoint = coordinator.endpoint_for(wh)
-    if endpoint:
-        client = coordinator.CoordinatorClient(endpoint, scope=wh)
-        try:
-            yield
-        finally:
-            client.close()
-        return
-    fd = os.open(os.path.join(wh, "_commit.lock"), os.O_CREAT | os.O_RDWR)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-def _current_version(tpath: str) -> int:
-    """-1 when no commit has happened yet — same semantics as
-    LakeTable.current_version (a fresh table has no VERSION file)."""
-    vf = os.path.join(tpath, "meta", "VERSION")
-    if not os.path.exists(vf):
-        return -1
-    with open(vf) as f:
-        return int(f.read().strip())
+def _table_path(warehouse: str, name: str) -> str:
+    if not commit.is_valid_table_name(name):
+        raise _BadRequest(f"invalid table name {name!r}")
+    return os.path.join(warehouse, name)
 
 
 def _table_doc(warehouse: str, name: str, version: int | None = None) -> dict:
     """Assemble the metadata document a reader needs: table meta,
     resolved snapshot, absolute file paths. Raises FileNotFoundError /
     ValueError for the handler to map to 404/400."""
-    tpath = os.path.join(warehouse, name)
+    tpath = _table_path(warehouse, name)
     with open(os.path.join(tpath, "meta", "table.json")) as f:
         meta = json.load(f)
     # VERSION is read OUTSIDE the commit section (GETs must not queue
@@ -151,13 +115,13 @@ def _table_doc(warehouse: str, name: str, version: int | None = None) -> dict:
     # re-read the pointer and retry once; only an explicit version=N
     # request may legitimately 404.
     for attempt in (0, 1):
-        current = _current_version(tpath)
+        current = commit.read_version(tpath)
         v = current if version is None else int(version)
         try:
             if v < 0:  # empty table: no snapshot yet
                 snap = None
             else:
-                with open(os.path.join(tpath, "meta", f"v{v}.json")) as f:
+                with open(commit.snapshot_path(tpath, v)) as f:
                     snap = json.load(f)
             break
         except FileNotFoundError:
@@ -231,164 +195,54 @@ def _parse_change(body: dict) -> tuple[int, int]:
 
 
 def _cas_commit(warehouse: str, name: str, body: dict) -> dict:
-    """Pointer CAS under the shared commit section. Returns the new
-    state dict; raises _Conflict/_BadRequest for HTTP mapping."""
+    """Pointer CAS (``commit.publish_pointer``): the target is either an
+    already-published snapshot (a pure pointer move — rollback) or a
+    writer's staged ``rest-v{N}.json``, linked public inside the commit
+    section. Returns the new state dict; raises CommitConflictError /
+    _BadRequest for HTTP mapping."""
     expected, target = _parse_change(body)
-    tpath = os.path.join(warehouse, name)
-    with _commit_section(warehouse):
-        vf = os.path.join(tpath, "meta", "VERSION")
-        current = _current_version(tpath)
-        if current != expected:
-            raise _Conflict(
-                f"expected v{expected} but {name} is at v{current}"
-            )
-        # target resolution, all UNDER the section (a concurrent
-        # expire_snapshots between an outside check and the flip could
-        # otherwise wedge the pointer on a deleted snapshot): either an
-        # already-published snapshot (pure pointer move — rollback), or
-        # a writer's staged rest-v{N}.json, which the facade LINKS into
-        # its public place here — the staged name stays invisible to
-        # readers until this exact moment, so a routed commit that
-        # never reaches this point leaves no phantom snapshot.
-        snap_file = os.path.join(tpath, "meta", f"v{target}.json")
-        if not os.path.exists(snap_file):
-            staged = os.path.join(tpath, "meta", f"rest-v{target}.json")
-            try:
-                os.link(staged, snap_file)
-                os.remove(staged)  # consumed; client cleanup is a no-op
-            except FileNotFoundError:
-                raise _BadRequest(
-                    f"v{target} is neither a published snapshot of "
-                    f"{name} nor staged for publication"
-                )
-        tmp = f"{vf}.casa.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(target))
-        os.replace(tmp, vf)  # atomic, same as every writer's flip
+    try:
+        commit.publish_pointer(
+            _table_path(warehouse, name), expected, target, staged=commit.REST
+        )
+    except ValueError as e:
+        raise _BadRequest(str(e)) from None
     return {"name": name, "current-version": target}
 
 
 def _txn_commit(warehouse: str, body: dict) -> dict:
-    """Multi-table atomic commit under ONE commit section — the Iceberg
-    REST spec's commitTransaction role, speaking the SAME write-ahead-
-    intent protocol as CatalogTransaction.commit (lake/table.py), so a
-    crash mid-publish is rolled forward by the same LakeCatalog
-    recovery sweep:
-
-    1. verify every table's pointer matches its assert-current-version
-       requirement (any mismatch → 409, nothing touched);
-    2. hard-link every table's staged ``txn-v{N}.json`` into its public
-       ``v{N}.json`` place (a racing writer that claimed an id → 409,
-       OUR links rolled back by inode identity — never a racer's file);
-    3. write the ``_txn/txn-<id>.json`` intent (THE commit point);
-    4. flip every pointer, drop the intent and the staged names.
-
-    Body: ``{"table-changes": [{"name", "requirements", "updates",
-    "staged-versions": [every snapshot version the txn staged for the
-    table — intermediate ones too, all needing publication]}]}``."""
-    import uuid
-
+    """Multi-table atomic commit — the Iceberg REST spec's
+    commitTransaction role, run by ``commit.publish_txn`` (the call an
+    in-process CatalogTransaction makes): verify → link → intent →
+    publish under ONE commit section. Body: ``{"table-changes":
+    [{"name", "requirements", "updates", "staged-versions": [every
+    snapshot version the txn staged for the table — intermediate ones
+    too, all needing publication]}]}``."""
     changes = body.get("table-changes")
     if not isinstance(changes, list) or not changes:
         raise _BadRequest("body needs a non-empty table-changes list")
-    parsed = []  # (name, tpath, expected, target, [versions to link])
+    entries = []  # (tpath, expected, target, [versions to link])
     for ch in changes:
         name = ch.get("name") or (ch.get("identifier") or {}).get("name")
-        if not name or not _is_valid_name(name):
-            raise _BadRequest(f"invalid table name {name!r}")
         expected, target = _parse_change(ch)
         versions = ch.get("staged-versions") or [target]
         try:
             versions = sorted({int(v) for v in versions} | {target})
         except (TypeError, ValueError):
             raise _BadRequest("staged-versions must be integers")
-        parsed.append(
-            (name, os.path.join(warehouse, name), expected, target, versions)
+        entries.append(
+            (_table_path(warehouse, name or ""), expected, target, versions)
         )
-    with _commit_section(warehouse):
-        for name, tpath, expected, _, _ in parsed:
-            current = _current_version(tpath)
-            if current != expected:
-                raise _Conflict(
-                    f"expected v{expected} but {name} is at v{current}"
-                )
-        linked: list[tuple[str, str]] = []  # (staged, public) WE created
-        try:
-            for name, tpath, _, _, versions in parsed:
-                for v in versions:
-                    staged = os.path.join(tpath, "meta", f"txn-v{v}.json")
-                    public = os.path.join(tpath, "meta", f"v{v}.json")
-                    try:
-                        os.link(staged, public)
-                    except FileExistsError:
-                        raise _Conflict(
-                            f"concurrent writer claimed snapshot v{v} "
-                            f"of {name}"
-                        )
-                    except FileNotFoundError:
-                        raise _BadRequest(
-                            f"v{v} of {name} is not staged for "
-                            "publication (txn-v{N}.json missing — "
-                            "expired or never staged)"
-                        )
-                    linked.append((staged, public))
-        except Exception:
-            # pre-intent abort: remove only the links WE made (inode
-            # identity — mirror CatalogTransaction._abort), leave the
-            # staged names for the client's own abort path
-            for staged, public in linked:
-                try:
-                    if os.path.exists(public) and os.path.samefile(
-                        staged, public
-                    ):
-                        os.remove(public)
-                except FileNotFoundError:
-                    pass
-            raise
-        intent_dir = os.path.join(warehouse, "_txn")
-        os.makedirs(intent_dir, exist_ok=True)
-        intent_path = os.path.join(intent_dir, f"txn-{uuid.uuid4().hex}.json")
-        tmp = f"{intent_path}.tmp"
-        with open(tmp, "w") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "entries": [
-                            {"path": tpath, "version": target}
-                            for _, tpath, _, target, _ in parsed
-                        ]
-                    }
-                )
-            )
-        os.replace(tmp, intent_path)  # the commit point
-        # post-intent: durably committed — publish and clean up; any
-        # failure here is repaired by LakeCatalog._recover_transactions
-        for name, tpath, _, target, versions in parsed:
-            vf = os.path.join(tpath, "meta", "VERSION")
-            tmp = f"{vf}.txnc.tmp"
-            with open(tmp, "w") as f:
-                f.write(str(target))
-            os.replace(tmp, vf)
-        os.remove(intent_path)
-        for name, tpath, _, _, versions in parsed:
-            for v in versions:
-                try:
-                    os.remove(os.path.join(tpath, "meta", f"txn-v{v}.json"))
-                except FileNotFoundError:
-                    pass
+    commit.publish_txn(warehouse, entries)
     return {
         "results": [
-            {"name": name, "current-version": target}
-            for name, _, _, target, _ in parsed
+            {"name": os.path.basename(tpath), "current-version": target}
+            for tpath, _, target, _ in entries
         ]
     }
 
 
 class _BadRequest(ValueError):
-    pass
-
-
-class _Conflict(ValueError):
     pass
 
 
@@ -437,8 +291,6 @@ class _Handler(BaseHTTPRequestHandler):
             return {"identifiers": names}
         if len(parts) >= 3 and parts[:2] == ["v1", "tables"]:
             name = parts[2]
-            if not _is_valid_name(name):
-                raise _BadRequest(f"invalid table name {name!r}")
             if len(parts) == 3:
                 return _table_doc(wh, name)
             if len(parts) == 5 and parts[3] == "snapshots":
@@ -486,12 +338,10 @@ class _Handler(BaseHTTPRequestHandler):
                 name = parts[2]
             else:
                 raise FileNotFoundError(self.path)
-            if not _is_valid_name(name):
-                raise _BadRequest(f"invalid table name {name!r}")
             self._send(200, _cas_commit(wh, name, body))
         except FileNotFoundError:
             self._send(404, {"error": f"not found: {self.path}"})
-        except _Conflict as e:
+        except CommitConflictError as e:
             self._send(409, {"error": str(e)})
         except (_BadRequest, json.JSONDecodeError) as e:
             self._send(400, {"error": str(e)})

@@ -34,10 +34,11 @@ Semantics mirrored from the reference:
   never both (SURVEY §4 "hardest correctness spot").
 
 Commit protocol: data files are written first, then the snapshot json,
-then the VERSION pointer flips via ``os.replace`` (atomic on POSIX). This
-is single-writer per table — the role a real deployment gives the Iceberg
-REST catalog's CAS (docker-compose.yml:126-137); swapping the pointer
-flip for a catalog-service CAS is the only change a cluster needs.
+then the VERSION pointer flips via ``os.replace`` (atomic on POSIX) under
+the warehouse's commit section — the role a real deployment gives the
+Iceberg REST catalog's CAS (docker-compose.yml:126-137). The on-disk
+protocol itself (names, section, pointer, multi-table intents, recovery)
+lives in lake/commit.py, shared with the REST catalog facade.
 """
 
 from __future__ import annotations
@@ -47,7 +48,6 @@ import os
 import re
 import shutil
 import time
-import uuid
 import datetime
 import decimal
 import functools
@@ -64,13 +64,8 @@ from pyspark.sql import functions as F
 from fluss_iceberg_spark.operators.util import arrow_local_df, release_checkpoint
 from pyspark.sql import types as T
 
-
-class CommitConflictError(RuntimeError):
-    """Optimistic-concurrency commit rejection — the role the Iceberg REST
-    catalog's compare-and-swap plays (docker-compose.yml:126-137). Raised
-    when a commit is based on a stale table version (logical CAS) or when
-    a racing writer already claimed the target snapshot file (physical
-    CAS via exclusive-create)."""
+from fluss_iceberg_spark.lake import commit
+from fluss_iceberg_spark.lake.commit import CommitConflictError
 
 
 class CommitStateUnknownError(RuntimeError):
@@ -80,93 +75,6 @@ class CommitStateUnknownError(RuntimeError):
     snapshot confirms the commit. The caller must NOT blindly retry
     (a retry could double-apply the write); it must inspect the table
     or re-derive the write idempotently."""
-
-
-def _atomic_write(path: str, payload: str) -> None:
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, path)
-
-
-@contextmanager
-def _commit_lock(table_path: str):
-    """Serialize VERSION-pointer flips across every writer of a catalog
-    (the filesystem stand-in for the REST catalog's commit CAS,
-    docker-compose.yml:126-137), held across each check→flip. Closes
-    the lost-update window between a commit's pointer re-verify and its
-    flip — in particular a CatalogTransaction publish racing a
-    single-table commit. Cost: pointer flips are tiny metadata writes,
-    so serializing them is free at any scale — data writes stay fully
-    concurrent.
-
-    Two implementations behind the same seam (lake/coordinator.py):
-    a warehouse that wrote ``_catalog.json`` acquires the section from
-    the COORDINATOR SERVICE at its endpoint (the REST-catalog topology:
-    the catalog process is the serialization point, lease released on
-    connection death); otherwise an ``flock`` on a warehouse-level lock
-    file (single-host default, released by the OS on process death).
-    Either way a crashed holder can never wedge the catalog. The
-    table's parent dir IS the warehouse root — ``table_path`` rejects
-    path separators in names, so the derivation cannot alias."""
-    import fcntl
-
-    lock_dir = os.path.dirname(os.path.abspath(table_path).rstrip(os.sep))
-    os.makedirs(lock_dir, exist_ok=True)
-    from fluss_iceberg_spark.lake import coordinator
-
-    endpoint = coordinator.endpoint_for(lock_dir)
-    if endpoint:
-        client = coordinator.CoordinatorClient(endpoint, scope=lock_dir)
-        try:
-            yield
-        finally:
-            client.close()
-        return
-    fd = os.open(os.path.join(lock_dir, "_commit.lock"), os.O_CREAT | os.O_RDWR)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-def _warehouse_of(table_path: str) -> str:
-    """The warehouse root = the table dir's parent (names are validated
-    to contain no path separators, so this cannot alias)."""
-    return os.path.dirname(os.path.abspath(table_path).rstrip(os.sep))
-
-
-def _rest_catalog_endpoint(warehouse: str) -> str | None:
-    """The REST catalog facade a warehouse routes its pointer commits
-    through (``_catalog.json`` key "rest-catalog"), or None (direct
-    filesystem CAS under the commit lock)."""
-    try:
-        with open(os.path.join(warehouse, "_catalog.json")) as f:
-            return json.load(f).get("rest-catalog") or None
-    except (OSError, ValueError):
-        return None
-
-
-def _exclusive_write(path: str, payload: str) -> None:
-    """Write ``payload`` to ``path`` all-or-nothing, failing with
-    CommitConflictError if ``path`` already exists. The payload is written
-    to a temp file first, then linked into place — ``os.link`` is atomic
-    and fails on an existing target, so a racing same-version writer loses
-    the race instead of silently overwriting, and a crash mid-write can
-    never leave a partial snapshot visible."""
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    try:
-        os.link(tmp, path)
-    except FileExistsError:
-        raise CommitConflictError(
-            f"concurrent writer already committed {os.path.basename(path)}"
-        ) from None
-    finally:
-        os.unlink(tmp)
 
 
 def _list_parquet(d: str) -> list[str]:
@@ -689,6 +597,21 @@ def _bucket_of_path(relpath: str) -> int | None:
     return None
 
 
+def _eq_delete_buckets(meta: dict, files) -> set[int]:
+    """Buckets where the equality delete ``meta`` still hides rows: those
+    it recorded hides for that hold a file written before the delete's
+    sequence (a bucket rewrite materializes the delete there, making it
+    inert)."""
+    seq, hides = meta.get("seq", -1), meta.get("hides", {})
+    out = set()
+    for f in files:
+        if _file_seq(f) < seq:
+            b = _bucket_of_path(f)
+            if str(b) in hides:
+                out.add(b)
+    return out
+
+
 def _where_filter(where: list[tuple]) -> F.Column:
     """The Spark filter for a scan predicate — always applied to the
     scanned rows, so results are independent of how well pruning did."""
@@ -771,16 +694,9 @@ class Snapshot:
         for d in self.delete_files:
             meta = self.delete_meta.get(d) or {}
             if meta.get("kind") == "equality":
-                seq = meta.get("seq", -1)
-                live_buckets = {
-                    str(_bucket_of_path(f))
-                    for f in present
-                    if _file_seq(f) < seq
-                }
                 total += sum(
-                    n
-                    for b, n in meta.get("hides", {}).items()
-                    if b in live_buckets
+                    meta["hides"][str(b)]
+                    for b in _eq_delete_buckets(meta, present)
                 )
             else:
                 total += sum(
@@ -833,11 +749,7 @@ class LakeTable:
         return os.path.join(self.path, "meta", *parts)
 
     def current_version(self) -> int:
-        vf = self._meta("VERSION")
-        if not os.path.exists(vf):
-            return -1
-        with open(vf) as f:
-            return int(f.read().strip())
+        return commit.read_version(self.path)
 
     def _head(self) -> int:
         """The snapshot id the table's active ref points at: the branch
@@ -863,11 +775,9 @@ class LakeTable:
         meta_dir = self._meta()
         if os.path.isdir(meta_dir):
             for f in os.listdir(meta_dir):
-                if f.startswith("rest-v") and f.endswith(".json"):
-                    try:
-                        rest_staged = max(rest_staged, int(f[6:-5]))
-                    except ValueError:
-                        continue
+                v = commit.staged_version(f, commit.REST)
+                if v is not None:
+                    rest_staged = max(rest_staged, v)
         return max(self.current_version(),
                    max(self.snapshot_versions(), default=-1),
                    max(staged, default=-1), rest_staged) + 1
@@ -886,10 +796,10 @@ class LakeTable:
         # must keep reading its own stage, not the foreign snapshot
         # (the publish-time exclusive link arbitrates the collision).
         if self._txn is not None and v in self._txn.staged_all(self):
-            with open(self._meta(f"txn-v{v}.json")) as f:
+            with open(commit.snapshot_path(self.path, v, commit.TXN)) as f:
                 return Snapshot.from_json(f.read())
         try:
-            with open(self._meta(f"v{v}.json")) as f:
+            with open(commit.snapshot_path(self.path, v)) as f:
                 return Snapshot.from_json(f.read())
         except FileNotFoundError:
             raise ValueError(
@@ -922,7 +832,7 @@ class LakeTable:
         }
 
     def _write_refs(self, refs: dict) -> None:
-        _atomic_write(self._meta("refs.json"), json.dumps(refs))
+        commit.atomic_write(self._meta("refs.json"), json.dumps(refs))
 
     def tags(self) -> dict[str, int]:
         """Named immutable snapshot refs (the Iceberg tag role). Stored
@@ -1049,7 +959,7 @@ class LakeTable:
         if head == cur0:
             return head
         verified = _descends_from(cur0)
-        with _commit_lock(self.path):
+        with commit.commit_section(commit.warehouse_of(self.path)):
             cur = self.current_version()
             if head == cur:
                 return head
@@ -1062,7 +972,7 @@ class LakeTable:
                     "branch point (or the chain predates lineage "
                     "tracking); not a fast-forward (re-branch and replay)"
                 )
-            _atomic_write(self._meta("VERSION"), str(head))
+            commit.flip_pointer(self.path, head)
         return head
 
     def version_as_of_timestamp(self, ts_ms: int) -> int:
@@ -1158,13 +1068,7 @@ class LakeTable:
             def _still_active(d: str) -> bool:
                 meta = (parent.delete_meta or {}).get(d) or {}
                 if meta.get("kind") == "equality":
-                    seq = meta.get("seq", -1)
-                    hides = meta.get("hides", {})
-                    return any(
-                        _file_seq(f) < seq
-                        and str(_bucket_of_path(f)) in hides
-                        for f in files_set
-                    )
+                    return bool(_eq_delete_buckets(meta, files_set))
                 return any(f in files_set for f in meta.get("files", {}))
 
             delete_files = [
@@ -1217,14 +1121,18 @@ class LakeTable:
         # land, is unaffected).
         rest_endpoint = None
         if self._txn is None and not self.write_branch:
-            rest_endpoint = _rest_catalog_endpoint(_warehouse_of(self.path))
-        snap_name = (
-            f"txn-v{version}.json" if self._txn is not None
-            else f"rest-v{version}.json" if rest_endpoint
-            else f"v{version}.json"
+            rest_endpoint = commit.catalog_key(
+                commit.warehouse_of(self.path), "rest-catalog"
+            )
+        snap_path = commit.snapshot_path(
+            self.path,
+            version,
+            commit.TXN if self._txn is not None
+            else commit.REST if rest_endpoint
+            else "",
         )
         try:
-            _exclusive_write(self._meta(snap_name), snap.to_json())
+            commit.exclusive_write(snap_path, snap.to_json())
         except CommitConflictError:
             if extra:  # let a retry carry the watermark/batch-id forward
                 self._pending_commit_extra = extra
@@ -1238,7 +1146,7 @@ class LakeTable:
             # here the same way as below (and again at publish).
             cur = self.current_version()
             if cur != self._txn.base_version(self, cur):
-                os.remove(self._meta(snap_name))
+                os.remove(snap_path)
                 if extra:
                     self._pending_commit_extra = extra
                 raise CommitConflictError(
@@ -1272,17 +1180,13 @@ class LakeTable:
             if rest_endpoint:
                 self._cas_via_rest(rest_endpoint, base, version, extra)
             else:
-                with _commit_lock(self.path):
-                    cur = self.current_version()
-                    if cur != base:
-                        os.remove(self._meta(f"v{version}.json"))
-                        if extra:
-                            self._pending_commit_extra = extra
-                        raise CommitConflictError(
-                            f"concurrent commit advanced {self.name} to "
-                            f"v{cur} (this commit was based on v{base})"
-                        )
-                    _atomic_write(self._meta("VERSION"), str(version))
+                try:
+                    commit.publish_pointer(self.path, base, version)
+                except CommitConflictError:
+                    os.remove(snap_path)
+                    if extra:
+                        self._pending_commit_extra = extra
+                    raise
         return snap
 
     def _cas_via_rest(
@@ -1312,7 +1216,7 @@ class LakeTable:
 
         from fluss_iceberg_spark.lake import rest_catalog
 
-        staged = self._meta(f"rest-v{version}.json")
+        staged = commit.snapshot_path(self.path, version, commit.REST)
 
         def _cleanup_staged() -> bool:
             """Remove the staged name; True if WE removed it, False if it
@@ -1356,12 +1260,12 @@ class LakeTable:
         # any still-in-flight request); staged gone AND the public
         # snapshot exists ⇒ the commit landed, only the response was
         # lost.
-        with _commit_lock(self.path):
+        with commit.commit_section(commit.warehouse_of(self.path)):
             we_removed_staged = _cleanup_staged()
             if self.current_version() == version:
                 return  # applied; only the response was lost
             if not we_removed_staged and os.path.exists(
-                self._meta(f"v{version}.json")
+                commit.snapshot_path(self.path, version)
             ):
                 return  # applied, then a later commit advanced the pointer
         if extra:
@@ -2358,14 +2262,7 @@ class LakeTable:
         out = []
         for d in snap.delete_files:
             meta = snap.delete_meta.get(d) or {}
-            if meta.get("kind") != "equality":
-                continue
-            seq = meta.get("seq", -1)
-            hides = meta.get("hides", {})
-            if any(
-                _file_seq(f) < seq and str(_bucket_of_path(f)) in hides
-                for f in files
-            ):
+            if meta.get("kind") == "equality" and _eq_delete_buckets(meta, files):
                 out.append((d, meta))
         return out
 
@@ -2527,7 +2424,7 @@ class LakeTable:
                     shown_parent,
                     s.committed_at_ms,
                     s.operation,
-                    self._meta(f"v{s.snapshot_id}.json"),
+                    commit.snapshot_path(self.path, s.snapshot_id),
                     summary,
                     len(s.files),
                     s.total_rows,
@@ -2967,7 +2864,7 @@ class LakeTable:
                     "ndv": int(row[f"ndv_{c}"]),
                     "null_count": int(row[f"nulls_{c}"]),
                 }
-        _atomic_write(
+        commit.atomic_write(
             self._meta(f"stats_v{stats['snapshot_id']}.json"), json.dumps(stats)
         )
         return stats
@@ -3124,14 +3021,8 @@ class LakeTable:
                 meta = snap.delete_meta.get(d) or {}
                 if meta.get("kind") != "equality":
                     continue
-                seq = meta.get("seq", -1)
-                for f in snap.files:
-                    b = _bucket_of_path(f)
-                    if (
-                        _file_seq(f) < seq
-                        and str(b) in meta.get("hides", {})
-                    ):
-                        out.setdefault(b, set()).add((d, seq))
+                for b in _eq_delete_buckets(meta, snap.files):
+                    out.setdefault(b, set()).add((d, meta.get("seq", -1)))
             return out
 
         ob, nb = by_bucket(old_files), by_bucket(new_files)
@@ -3408,7 +3299,7 @@ class LakeTable:
         removed_files = []
         for v in expired:
             snap = self.snapshot(v)
-            os.remove(self._meta(f"v{v}.json"))
+            os.remove(commit.snapshot_path(self.path, v))
             for f in list(snap.files) + list(snap.delete_files):
                 if f not in keep_files:
                     p = os.path.join(self.path, f)
@@ -3455,7 +3346,10 @@ class LakeTable:
         stale_staged = []
         now_ms = int(time.time() * 1000)
         for fname in os.listdir(self._meta()):
-            if fname.startswith(("txn-v", "rest-v")) and fname.endswith(".json"):
+            if any(
+                commit.staged_version(fname, kind) is not None
+                for kind in (commit.TXN, commit.REST)
+            ):
                 try:
                     with open(self._meta(fname)) as f:
                         staged = Snapshot.from_json(f.read())
@@ -3502,14 +3396,14 @@ class LakeTable:
         meta["retired_names"] = self.retired_names
         meta["next_field_id"] = self.next_field_id
         meta["constraints"] = self.constraints
-        _atomic_write(meta_path, json.dumps(meta))
+        commit.atomic_write(meta_path, json.dumps(meta))
 
     def _persist_properties(self) -> None:
         meta_path = os.path.join(self.path, "meta", "table.json")
         with open(meta_path) as f:
             meta = json.load(f)
         meta["properties"] = self.properties
-        _atomic_write(meta_path, json.dumps(meta))
+        commit.atomic_write(meta_path, json.dumps(meta))
 
     def set_properties(self, props: dict) -> None:
         """``ALTER TABLE t SET TBLPROPERTIES (...)``: persisted to table
@@ -3547,7 +3441,7 @@ class LakeTable:
         with open(meta_path) as f:
             meta = json.load(f)
         meta["partition_spec"] = self.partition_spec
-        _atomic_write(meta_path, json.dumps(meta))
+        commit.atomic_write(meta_path, json.dumps(meta))
 
     def add_partition_field(self, spec: str) -> None:
         """Partition-spec evolution, add (Iceberg ``ALTER TABLE ... ADD
@@ -4029,7 +3923,8 @@ class CatalogTransaction:
        ``$snapshots`` listings, and explicit ``read(version=N)`` time
        travel alike. The txn's own tables read their staged head
        (read-your-own-writes via the staged-name fallback).
-    2. LINK + INTENT (under the catalog commit lock) — re-verify no
+    2. LINK + INTENT (``commit.publish_txn``, under the catalog
+       commit section — the facade route runs the same call) — re-verify no
        pointer moved, hard-link every staged json into its public
        ``v{N}.json`` place (exclusive — a racing writer that claimed
        the same id loses here), then atomically write
@@ -4040,7 +3935,8 @@ class CatalogTransaction:
 
     Crash before INTENT: staged/linked jsons are orphan debris the
     pointer CAS already skips past (cleaned by remove_orphan_files).
-    Crash after INTENT: ``LakeCatalog.__init__`` ROLLS FORWARD — it
+    Crash or failure after INTENT: ``commit.recover`` (run by
+    ``LakeCatalog.__init__``) ROLLS FORWARD — it
     re-applies every pointer flip idempotently (skipping tables a later
     commit already advanced) and deletes the intent file. Readers
     therefore never observe a partially-published transaction across a
@@ -4113,128 +4009,41 @@ class CatalogTransaction:
             raise ValueError("transaction already finished")
         self._done = True
         try:
+            if not self._staged:
+                return
             # A warehouse that opted into a REST catalog facade routes
             # the whole multi-table publish through the catalog SERVICE
-            # (the Iceberg REST commitTransaction shape) — the facade
-            # runs the same verify→link→intent→publish protocol under
-            # the same commit section, so crash recovery is shared.
-            endpoint = _rest_catalog_endpoint(self.catalog.warehouse)
-            if endpoint and self._staged:
+            # (the Iceberg REST commitTransaction shape); either way the
+            # publish is commit.publish_txn under the shared section.
+            endpoint = commit.catalog_key(self.catalog.warehouse, "rest-catalog")
+            if endpoint:
                 self._commit_via_rest(endpoint)
                 return
-            # The whole verify→intent→publish sequence runs under the
-            # catalog commit lock: single-table commits flip their
-            # pointer under the same lock, so no concurrent commit can
-            # land between the re-verify below and the pointer flips —
-            # the lost-update window is closed, not just narrowed.
-            # (Crash-with-lock-held is safe: flock dies with the
-            # process, and the intent file decides commit vs abort.)
-            with _commit_lock(os.path.join(self.catalog.warehouse, "_")):
-                # Pre-intent phase: any failure here aborts (staged
-                # snapshot jsons are unpublished, so deleting is safe).
-                try:
-                    # re-verify no table moved since its first stage
-                    for path, s in self._staged.items():
-                        t = self._tables_by_path(path)
-                        if t.current_version() != s["first_base"]:
-                            raise CommitConflictError(
-                                f"concurrent commit advanced {t.name} "
-                                "during the transaction"
-                            )
-                    # link every staged txn-v{N}.json into its public
-                    # v{N}.json place — still pre-intent, still under
-                    # the lock, exclusive (a racing non-txn writer that
-                    # claimed the same id pre-lock loses here or we
-                    # do). Linked-but-unpublished files on a crash are
-                    # the orphan debris the id-skipping pointer CAS
-                    # already tolerates.
-                    for path, s in self._staged.items():
-                        for v in s["all"]:
-                            staged_p = os.path.join(
-                                path, "meta", f"txn-v{v}.json"
-                            )
-                            try:
-                                os.link(
-                                    staged_p,
-                                    os.path.join(path, "meta", f"v{v}.json"),
-                                )
-                            except FileExistsError:
-                                raise CommitConflictError(
-                                    f"concurrent writer claimed snapshot "
-                                    f"v{v} of {os.path.basename(path)} "
-                                    "during the transaction"
-                                ) from None
-                            except FileNotFoundError:
-                                raise CommitConflictError(
-                                    f"transaction expired: staged snapshot "
-                                    f"txn-v{v}.json of "
-                                    f"{os.path.basename(path)} was swept "
-                                    "(remove_orphan_files ran past its "
-                                    "older_than horizon while this "
-                                    "transaction was still open)"
-                                ) from None
-                    intent_dir = os.path.join(self.catalog.warehouse, "_txn")
-                    os.makedirs(intent_dir, exist_ok=True)
-                    intent = {
-                        "entries": [
-                            {"path": path, "version": s["latest"]}
-                            for path, s in self._staged.items()
-                        ]
-                    }
-                    intent_path = os.path.join(
-                        intent_dir, f"txn-{uuid.uuid4().hex}.json"
-                    )
-                    _atomic_write(intent_path, json.dumps(intent))  # commit point
-                except Exception:
-                    self._abort()
-                    raise
-                # Post-intent phase: the transaction IS durably
-                # committed. A failure mid-publish must roll FORWARD,
-                # never abort — some VERSION pointers may already
-                # reference staged snapshots, so deleting them would
-                # dangle live pointers.
-                publish_failed = False
-                try:
-                    for path, s in self._staged.items():
-                        _atomic_write(
-                            os.path.join(path, "meta", "VERSION"),
-                            str(s["latest"]),
-                        )
-                    os.remove(intent_path)
-                except Exception:
-                    publish_failed = True
-                # the public v{N}.json links are live; drop the staged
-                # names (best-effort — leftovers are invisible debris)
-                for path, s in self._staged.items():
-                    for v in s["all"]:
-                        try:
-                            os.remove(
-                                os.path.join(path, "meta", f"txn-v{v}.json")
-                            )
-                        except FileNotFoundError:
-                            pass
-            if publish_failed:
-                # finish the publish in-process if possible — OUTSIDE
-                # the lock above (recovery takes the lock itself; flock
-                # between two fds of one process would deadlock)
-                try:
-                    self.catalog._recover_transactions()
-                except Exception:
-                    pass  # intent remains; next open rolls forward
+            try:
+                commit.publish_txn(self.catalog.warehouse, self._entries())
+            except (CommitConflictError, OSError):
+                # raised only before the intent: nothing is published
+                self._abort()
+                raise
         finally:
             self._detach()
 
+    def _entries(self) -> list[tuple[str, int, int, list[int]]]:
+        """commit.publish_txn's (path, expected, target, staged) rows."""
+        return [
+            (path, s["first_base"], s["latest"], s["all"])
+            for path, s in self._staged.items()
+        ]
+
     def _commit_via_rest(self, endpoint: str) -> None:
         """Publish every staged table atomically through the catalog
-        facade (rest_catalog._txn_commit — verify→link→intent→publish
-        under the shared commit section). Failure resolution mirrors
-        LakeTable._cas_via_rest: on transport loss the staged
-        ``txn-v{N}.json`` names discriminate — the facade consumes them
-        all at publish time, so all-present ⇒ never applied
-        (determinate failure), all-gone + every pointer at/past its
-        target ⇒ applied with the response lost; anything mixed is
-        first given to the intent roll-forward sweep, then surfaced as
-        CommitStateUnknownError if still unresolved."""
+        facade (rest_catalog._txn_commit → commit.publish_txn). Failure
+        resolution mirrors LakeTable._cas_via_rest: on transport loss the
+        roll-forward sweep first finishes any publish whose intent
+        landed; then every pointer at/past its target ⇒ applied with the
+        response lost, every staged ``txn-v{N}.json`` name still present
+        ⇒ never applied (determinate failure), anything else surfaces as
+        CommitStateUnknownError."""
         import http.client
 
         from fluss_iceberg_spark.lake import rest_catalog
@@ -4242,11 +4051,11 @@ class CatalogTransaction:
         changes = [
             {
                 "name": os.path.basename(path.rstrip(os.sep)),
-                "expected": s["first_base"],
-                "target": s["latest"],
-                "staged_versions": s["all"],
+                "expected": expected,
+                "target": target,
+                "staged_versions": versions,
             }
-            for path, s in self._staged.items()
+            for path, expected, target, versions in self._entries()
         ]
         err: Exception | None = None
         status, body = 0, {}
@@ -4265,24 +4074,25 @@ class CatalogTransaction:
                 f"catalog rejected transaction publish: {body.get('error')}"
             )
         # transport error / intermediary status — the facade MAY have
-        # applied the transaction. Resolve under the shared section
-        # (the facade holds it while processing, so post-lock state is
-        # quiescent).
-        with _commit_lock(os.path.join(self.catalog.warehouse, "_")):
-            staged_flags = [
-                os.path.exists(os.path.join(path, "meta", f"txn-v{v}.json"))
+        # applied the transaction, or stopped after its intent. Finish
+        # the latter first (an abort then would delete snapshots a
+        # flipped pointer already names), then resolve under the shared
+        # section (the facade holds it while processing, so post-lock
+        # state is quiescent).
+        commit.recover(self.catalog.warehouse)
+        with commit.commit_section(self.catalog.warehouse):
+            if all(
+                commit.read_version(path) >= s["latest"]
                 for path, s in self._staged.items()
-                for v in s["all"]
-            ]
-            applied = all(
-                self._tables_by_path(path).current_version() >= s["latest"]
-                for path, s in self._staged.items()
-            )
-            if applied and not any(staged_flags):
+            ):
                 self._staged.clear()
                 return  # committed; only the response was lost
-            if all(staged_flags) and not applied:
-                # nothing linked, nothing flipped: determinate failure
+            if all(
+                os.path.exists(commit.snapshot_path(path, v, commit.TXN))
+                for path, s in self._staged.items()
+                for v in s["all"]
+            ):
+                # no intent, nothing consumed: determinate failure
                 self._abort()
                 raise RuntimeError(
                     f"REST catalog at {endpoint} failed the transaction "
@@ -4290,18 +4100,6 @@ class CatalogTransaction:
                     "under the commit section: no table advanced, staged "
                     "snapshots removed)"
                 ) from err
-        # mixed state: an intent MAY exist — let the roll-forward sweep
-        # finish a committed-but-unpublished transaction, then re-check
-        try:
-            self.catalog._recover_transactions()
-        except Exception:
-            pass
-        if all(
-            self._tables_by_path(path).current_version() >= s["latest"]
-            for path, s in self._staged.items()
-        ):
-            self._staged.clear()
-            return
         raise CommitStateUnknownError(
             f"REST catalog at {endpoint}: transaction publish is in an "
             f"unknown state ({err or f'HTTP {status}: {body}'}); staged "
@@ -4318,16 +4116,14 @@ class CatalogTransaction:
     def _abort(self) -> None:
         for path, s in self._staged.items():
             for v in s["all"]:
-                staged_p = os.path.join(path, "meta", f"txn-v{v}.json")
-                public_p = os.path.join(path, "meta", f"v{v}.json")
+                staged_p = commit.snapshot_path(path, v, commit.TXN)
+                public_p = commit.snapshot_path(path, v)
                 # a public link created by a publish attempt that
                 # conflicted mid-linking is OURS only if it is the same
                 # inode as the staged file — a racing non-txn writer's
                 # own v{N}.json must never be deleted
                 try:
-                    if os.path.exists(public_p) and os.path.samefile(
-                        staged_p, public_p
-                    ):
+                    if os.path.samefile(staged_p, public_p):
                         os.remove(public_p)
                 except FileNotFoundError:
                     pass
@@ -4340,12 +4136,6 @@ class CatalogTransaction:
     def _detach(self) -> None:
         for t in self._tables.values():
             t._txn = None
-
-    def _tables_by_path(self, path: str) -> LakeTable:
-        for t in self._tables.values():
-            if t.path == path:
-                return t
-        raise KeyError(path)
 
     def __enter__(self) -> "CatalogTransaction":
         return self
@@ -4364,59 +4154,17 @@ class LakeCatalog:
         self.spark = spark
         self.warehouse = warehouse
         os.makedirs(warehouse, exist_ok=True)
-        self._recover_transactions()
+        commit.recover(warehouse)
 
     def transaction(self) -> CatalogTransaction:
         """Begin a multi-table atomic transaction (see
         CatalogTransaction). Use as a context manager."""
         return CatalogTransaction(self)
 
-    def _recover_transactions(self) -> None:
-        """Roll FORWARD any transaction that crashed after its intent
-        write: re-apply each pointer flip idempotently (a table whose
-        pointer already advanced past the txn's version is skipped),
-        then drop the intent file."""
-        intent_dir = os.path.join(self.warehouse, "_txn")
-        if not os.path.isdir(intent_dir):
-            return
-        for fn in sorted(os.listdir(intent_dir)):
-            p = os.path.join(intent_dir, fn)
-            try:
-                with open(p) as f:
-                    intent = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                continue
-            for e in intent.get("entries", []):
-                vf = os.path.join(e["path"], "meta", "VERSION")
-                snap_f = os.path.join(e["path"], "meta", f"v{e['version']}.json")
-                if not os.path.exists(snap_f):
-                    continue
-                # check-then-flip under the same commit lock every other
-                # pointer writer holds: two concurrent recoveries (or a
-                # recovery racing a fresh commit) must not let a stale
-                # re-read regress the pointer past a newer commit
-                with _commit_lock(e["path"]):
-                    cur = -1
-                    if os.path.exists(vf):
-                        with open(vf) as f:
-                            cur = int(f.read().strip())
-                    if cur < e["version"]:
-                        _atomic_write(vf, str(e["version"]))
-            os.remove(p)
-
     def table_path(self, name: str) -> str:
-        # _commit_lock derives the catalog-wide lock file from the table
-        # path's PARENT dir; a name containing a path separator (or the
-        # traversal names '.'/'..', which escape the warehouse without
-        # one) would make that parent something other than the warehouse
-        # root and silently serialize against a different lock — reject
-        # here, the single choke point for create/load/exists/drop.
-        if (
-            not name
-            or name in (".", "..")
-            or os.sep in name
-            or (os.altsep and os.altsep in name)
-        ):
+        # the single choke point for create/load/exists/drop: the commit
+        # section is derived from a table path's parent dir
+        if not commit.is_valid_table_name(name):
             raise ValueError(
                 f"invalid table name {name!r}: tables are direct children "
                 "of the warehouse (no path separators, '.' or '..')"
@@ -4469,7 +4217,7 @@ class LakeCatalog:
             "partition_spec": spec,
             "properties": properties or {},
         }
-        _atomic_write(os.path.join(path, "meta", "table.json"), json.dumps(meta))
+        commit.atomic_write(os.path.join(path, "meta", "table.json"), json.dumps(meta))
         return LakeTable(self.spark, path)
 
     def load(self, name: str) -> LakeTable:

@@ -50,10 +50,11 @@ from __future__ import annotations
 import json
 import os
 import re
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from fluss_iceberg_spark.lake.commit import atomic_write
 
 _AGG_RE = re.compile(
     r"^(SUM|COUNT|MIN|MAX|AVG|APPROX_COUNT_DISTINCT)\s*\((.+)\)\s+AS\s+(\w+)$",
@@ -72,13 +73,6 @@ _JMV_SELECT_RE = re.compile(
     r"\s+ON\s+(.*?)(?:\s+WHERE\s+(.*?))?$",
     re.I | re.S,
 )
-
-
-def _atomic_write(path: str, payload: str) -> None:
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, path)
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -113,7 +107,7 @@ class ViewManager:
 
     def _save(self) -> None:
         os.makedirs(os.path.dirname(self._path), exist_ok=True)
-        _atomic_write(
+        atomic_write(
             self._path,
             json.dumps({"views": self.views, "matviews": self.matviews}),
         )

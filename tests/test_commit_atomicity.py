@@ -159,22 +159,24 @@ def test_commit_conflict_detection(spark):
         # pointer CAS: the VERSION pointer moved after the base was read
         # (a same-base racer with a different id already published) —
         # the late writer must lose and remove its unpublished snapshot
+        from fluss_iceberg_spark.lake import commit
+
         base = t.current_version()
-        orig_cv = t.current_version
+        orig_cv = commit.read_version
         calls = {"n": 0}
 
-        def moved():
+        def moved(_tpath):
             # _commit reads the pointer for base, parent, and next-id
             # (calls 1-3); the publish re-check (call 4) sees it moved
             calls["n"] += 1
             return base if calls["n"] <= 3 else base + 7
 
-        t.current_version = moved
+        commit.read_version = moved
         try:
             with pytest.raises(CommitConflictError, match="concurrent"):
                 t._commit("append", list(t.snapshot(base).files), 2, 0)
         finally:
-            t.current_version = orig_cv
+            commit.read_version = orig_cv
         # the loser's snapshot file was cleaned up
         assert t._next_version() == base + 1
         # table still readable and consistent at v1 after all rejections

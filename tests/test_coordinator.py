@@ -1,5 +1,5 @@
 """Catalog commit coordinator (lake/coordinator.py): the REST-catalog
-CAS service stand-in behind the ``_commit_lock`` seam. Proves the
+CAS service stand-in behind the ``commit_section`` seam. Proves the
 documented swap-in path actually works multi-process: writers in
 SEPARATE processes serialize their check→flip sections through the
 service, a dead holder's lease auto-releases, and the real commit /
@@ -29,11 +29,11 @@ _CHILD_INCR = textwrap.dedent(
     """
     import os, sys, time
     sys.path.insert(0, {repo!r})
-    from fluss_iceberg_spark.lake.table import _commit_lock
+    from fluss_iceberg_spark.lake.commit import commit_section
     wh, n = sys.argv[1], int(sys.argv[2])
     ctr = os.path.join(wh, "counter.txt")
     for _ in range(n):
-        with _commit_lock(os.path.join(wh, "t")):
+        with commit_section(wh):
             v = int(open(ctr).read())
             time.sleep(0.002)  # widen the lost-update window
             with open(ctr, "w") as f:
@@ -55,7 +55,7 @@ _CHILD_DIE_HOLDING = textwrap.dedent(
 
 def test_multiprocess_writers_never_lose_updates(tmp_path):
     """4 separate OS processes × 20 read-modify-write cycles through the
-    coordinator-backed ``_commit_lock`` — the deliberately non-atomic
+    coordinator-backed ``commit_section`` — the deliberately non-atomic
     counter ends exactly at 80 (any lost update shows as a smaller
     value; without mutual exclusion the 2 ms hold makes losses
     near-certain)."""
@@ -135,7 +135,7 @@ def test_contention_is_exclusive_in_process(tmp_path):
 def test_commit_and_transaction_suites_green_against_shim(spark):
     """The real commit machinery — appends, snapshot lineage, the
     multi-table transaction conflict path — behaves identically when
-    the warehouse's ``_commit_lock`` is served by the coordinator
+    the warehouse's ``commit_section`` is served by the coordinator
     instead of flock (the seam swap changes no protocol code)."""
     proc, sock = coordinator.serve_in_subprocess()
     try:

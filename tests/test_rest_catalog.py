@@ -118,7 +118,7 @@ def test_facade_cas_excludes_writer_commits(spark, tmp_path):
     import time
 
     from fluss_iceberg_spark.lake import coordinator
-    from fluss_iceberg_spark.lake.rest_catalog import _commit_section
+    from fluss_iceberg_spark.lake.commit import commit_section
 
     wh = str(tmp_path / "serial_wh")
     cat = LakeCatalog(spark, wh)
@@ -132,7 +132,7 @@ def test_facade_cas_excludes_writer_commits(spark, tmp_path):
         entered = threading.Event()
 
         def hold_section():
-            with _commit_section(wh):
+            with commit_section(wh):
                 entered.set()
                 time.sleep(1.5)
                 order.append("facade-released")
@@ -160,7 +160,7 @@ def test_facade_cas_excludes_writer_commits_flock_path(spark, tmp_path):
     import threading
     import time
 
-    from fluss_iceberg_spark.lake.rest_catalog import _commit_section
+    from fluss_iceberg_spark.lake.commit import commit_section
 
     wh = str(tmp_path / "flock_wh")
     cat = LakeCatalog(spark, wh)
@@ -171,7 +171,7 @@ def test_facade_cas_excludes_writer_commits_flock_path(spark, tmp_path):
     entered = threading.Event()
 
     def hold_section():
-        with _commit_section(wh):
+        with commit_section(wh):
             entered.set()
             time.sleep(1.5)
             order.append("facade-released")

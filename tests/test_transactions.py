@@ -10,10 +10,10 @@ import tempfile
 import pytest
 from pyspark.sql import types as T
 
+from fluss_iceberg_spark.lake.commit import atomic_write
 from fluss_iceberg_spark.lake.table import (
     CommitConflictError,
     LakeCatalog,
-    _atomic_write,
 )
 
 SCHEMA = T.StructType(
@@ -119,7 +119,7 @@ def test_roll_forward_recovery_after_intent(spark):
                 for p, s in txn._staged.items()
             ]
         }
-        _atomic_write(
+        atomic_write(
             os.path.join(intent_dir, "txn-crashed.json"), json.dumps(intent)
         )
         txn._detach()  # process dies
@@ -147,14 +147,14 @@ def test_post_intent_failure_rolls_forward_not_back(spark, monkeypatch):
     abort: some VERSION pointers may already reference staged snapshots,
     so deleting them would dangle live pointers. The intent stays on
     disk and the next catalog open completes the publish."""
-    import fluss_iceberg_spark.lake.table as mod
+    import fluss_iceberg_spark.lake.commit as mod
 
     with tempfile.TemporaryDirectory() as d:
         cat = _setup(spark, d)
         txn = cat.transaction()
         txn.table("a").append(spark.createDataFrame([(2, "a1")], SCHEMA))
         txn.table("b").append(spark.createDataFrame([(2, "b1")], SCHEMA))
-        real = mod._atomic_write
+        real = mod.atomic_write
         state = {"fail": True}
         b_version = os.path.join(d, "b", "meta", "VERSION")
 
@@ -163,7 +163,7 @@ def test_post_intent_failure_rolls_forward_not_back(spark, monkeypatch):
                 raise OSError("disk full")
             real(path, payload)
 
-        monkeypatch.setattr(mod, "_atomic_write", flaky)
+        monkeypatch.setattr(mod, "atomic_write", flaky)
         txn.commit()  # must NOT raise: the txn is durably committed
         # intent file left behind for roll-forward; staged snapshots kept
         intent_dir = os.path.join(d, "_txn")
