@@ -176,9 +176,12 @@ def publish_pointer(
     """Compare-and-swap the table's pointer ``expected`` → ``target``
     under the commit section. With ``staged`` (a staged-name prefix), a
     target not yet public is first linked from its staged name into its
-    public place and the staged name removed — the moment the snapshot
-    becomes readable, so a publish that never gets here leaves no
-    phantom snapshot. An already-public target is a pure pointer move.
+    public place — the moment the snapshot becomes readable, so a publish
+    that never gets here leaves no phantom snapshot — and the staged name
+    is removed once the pointer names it. A failed flip removes that
+    public link again and leaves the staged name to the caller, whose
+    failure handling reads it as "never applied". An already-public
+    target is a pure pointer move.
 
     Raises CommitConflictError on a stale ``expected`` (nothing touched)
     and ValueError when the target is neither public nor staged."""
@@ -191,6 +194,7 @@ def publish_pointer(
                 f"(this commit was based on v{expected})"
             )
         public = snapshot_path(tpath, target)
+        src = None
         if staged is not None and not os.path.exists(public):
             src = snapshot_path(tpath, target, staged)
             try:
@@ -200,8 +204,14 @@ def publish_pointer(
                     f"v{target} is neither a published snapshot of {name} "
                     "nor staged for publication"
                 ) from None
+        try:
+            flip_pointer(tpath, target)
+        except OSError:
+            if src is not None:  # unpublish: the staged name stays the caller's
+                os.remove(public)
+            raise
+        if src is not None:
             os.remove(src)
-        flip_pointer(tpath, target)
 
 
 def publish_txn(

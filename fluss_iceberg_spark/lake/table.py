@@ -1159,7 +1159,11 @@ class LakeTable:
             # branch commit: advance the branch ref, main stays put (WAP)
             refs = self._refs()
             refs["branches"][self.write_branch] = version
-            self._write_refs(refs)
+            try:
+                self._write_refs(refs)
+            except OSError:
+                os.remove(snap_path)  # never published: leave no snapshot
+                raise
         else:
             # pointer CAS: snapshot ids skip past orphan files (crash
             # debris must not wedge the table), so same-base racers may
@@ -1182,7 +1186,10 @@ class LakeTable:
             else:
                 try:
                     commit.publish_pointer(self.path, base, version)
-                except CommitConflictError:
+                except (CommitConflictError, OSError):
+                    # the pointer flip is the commit point: a failure up
+                    # to it publishes nothing, so time travel must not
+                    # find the snapshot either
                     os.remove(snap_path)
                     if extra:
                         self._pending_commit_extra = extra

@@ -6,7 +6,10 @@ any durable step — linking the second table's snapshot, writing the
 intent, either VERSION flip, dropping the staged names — must leave
 both tables all-before or all-after once a catalog reopens, every
 pointer on an existing snapshot, and the warehouse able to commit
-again. Also pins the one table-name rule both entry points apply."""
+again. A single-table commit gets the same treatment at each of its
+durable steps: the snapshot's exclusive create, the ``VERSION`` flip, a
+branch commit's ``refs.json`` write and ``fast_forward``'s flip. Also
+pins the one table-name rule both entry points apply."""
 
 from __future__ import annotations
 
@@ -127,6 +130,96 @@ def test_publish_survives_fault(spark, tmp_path, route, step):
     finally:
         if srv is not None:
             srv.stop()
+
+
+def _append_main(t, df):
+    t.append(df)
+
+
+def _append_branch(t, df):
+    with t.on_branch("b"):
+        t.append(df)
+
+
+def _publish_branch(t, df):
+    t.fast_forward("b")
+
+
+def _meta(tpath: str, name: str) -> str:
+    return os.path.join(tpath, "meta", name)
+
+
+# step -> (os function, predicate on (table path, target), the commit, the
+# ref it moves); every single-table step fails before its commit point
+SINGLE_STEPS = {
+    "snapshot_create": (
+        "link",
+        lambda tp, p: os.path.dirname(p) == os.path.join(tp, "meta")
+        and os.path.basename(p).startswith("v")
+        and p.endswith(".json"),
+        _append_main,
+        None,
+    ),
+    "version_flip": (
+        "replace", lambda tp, p: p == _meta(tp, "VERSION"), _append_main, None,
+    ),
+    "branch_refs": (
+        "replace", lambda tp, p: p == _meta(tp, "refs.json"), _append_branch, "b",
+    ),
+    "fast_forward_flip": (
+        "replace", lambda tp, p: p == _meta(tp, "VERSION"), _publish_branch, None,
+    ),
+}
+
+
+# branch commits and fast_forward never route through the facade
+@pytest.mark.parametrize(
+    "step,route",
+    [(s, "local") for s in SINGLE_STEPS]
+    + [("snapshot_create", "facade"), ("version_flip", "facade")],
+)
+def test_single_table_commit_survives_fault(spark, tmp_path, step, route):
+    wh = str(tmp_path / "wh")
+    t = LakeCatalog(spark, wh).create_table("t", SCHEMA)
+    t.append(_rows(spark, "t0"))
+    t.create_branch("b")
+    with t.on_branch("b"):
+        t.append(_rows(spark, "b1"))
+    srv = None
+    if route == "facade":
+        srv = rc.RestCatalogServer(wh).start()
+        rc.enable_for_writers(wh, srv.endpoint)
+    try:
+        _fault_then_commit(spark, wh, t, step)
+    finally:
+        if srv is not None:
+            srv.stop()
+
+
+def _fault_then_commit(spark, wh, t, step):
+    fn_name, hit, act, ref = SINGLE_STEPS[step]
+    before = t.read(version=ref).count()
+    versions = t.snapshot_versions()
+    df = _rows(spark, "t1")
+    with _failing(fn_name, lambda p: hit(t.path, p)):
+        # the facade reports the fault as HTTP 500, the client as RuntimeError
+        with pytest.raises((OSError, RuntimeError), match="injected"):
+            act(t, df)
+
+    after = LakeCatalog(spark, wh).load("t")
+    # exactly the pre-commit state: the same rows at the ref, and no
+    # snapshot of the failed commit left for time travel to find
+    assert after.read(version=ref).count() == before
+    assert after.snapshot_versions() == versions
+    assert _pointer_ok(t.path)
+    assert os.path.exists(_meta(t.path, f"v{after.branches()['b']}.json"))
+
+    act(after, df)
+    want = after.read(version="b").count() if step == "fast_forward_flip" else before + 1
+    assert after.read(version=ref).count() == want
+    assert _pointer_ok(t.path)
+    after.append(_rows(spark, "t2"))
+    assert after.read().count() == (want if ref is None else 1) + 1
 
 
 BAD_NAMES = ["", ".", "..", "a/b", "a\\b", "../x", "/abs", "x/"]
