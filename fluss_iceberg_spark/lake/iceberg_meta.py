@@ -72,8 +72,9 @@ the resolved parquet, and — when ``pyiceberg`` is importable — loads
 the table via ``StaticTable.from_metadata`` and compares planned data
 files (the optional-dependency seam, same pattern as the PIL codec).
 
-Spark-free by design (stdlib + pyarrow): export and consumption both
-run without a JVM.
+Spark-free by design: the module imports stdlib and pyarrow only, so
+readers load it by file without pyspark; export reads the snapshot
+through lake/manifest.py. Export and consumption both run without a JVM.
 """
 
 from __future__ import annotations
@@ -81,7 +82,6 @@ from __future__ import annotations
 import io
 import json
 import os
-import re
 import struct
 import uuid
 import zlib
@@ -642,27 +642,10 @@ def spec_info(part_spec: list[dict], ice_schema: dict) -> tuple[list, list]:
     return spec_fields, avro_fields
 
 
-def _partition_values_of(rel: str, file_meta: dict, part_spec: list[dict],
+def _partition_values_of(raw: dict, part_spec: list[dict],
                          ice_schema: dict) -> dict:
-    """Typed Iceberg partition record for one data file: the manifest's
-    recorded values when present, else parsed from the __p_ path
-    components (both are the writer's directory layout)."""
-    raw = (file_meta.get(rel) or {}).get("partition")
-    if raw is None:
-        raw = {}
-        for comp in rel.split(os.sep)[:-1]:
-            if comp.startswith("__p_") and "=" in comp:
-                k, _, rv = comp[4:].partition("=")
-                import urllib.parse
-
-                rv = urllib.parse.unquote(rv)
-                if rv == "__HIVE_DEFAULT_PARTITION__":
-                    raw[k] = None
-                else:
-                    try:
-                        raw[k] = int(rv)
-                    except ValueError:
-                        raw[k] = rv
+    """Typed Iceberg partition record for one data file from its engine
+    partition record ``raw`` ({name: directory value})."""
     by_name = {f["name"]: f for f in ice_schema["fields"]}
     out = {}
     for p in part_spec:
@@ -670,24 +653,6 @@ def _partition_values_of(rel: str, file_meta: dict, part_spec: list[dict],
             p["transform"], by_name[p["col"]]["type"], raw.get(p["name"])
         )
     return out
-
-
-def _equality_delete_active(rel_files: list[str], meta: dict) -> bool:
-    """Whether an equality delete still hides rows in this snapshot —
-    the same inertness rule as Snapshot.active_delete_count (a bucket
-    rewrite materializes the delete there), replicated over the path
-    conventions (data/s{seq}/.../__bucket={b}/...) so this module stays
-    pyspark-import-free."""
-    seq = meta.get("seq", -1)
-    hides = meta.get("hides") or {}
-    for f in rel_files:
-        m = re.match(r"data/s(\d+)/", f)
-        if m is None or int(m.group(1)) >= seq:
-            continue
-        for part in f.split(os.sep):
-            if part.startswith("__bucket=") and part[9:] in hides:
-                return True
-    return False
 
 
 # ---------------------------------------------------------------------------
@@ -720,32 +685,30 @@ def _prev_metadata(tpath: str) -> dict | None:
 def export_iceberg_metadata(table) -> str:
     """Export ``table``'s CURRENT snapshot as Iceberg v2 metadata under
     ``{table.path}/metadata/``; returns the metadata-location. ``table``
-    is a LakeTable (duck-typed: .path/.schema/.field_ids/.properties —
-    import stays lazy so this module needs no pyspark).
+    is a LakeTable (duck-typed: .path/.schema/.field_ids/.properties).
+    The snapshot and its per-file rules come from lake/manifest.py,
+    imported here so that loading this module by file needs no pyspark.
 
-    Raises ValueError on a table with active equality deletes (no spec
-    twin — see module docstring) or an empty table (no snapshot)."""
+    Raises ValueError on an empty table (no snapshot)."""
+    from fluss_iceberg_spark.lake import manifest
+
     tpath = os.path.abspath(table.path)
     version = table.current_version()
     if version < 0:
         raise ValueError(f"{tpath}: no committed snapshot to export")
     with open(os.path.join(tpath, "meta", f"v{version}.json")) as f:
-        snap = json.load(f)
+        snap = manifest.Snapshot.from_json(f.read())
     # active equality deletes have no spec twin — convert them to
     # spec-schema position deletes at export time (read the affected
     # buckets' key columns once, emit (path, pos) for key matches); the
     # engine's sequence rule "file seq < delete seq hides on key match"
     # becomes explicit row positions a spec reader applies exactly
-    active_eq = [
-        (d, meta)
-        for d in snap.get("delete_files") or []
-        for meta in [(snap.get("delete_meta") or {}).get(d) or {}]
-        if meta.get("kind") == "equality"
-        and _equality_delete_active(snap.get("files") or [], meta)
-    ]
+    applying = snap.active_deletes()
+    active_eq = [(d, m) for d, m in applying if m.get("kind") == "equality"]
+    active_deletes = [d for d, m in applying if m.get("kind") != "equality"]
 
-    schema_json = snap.get("schema_json") or table.schema.jsonValue()
-    field_ids = snap.get("field_ids") or table.field_ids
+    schema_json = snap.schema_json or table.schema.jsonValue()
+    field_ids = snap.field_ids or table.field_ids
     ice_schema, last_col_id = _iceberg_schema(schema_json, field_ids)
     part_spec = list(getattr(table, "partition_spec", None) or [])
     spec_fields, part_avro_fields = spec_info(part_spec, ice_schema)
@@ -754,8 +717,8 @@ def export_iceberg_metadata(table) -> str:
     os.makedirs(meta_dir, exist_ok=True)
     sid = version + 1  # snapshot ids start at 1 (v0 → sid 1)
     seq = version + 1
-    ts_ms = int(snap.get("committed_at_ms") or 0)
-    file_meta = snap.get("file_meta") or {}
+    ts_ms = int(snap.committed_at_ms or 0)
+    file_meta = snap.file_meta
 
     # ---- data manifest -------------------------------------------------
     def _rows_of(rel: str) -> int:
@@ -812,7 +775,7 @@ def export_iceberg_metadata(table) -> str:
     # and only the DELTA files get a manifest. Export cost drops from
     # O(live files) to O(delta) on the append path; any rewrite,
     # compaction, or expiry falls back to the full manifest rewrite.
-    cur_rels = list(snap.get("files") or [])
+    cur_rels = list(snap.files)
     cur_abs = {os.path.join(tpath, r) for r in cur_rels}
     delta_rels, reused = cur_rels, []
     prev_doc = _prev_metadata(tpath)
@@ -846,7 +809,9 @@ def export_iceberg_metadata(table) -> str:
             os.path.join(tpath, rel),
             _rows_of(rel),
             partition=_partition_values_of(
-                rel, file_meta, part_spec, ice_schema
+                (file_meta.get(rel) or {}).get("partition")
+                or manifest._partition_values_from_path(rel),
+                part_spec, ice_schema,
             ) if spec_fields else None,
         )
         for rel in delta_rels
@@ -904,16 +869,6 @@ def export_iceberg_metadata(table) -> str:
         )
 
     # ---- position-delete manifest (spec-schema parquet rewrite) --------
-    active_deletes = [
-        d
-        for d in snap.get("delete_files") or []
-        if any(
-            f in set(snap.get("files") or [])
-            for f in ((snap.get("delete_meta") or {}).get(d) or {}).get(
-                "files", {}
-            )
-        )
-    ]
     if active_deletes or active_eq:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -966,15 +921,12 @@ def export_iceberg_metadata(table) -> str:
                 zip(*[kt.column(c).to_pylist() for c in key_cols])
             )
             dseq = meta.get("seq", -1)
-            buckets = set((meta.get("hides") or {}).keys())
+            buckets = manifest._eq_delete_buckets(meta, snap.files)
             paths, poss = [], []
-            for f in snap.get("files") or []:
-                m = re.match(r"data/s(\d+)/", f)
-                if m is None or int(m.group(1)) >= dseq:
-                    continue
-                if not any(
-                    part.startswith("__bucket=") and part[9:] in buckets
-                    for part in f.split(os.sep)
+            for f in snap.files:
+                if (
+                    manifest._file_seq(f) >= dseq
+                    or manifest._bucket_of_path(f) not in buckets
                 ):
                     continue
                 ft = pq.read_table(
@@ -1061,13 +1013,13 @@ def export_iceberg_metadata(table) -> str:
         "summary": {
             "operation": (
                 "append"
-                if snap.get("operation") in ("append", "tier")
+                if snap.operation in ("append", "tier")
                 else "overwrite"
             )
         },
         "schema-id": 0,
     }
-    parent = snap.get("parent_id")
+    parent = snap.parent_id
     if parent is not None and parent >= 0:
         snapshot_entry["parent-snapshot-id"] = parent + 1
     doc = {

@@ -6,8 +6,14 @@ Layout per table, under a catalog warehouse directory::
         meta/table.json          # schema DDL, primary key, bucket count, props
         meta/v{N}.json           # snapshot N: operation, file list, counters
         meta/VERSION             # current snapshot pointer (atomic os.replace)
+        meta/refs.json           # named refs: tags and branch heads
         data/s{N}/...parquet     # files added by snapshot N (immutable)
+        deletes/s{N}/...parquet  # position / equality delete files of snapshot N
         hot/batch={B}/...parquet # staged stream batches not yet tiered
+
+The snapshot record and its per-file rules — manifest entries, row and
+delete accounting, the path conventions above, file skipping — live in
+lake/manifest.py.
 
 Semantics mirrored from the reference:
 
@@ -48,12 +54,8 @@ import os
 import re
 import shutil
 import time
-import datetime
-import decimal
-import functools
 
 from contextlib import contextmanager
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,8 +66,9 @@ from pyspark.sql import functions as F
 from fluss_iceberg_spark.operators.util import arrow_local_df, release_checkpoint
 from pyspark.sql import types as T
 
-from fluss_iceberg_spark.lake import commit
+from fluss_iceberg_spark.lake import commit, manifest
 from fluss_iceberg_spark.lake.commit import CommitConflictError
+from fluss_iceberg_spark.lake.manifest import Snapshot
 
 
 class CommitStateUnknownError(RuntimeError):
@@ -75,369 +78,6 @@ class CommitStateUnknownError(RuntimeError):
     snapshot confirms the commit. The caller must NOT blindly retry
     (a retry could double-apply the write); it must inspect the table
     or re-derive the write idempotently."""
-
-
-def _list_parquet(d: str) -> list[str]:
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        os.path.join(d, f)
-        for f in os.listdir(d)
-        if f.endswith(".parquet") and not f.startswith("_")
-    )
-
-
-def _stat_encode(v):
-    """Encode a parquet-footer min/max value as a JSON-safe tagged value.
-    Dates/timestamps become ISO strings (lexicographic == chronological),
-    decimals keep their exact digits as strings. Unsupported types (bytes,
-    nested) encode as None = "no stat", which pruning treats as
-    "may contain anything"."""
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, (int, float, str)):
-        return v
-    if isinstance(v, decimal.Decimal):
-        return {"d": str(v)}
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return {"t": v.isoformat()}
-    return None
-
-
-def _stat_decode(v):
-    """Decode to a Python value comparable against a user literal run
-    through ``_stat_canon``."""
-    if isinstance(v, dict):
-        return decimal.Decimal(v["d"]) if "d" in v else v["t"]
-    return v
-
-
-def _stat_canon(lit):
-    """Canonicalize a predicate literal into the ``_stat_decode`` domain."""
-    if isinstance(lit, (datetime.datetime, datetime.date)):
-        return lit.isoformat()
-    return lit
-
-
-def _file_column_stats(abspath: str) -> dict:
-    """Per-file metadata from the parquet footer: row count, byte size, and
-    per-column [min, max] aggregated across row groups — the record an
-    Iceberg manifest entry carries (lower_bounds/upper_bounds). Reading is
-    footer-only (O(KB) per file, no data pages). On a cluster the writer
-    tasks would report these with the commit message; the stand-in reads
-    the footer at commit time, which is still O(#new files) metadata I/O.
-    parquet-mr truncates long binary stats but keeps them valid bounds, so
-    pruning against them stays conservative."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(abspath).metadata
-    cols = [md.schema.column(i) for i in range(md.num_columns)]
-    names = [c.name for c in cols]
-    # pyarrow can't logically cast DECIMAL stats (raises); decode the raw
-    # unscaled representation (INT64 or big-endian FLBA) ourselves
-    dec_scale = {
-        c.name: c.scale for c in cols if c.logical_type.type == "DECIMAL"
-    }
-
-    def _decode_raw_decimal(raw, scale: int) -> decimal.Decimal:
-        unscaled = (
-            int.from_bytes(raw, "big", signed=True) if isinstance(raw, bytes) else raw
-        )
-        return decimal.Decimal(unscaled).scaleb(-scale)
-
-    mins: dict = {}
-    maxs: dict = {}
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        for i, name in enumerate(names):
-            try:
-                st = rg.column(i).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError("no stats")
-                if name in dec_scale:
-                    lo = _stat_encode(_decode_raw_decimal(st.min_raw, dec_scale[name]))
-                    hi = _stat_encode(_decode_raw_decimal(st.max_raw, dec_scale[name]))
-                else:
-                    lo, hi = _stat_encode(st.min), _stat_encode(st.max)
-            except Exception:  # stats not extractable for this physical type
-                mins[name] = maxs[name] = None
-                continue
-            if lo is None or hi is None or name in mins and mins[name] is None:
-                mins[name] = maxs[name] = None
-                continue
-            if name not in mins:
-                mins[name], maxs[name] = lo, hi
-            else:
-                mins[name] = min(mins[name], lo, key=_stat_decode_key)
-                maxs[name] = max(maxs[name], hi, key=_stat_decode_key)
-    stats = {
-        n: [mins[n], maxs[n]] for n in names if mins.get(n) is not None
-    }
-    return {
-        "rows": md.num_rows,
-        "bytes": os.path.getsize(abspath),
-        "stats": stats,
-    }
-
-
-def _stat_decode_key(v):
-    return _stat_decode(v)
-
-
-_VALUE_SET_CAP = 64
-
-
-def _file_value_sets(abspath: str, cols: list[str], cap: int = _VALUE_SET_CAP) -> dict:
-    """Per-file distinct-value sets for declared low-cardinality STRING
-    or INTEGER columns (table property ``write.value-set-columns``) —
-    the pruning complement to min/max bounds. Lexicographic [min,max]
-    ranges over codes like src1/src10/src2 span nearly the whole domain,
-    and hash-scattered integer ids (an IVF index's list_id after a hash
-    repartition) span it numerically — equality predicates can't prune
-    on bounds; the exact value set can. Columns exceeding ``cap``
-    distincts record no set (falls back to bounds). Integer sets store
-    native JSON ints; the probe side compares in the int domain (a
-    string literal never matches an int set, and vice versa). Mirrors
-    what a writer task would report alongside its footer stats on a
-    cluster; the stand-in reads just the listed columns of each NEW file
-    at commit time (column-pruned, dictionary-encoded — O(file's
-    distinct values), not a data scan of the table)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    import pyarrow.types as pat
-
-    sch = pq.read_schema(abspath)
-    want = [
-        c for c in cols
-        if c in sch.names
-        and (sch.field(c).type == "string"
-             or sch.field(c).type == "large_string"
-             or pat.is_integer(sch.field(c).type))
-    ]
-    if not want:
-        return {}
-    tbl = pq.read_table(abspath, columns=want)
-    out = {}
-    for c in want:
-        uniq = pc.unique(tbl.column(c).combine_chunks()).drop_null().to_pylist()
-        if 0 < len(uniq) <= cap:
-            out[c] = sorted(uniq)
-    return out
-
-
-_BLOOM_BITS = 2048   # 256 B/column/file in the manifest — negligible
-_BLOOM_K = 4         # legacy hash count (r6 manifests; kept for reads)
-# v2 bloom parameters, sized for IN-LIST probing: a micro-batch state
-# probe tests THOUSANDS of keys per file, so the per-key FPR must be
-# << 1/|probe| or false positives keep every file (measured: at 10
-# bits/key + k=4 a 3,300-key probe kept 97% of state files — the probe
-# pruned nothing). At 32 bits/key + k=20 the per-key FPR is ~2e-7, so
-# even a 10k-key probe keeps a non-colliding file with p < 1%. Probe
-# cost stays O(1) per miss (the all() early-exits after ~2 bit tests at
-# 0.46 fill); write cost is 20 cheap double-hash positions per value.
-_BLOOM_BITS_PER_VALUE = 32
-_BLOOM_K_V2 = 20
-
-
-def _bloom_canon(value) -> str | None:
-    """Canonical hash input for a bloomable value. Strings and integers
-    only: their textual form is identical on the write side (pyarrow
-    python values) and the predicate side (SQL literal), so both hash
-    alike. Floats/timestamps are excluded — representation drift between
-    writer and predicate would silently break membership."""
-    if isinstance(value, str):
-        return value
-    if isinstance(value, int) and not isinstance(value, bool):
-        return str(value)
-    return None
-
-
-def _bloom_positions(value, m: int = _BLOOM_BITS, k: int = _BLOOM_K):
-    """k bit positions via Kirsch–Mitzenmacher double hashing over one
-    blake2b digest (deterministic across processes — unlike hash()).
-    Memoized on (canonical value, m, k): IN-list pruning re-tests every
-    probe key against EVERY candidate file's bloom, and re-digesting
-    per (file × member) pair would serialize millions of driver-side
-    hashes per planning call."""
-    s = _bloom_canon(value)
-    if s is None:
-        return None
-    return list(_bloom_positions_cached(s, m, k))
-
-
-@functools.lru_cache(maxsize=1 << 17)
-def _bloom_positions_cached(s: str, m: int, k: int) -> tuple:
-    import hashlib
-
-    d = hashlib.blake2b(s.encode("utf-8"), digest_size=16).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little") | 1
-    return tuple((h1 + i * h2) % m for i in range(k))
-
-
-def _file_blooms(abspath: str, cols: list[str]) -> dict:
-    """Per-file bloom filters for declared HIGH-cardinality columns
-    (table property ``write.bloom-columns``) — equality pruning where
-    both min/max bounds (wide lexicographic ranges) and value sets
-    (capped at {cap} distincts) give up. This is Iceberg/Parquet's
-    bloom-filter role (write.parquet.bloom-filter-enabled.column.*):
-    a writer task computes it alongside footer stats; the stand-in
-    reads just the listed columns of each NEW file at commit time.
-    Stored as a hex bitmap; absence of the value's k bits PROVES the
-    file holds no matching row (false positives only cost a read).
-    """.format(cap=_VALUE_SET_CAP)
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    import pyarrow.types as pat
-
-    sch = pq.read_schema(abspath)
-    want = [
-        c for c in cols
-        if c in sch.names
-        and (pat.is_string(sch.field(c).type)
-             or pat.is_large_string(sch.field(c).type)
-             or pat.is_integer(sch.field(c).type))
-    ]
-    if not want:
-        return {}
-    tbl = pq.read_table(abspath, columns=want)
-    out = {}
-    for c in want:
-        uniq = pc.unique(tbl.column(c).combine_chunks()).drop_null().to_pylist()
-        # size the filter to the file's actual distinct count at
-        # _BLOOM_BITS_PER_VALUE (IN-probe-grade FPR — see the constant's
-        # note): a fixed 2048-bit filter saturates (all-ones, prunes
-        # nothing) on files with thousands of distincts — e.g. LSH
-        # bucket-state files at 16 keys/doc. Cap at 2^21 bits = 256 KB
-        # of hex worst-case in the manifest per file/column (full
-        # strength to ~65k distincts; beyond that the filter degrades
-        # gracefully toward keep-everything rather than bloating every
-        # snapshot read — files that large should be clustered or
-        # served from the hot store anyway).
-        m = _BLOOM_BITS
-        while m < _BLOOM_BITS_PER_VALUE * len(uniq) and m < (1 << 21):
-            m *= 2
-        # accumulate in a bytearray: setting a bit in a Python big int
-        # copies the whole integer (O(m) per bit — tens of GB of memcpy
-        # for a 2^20-bit filter over a 60k-distinct state file); the
-        # bytearray write is O(1) per bit, one big-int conversion at end
-        buf = bytearray(m // 8)
-        for v in uniq:
-            pos = _bloom_positions(v, m=m, k=_BLOOM_K_V2)
-            if pos is None:
-                buf = None
-                break
-            for p in pos:
-                buf[p >> 3] |= 1 << (p & 7)
-        bits = int.from_bytes(bytes(buf), "little") if buf is not None else None
-        if bits:
-            # manifest forms, all readable: bare hex (r5: m=2048, k=4),
-            # {m, bits} (r6: adaptive m, k=4), {m, k, bits} (current)
-            out[c] = {"m": m, "k": _BLOOM_K_V2, "bits": f"{bits:x}"}
-    return out
-
-
-@functools.lru_cache(maxsize=64)
-def _bloom_hex_cached(bloom_hex: str) -> bytes:
-    """Parse a manifest bloom bitmap once per distinct filter, as
-    little-endian bytes. An IN-list probe calls ``_file_may_match`` once
-    per (file × member); re-parsing a 2^20-bit filter's ~262K-char hex
-    per member is O(keys × m) driver time where O(keys + m) is
-    available — and even on a parsed big int, ``(bits >> p) & 1`` copies
-    O(p) words per test, so membership reads index bytes instead.
-    CPython memoizes str hashes, so cache hits cost O(1) after a
-    string's first lookup. maxsize bounds driver memory, not hit rate:
-    an adaptive 2^20-bit filter pins ~131KB of parsed bytes plus its
-    ~262KB hex key per entry, so 64 entries cap the cache at ~25MB
-    (1024 would allow ~400MB); a probe touches one bloom per
-    (file, column), so 64 covers any realistic per-query working set."""
-    v = int(bloom_hex, 16)
-    return v.to_bytes((v.bit_length() + 7) // 8, "little")
-
-
-def _file_may_match(meta: dict | None, col: str, op: str, lit) -> bool:
-    """Conservative file-skip test: False only when the footer min/max
-    range PROVES no row can satisfy ``col op lit``. Files with no stats
-    for the column (all-null, unsupported type, pre-stats snapshot) are
-    kept. NULL rows never satisfy a comparison predicate, so ignoring
-    them (as parquet stats do) is sound. ``op == "in"`` (iterable
-    literal) keeps the file iff ANY member may match — the IN-list
-    pushdown an LSH bucket-state probe needs."""
-    if op == "in":
-        return any(_file_may_match(meta, col, "=", v) for v in lit)
-    vset = (meta or {}).get("value_sets", {}).get(col)
-    if (
-        vset is not None
-        and op == "="
-        and isinstance(lit, (str, int))
-        and not isinstance(lit, bool)
-    ):
-        # exact membership beats range bounds; compare in the set's own
-        # domain (JSON round-trips str and int losslessly, never mixes)
-        if lit in vset:
-            return True
-        # a miss is definitive only when the literal lives in the set's
-        # domain: Spark's row filter cast-coerces a type-mismatched
-        # literal ('5' vs an int column) and can still match rows the
-        # typed membership test rejects — fall through to bounds/bloom
-        # (keep-conservative) then. One element decides: a set built
-        # from a single parquet column is type-homogeneous. An empty
-        # set (all-null file) stays definitive — NULL never compares.
-        if not vset or type(next(iter(vset))) is type(lit):
-            return False
-    bloom = (meta or {}).get("blooms", {}).get(col)
-    if bloom is not None and op == "=":
-        if isinstance(bloom, dict):  # adaptive-size form
-            # k absent = r6 vintage (k=4); present = current (k=20)
-            m, k, bloom_hex = (
-                int(bloom["m"]), int(bloom.get("k", _BLOOM_K)), bloom["bits"]
-            )
-        else:  # legacy bare-hex form
-            m, k, bloom_hex = _BLOOM_BITS, _BLOOM_K, bloom
-        pos = _bloom_positions(lit, m=m, k=k)
-        if pos is not None:
-            buf = _bloom_hex_cached(bloom_hex)
-            if not all(
-                p >> 3 < len(buf) and buf[p >> 3] & (1 << (p & 7))
-                for p in pos
-            ):
-                return False  # definitive: value not in this file
-            # bloom says "maybe" — bounds below may still prune
-    stats = (meta or {}).get("stats", {}).get(col)
-    if not stats:
-        return True
-    lo, hi = _stat_decode(stats[0]), _stat_decode(stats[1])
-    v = _stat_canon(lit)
-    try:
-        if _bounds_may_match(lo, hi, v, op):
-            return True
-    except TypeError:
-        return True  # incomparable literal/stat types — never prune
-    # Mixed numeric representations (float literal vs decimal bounds or
-    # vice versa): Python compares them EXACTLY, but the engines compare
-    # after casting decimal→double. Re-check in the double domain so
-    # boundary values stay conservative under BOTH semantics.
-    numeric = (int, float, decimal.Decimal)
-    if isinstance(v, numeric) and isinstance(lo, numeric):
-        try:
-            return _bounds_may_match(float(lo), float(hi), float(v), op)
-        except (TypeError, OverflowError):
-            return True
-    return False
-
-
-def _bounds_may_match(lo, hi, v, op: str) -> bool:
-    if op == "=":
-        return bool(lo <= v <= hi)
-    if op == "<":
-        return bool(lo < v)
-    if op == "<=":
-        return bool(lo <= v)
-    if op == ">":
-        return bool(hi > v)
-    if op == ">=":
-        return bool(hi >= v)
-    raise ValueError(f"unsupported scan predicate op: {op!r}")
 
 
 # ---------- hidden partitioning (the Iceberg partition-spec role) ----------
@@ -508,110 +148,6 @@ def _partition_expr(p: dict) -> F.Column:
     return F.date_format(c, "yyyy-MM-dd-HH")  # hours
 
 
-def _partition_canon(p: dict, lit):
-    """Map a predicate literal into the same domain ``_partition_expr``
-    writes, so file partition values compare correctly against it.
-    Returns None when the literal can't be mapped (→ no pruning)."""
-    t = p["transform"]
-    if t == "identity":
-        # date partition dirs are written as ISO strings
-        if isinstance(lit, datetime.date) and not isinstance(lit, datetime.datetime):
-            return lit.isoformat()
-        return lit
-    if isinstance(lit, str):
-        try:
-            lit = datetime.datetime.fromisoformat(lit)
-        except ValueError:
-            return None
-    if isinstance(lit, datetime.datetime):
-        dt = lit
-    elif isinstance(lit, datetime.date):
-        dt = datetime.datetime(lit.year, lit.month, lit.day)
-    else:
-        return None
-    if t == "years":
-        return dt.year
-    if t == "months":
-        return f"{dt.year:04d}-{dt.month:02d}"
-    if t == "days":
-        return dt.date().isoformat()
-    return f"{dt.year:04d}-{dt.month:02d}-{dt.day:02d}-{dt.hour:02d}"  # hours
-
-
-def _parse_partition_path_value(raw: str):
-    """Decode one ``name=value`` directory component value the way Spark
-    wrote it (URL-escaped; __HIVE_DEFAULT_PARTITION__ for null)."""
-    import urllib.parse
-
-    v = urllib.parse.unquote(raw)
-    if v == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    try:
-        return int(v)
-    except ValueError:
-        return v
-
-
-def _partition_may_match(pvals: dict | None, spec: list[dict], col: str, op: str, lit) -> bool:
-    """Conservative partition pruning: False only when the file's
-    recorded partition value PROVES no row satisfies ``col op lit``.
-    Sound because every transform is monotonic: x < lit ⟹
-    t(x) <= t(lit), x > lit ⟹ t(x) >= t(lit), x = lit ⟹ t(x) = t(lit)."""
-    if not pvals:
-        return True
-    if op == "in":
-        return any(_partition_may_match(pvals, spec, col, "=", v) for v in lit)
-    for p in spec:
-        if p["col"] != col or p["name"] not in pvals:
-            continue
-        pv = pvals[p["name"]]
-        if pv is None:  # null partition: comparison predicates never match
-            return False
-        tl = _partition_canon(p, lit)
-        if tl is None or type(pv) is not type(tl):
-            continue  # un-mappable literal — leave pruning to footer stats
-        if op == "=" and pv != tl:
-            return False
-        if op in ("<", "<=") and pv > tl:
-            return False
-        if op in (">", ">=") and pv < tl:
-            return False
-    return True
-
-
-_FILE_SEQ_RE = re.compile(r"data/s(\d+)/")
-
-
-def _file_seq(relpath: str) -> int:
-    """Write-sequence of a data file = the snapshot id in its path
-    (data/s{N}/...) — the Iceberg data-sequence-number role that scopes
-    equality deletes to files written BEFORE the delete."""
-    m = _FILE_SEQ_RE.match(relpath)
-    return int(m.group(1)) if m else -1
-
-
-def _bucket_of_path(relpath: str) -> int | None:
-    for part in relpath.split(os.sep):
-        if part.startswith("__bucket="):
-            return int(part.split("=", 1)[1])
-    return None
-
-
-def _eq_delete_buckets(meta: dict, files) -> set[int]:
-    """Buckets where the equality delete ``meta`` still hides rows: those
-    it recorded hides for that hold a file written before the delete's
-    sequence (a bucket rewrite materializes the delete there, making it
-    inert)."""
-    seq, hides = meta.get("seq", -1), meta.get("hides", {})
-    out = set()
-    for f in files:
-        if _file_seq(f) < seq:
-            b = _bucket_of_path(f)
-            if str(b) in hides:
-                out.add(b)
-    return out
-
-
 def _where_filter(where: list[tuple]) -> F.Column:
     """The Spark filter for a scan predicate — always applied to the
     scanned rows, so results are independent of how well pruning did."""
@@ -632,79 +168,18 @@ def _where_filter(where: list[tuple]) -> F.Column:
     return cond
 
 
-@dataclass
-class Snapshot:
-    snapshot_id: int
-    committed_at_ms: int
-    operation: str  # append | merge | overwrite | tier
-    files: list[str]  # table-relative data file paths
-    total_rows: int
-    added_rows: int
-    hot_watermark: int  # highest hot batch id tiered into this snapshot
-    summary: dict
-    # per-file {"rows", "bytes", "stats": {col: [min, max]}} — the
-    # manifest-entry record backing file skipping and the $files table
-    file_meta: dict = field(default_factory=dict)
-    # schema at commit time (StructType.jsonValue) + {name: field_id} —
-    # what makes time travel read each snapshot under ITS schema after
-    # later RENAME/DROP COLUMN evolution (Iceberg's schema-id role).
-    # None on legacy snapshots → reads fall back to the current schema.
-    schema_json: dict | None = None
-    field_ids: dict | None = None
-    # merge-on-read position deletes (the Iceberg v2 delete-file role):
-    # table-relative paths of parquet files holding (__file, __pos)
-    # tombstones, plus per-delete-file metadata
-    # {"rows": n, "files": {data_relpath: n_positions}} so live-row
-    # accounting and pruning stay metadata-only. Entries referencing a
-    # data file absent from ``files`` are inert (the file was rewritten
-    # or dropped), which is what lets delete files carry forward
-    # unchanged across copy-on-write commits.
-    delete_files: list = field(default_factory=list)
-    delete_meta: dict = field(default_factory=dict)
-    # id of the snapshot this one chained from (-1 = first commit on an
-    # empty table, None = legacy snapshot written before lineage existed).
-    # What makes fast_forward's ancestry check possible (Iceberg's
-    # parent-snapshot-id role).
-    parent_id: int | None = None
-
-    def to_json(self) -> str:
-        return json.dumps(self.__dict__)
-
-    @staticmethod
-    def from_json(s: str) -> "Snapshot":
-        d = json.loads(s)
-        d.setdefault("file_meta", {})
-        d.setdefault("schema_json", None)
-        d.setdefault("field_ids", None)
-        d.setdefault("delete_files", [])
-        d.setdefault("delete_meta", {})
-        d.setdefault("parent_id", None)
-        return Snapshot(**d)
-
-    def active_delete_count(self, files: list[str] | None = None) -> int:
-        """Number of tombstoned rows hidden by delete files still active
-        against files present in this snapshot (or the given list) —
-        metadata-only. Position deletes count per referenced file;
-        equality deletes count their per-bucket exact hide counts while
-        that bucket still holds any file older than the delete's
-        sequence (a bucket rewrite materializes them, making the entry
-        inert there)."""
-        present = set(self.files if files is None else files)
-        total = 0
-        for d in self.delete_files:
-            meta = self.delete_meta.get(d) or {}
-            if meta.get("kind") == "equality":
-                total += sum(
-                    meta["hides"][str(b)]
-                    for b in _eq_delete_buckets(meta, present)
-                )
-            else:
-                total += sum(
-                    n
-                    for f, n in meta.get("files", {}).items()
-                    if f in present
-                )
-        return total
+def _shown_parent(s: Snapshot, retained: set[int]) -> int | None:
+    """The parent a metadata table shows for snapshot ``s``: its recorded
+    lineage (branch commits don't chain from id-1); legacy snapshots fall
+    back to the id-adjacency heuristic. Expired parents display as None,
+    matching Iceberg's $snapshots."""
+    if s.parent_id is not None:
+        return s.parent_id if s.parent_id in retained else None
+    return (
+        s.snapshot_id - 1
+        if s.snapshot_id > 0 and s.snapshot_id - 1 in retained
+        else None
+    )
 
 
 class LakeTable:
@@ -992,36 +467,43 @@ class LakeTable:
             )
         return max(cands)
 
+    # operations that move existing rows into a new file list without
+    # adding any: their new files record no added rows
+    _NO_ADDED_ROWS = ("compact", "rollback")
+
     def _commit(
         self,
         operation: str,
+        parent: Snapshot | None,
         files: list[str],
-        total_rows: int,
-        added_rows: int,
         hot_watermark: int | None = None,
         summary: dict | None = None,
-        expected_version: int | None = None,
         delete_files: list | None = None,
         delete_meta: dict | None = None,
     ) -> Snapshot:
-        """``total_rows`` is on the FOOTER basis (sum of data-file row
-        counts); _commit deducts active merge-on-read tombstones itself so
-        the snapshot's recorded total is always LIVE rows — one place owns
-        that arithmetic. ``delete_files=None`` inherits the parent's
-        delete files, dropping any whose every referenced data file has
-        left the new file list (fully inert after a rewrite)."""
+        """Commit ``files`` as the next snapshot on top of ``parent`` — the
+        snapshot the caller computed the file list from (None: the empty
+        table). It publishes only while the active ref still points at
+        ``parent``, else raises CommitConflictError: a change computed
+        from snapshot N never lands on a concurrent N+1 and undoes it.
+
+        Row counts come from the manifest: ``total_rows`` is the footer
+        rows of ``files`` less the tombstones still active against them,
+        ``added_rows`` the footer rows of the files ``parent`` lacks
+        (none for ``_NO_ADDED_ROWS``). ``delete_files=None`` inherits the
+        parent's delete files that still apply to ``files``."""
         if self._txn is not None and self.write_branch:
             raise ValueError(
                 "transactions do not combine with branch writes "
                 "(on_branch inside a CatalogTransaction)"
             )
-        base = self._head()
-        if expected_version is not None and expected_version != base:
+        base = parent.snapshot_id if parent is not None else -1
+        head = self._head()
+        if head != base:
             raise CommitConflictError(
-                f"commit based on stale version {expected_version}; "
-                f"current is {base}"
+                f"concurrent commit advanced {self.name} to v{head} "
+                f"(this commit was based on v{base})"
             )
-        parent = self.snapshot()
         version = self._next_version()
         # A caller (tier(), the streaming pipeline) may ask the *next*
         # commit to carry extra state — watermark advance, idempotence
@@ -1035,62 +517,27 @@ class LakeTable:
             if hot_watermark is None:
                 hot_watermark = extra.get("hot_watermark")
             summary = {**(summary or {}), **extra.get("summary", {})}
-        # manifest stats: unchanged files carry their entry forward; only
-        # files new to this snapshot get a footer scan (O(#added files))
+        # unchanged files carry their manifest entry forward; only files
+        # new to this snapshot get one built (O(#added files))
         prev_meta = parent.file_meta if parent else {}
         file_meta = {}
         for f in files:
             m = prev_meta.get(f)
-            if m is None:
-                m = _file_column_stats(os.path.join(self.path, f))
-                if self.partition_spec:
-                    m["partition"] = self._partition_values_from_path(f)
-                vcols = self.properties.get("write.value-set-columns")
-                if vcols:
-                    vs = _file_value_sets(
-                        os.path.join(self.path, f),
-                        [c.strip() for c in vcols.split(",") if c.strip()],
-                    )
-                    if vs:
-                        m["value_sets"] = vs
-                bcols = self.properties.get("write.bloom-columns")
-                if bcols:
-                    bl = _file_blooms(
-                        os.path.join(self.path, f),
-                        [c.strip() for c in bcols.split(",") if c.strip()],
-                    )
-                    if bl:
-                        m["blooms"] = bl
-            file_meta[f] = m
+            file_meta[f] = m if m is not None else manifest.file_entry(
+                self.path, f, self.properties, bool(self.partition_spec)
+            )
         if delete_files is None:
-            files_set = set(files)
-
-            def _still_active(d: str) -> bool:
-                meta = (parent.delete_meta or {}).get(d) or {}
-                if meta.get("kind") == "equality":
-                    return bool(_eq_delete_buckets(meta, files_set))
-                return any(f in files_set for f in meta.get("files", {}))
-
-            delete_files = [
-                d for d in (parent.delete_files if parent else [])
-                if _still_active(d)
-            ]
-            delete_meta = {
-                d: (parent.delete_meta or {}).get(d, {}) for d in delete_files
-            }
-        probe = Snapshot(
-            snapshot_id=-1, committed_at_ms=0, operation="", files=files,
-            total_rows=0, added_rows=0, hot_watermark=-1, summary={},
-            delete_files=delete_files, delete_meta=delete_meta or {},
-        )
-        total_rows -= probe.active_delete_count()
+            inherited = parent.active_deletes(files) if parent else []
+            delete_files = [d for d, _ in inherited]
+            delete_meta = dict(inherited)
+        prev_files = set(parent.files) if parent else set()
         snap = Snapshot(
             snapshot_id=version,
             committed_at_ms=int(time.time() * 1000),
             operation=operation,
             files=files,
-            total_rows=total_rows,
-            added_rows=added_rows,
+            total_rows=0,
+            added_rows=0,
             schema_json=self.schema.jsonValue(),
             field_ids=dict(self.field_ids),
             hot_watermark=(
@@ -1102,8 +549,15 @@ class LakeTable:
             file_meta=file_meta,
             delete_files=delete_files,
             delete_meta=delete_meta or {},
-            parent_id=(parent.snapshot_id if parent else -1),
+            parent_id=base,
         )
+        snap.total_rows = (
+            sum(file_meta[f]["rows"] for f in files) - snap.active_delete_count()
+        )
+        if operation not in self._NO_ADDED_ROWS:
+            snap.added_rows = sum(
+                file_meta[f]["rows"] for f in files if f not in prev_files
+            )
         # physical CAS: exclusive-create the snapshot file BEFORE flipping
         # the VERSION pointer — a racing same-version writer raises
         # CommitConflictError here and the table stays consistent at base.
@@ -1155,46 +609,51 @@ class LakeTable:
                 )
             self._txn.stage(self, cur, version)
             return snap
-        if self.write_branch:
-            # branch commit: advance the branch ref, main stays put (WAP)
-            refs = self._refs()
-            refs["branches"][self.write_branch] = version
-            try:
-                self._write_refs(refs)
-            except OSError:
-                os.remove(snap_path)  # never published: leave no snapshot
-                raise
-        else:
-            # pointer CAS: snapshot ids skip past orphan files (crash
-            # debris must not wedge the table), so same-base racers may
-            # pick DIFFERENT ids — exclusive-create alone no longer
-            # serializes them. Re-check the pointer before flipping
-            # UNDER the catalog commit lock: exactly one same-base
-            # writer wins, the loser removes its unpublished snapshot
-            # and raises (the Iceberg catalog compare-and-swap).
-            #
-            # A warehouse that opted into a REST catalog facade
-            # (_catalog.json "rest-catalog") instead POSTs the CAS to
-            # the catalog SERVICE — the real deployment topology, where
-            # writers never touch the pointer themselves (multi-table
-            # txn publishes route through the facade's
-            # /v1/transactions/commit; WAP fast_forward keeps its
-            # direct lock-held flip; the facade takes the same section,
-            # so all entry points serialize against each other).
-            if rest_endpoint:
-                self._cas_via_rest(rest_endpoint, base, version, extra)
+        # A warehouse that opted into a REST catalog facade
+        # (_catalog.json "rest-catalog") POSTs the pointer CAS to the
+        # catalog SERVICE — the real deployment topology, where writers
+        # never touch the pointer themselves (multi-table txn publishes
+        # route through the facade's /v1/transactions/commit; branch
+        # commits and WAP fast_forward keep their direct lock-held
+        # writes; the facade takes the same section, so all entry points
+        # serialize against each other).
+        if rest_endpoint:
+            self._cas_via_rest(rest_endpoint, base, version, extra)
+            return snap
+        # ref CAS: snapshot ids skip past orphan files (crash debris must
+        # not wedge the table), so same-base racers may pick DIFFERENT
+        # ids — exclusive-create alone does not serialize them. The ref
+        # is re-checked and moved UNDER the catalog commit section:
+        # exactly one same-base writer wins (the Iceberg catalog
+        # compare-and-swap). The ref move is the commit point: a loser,
+        # or a failure up to it, removes the unpublished snapshot, so
+        # time travel never finds it either.
+        try:
+            if self.write_branch:
+                self._publish_branch_head(base, version)
             else:
-                try:
-                    commit.publish_pointer(self.path, base, version)
-                except (CommitConflictError, OSError):
-                    # the pointer flip is the commit point: a failure up
-                    # to it publishes nothing, so time travel must not
-                    # find the snapshot either
-                    os.remove(snap_path)
-                    if extra:
-                        self._pending_commit_extra = extra
-                    raise
+                commit.publish_pointer(self.path, base, version)
+        except (CommitConflictError, OSError):
+            os.remove(snap_path)
+            if extra:
+                self._pending_commit_extra = extra
+            raise
         return snap
+
+    def _publish_branch_head(self, expected: int, version: int) -> None:
+        """Move the write branch's head ``expected`` → ``version`` in
+        refs.json under the commit section (WAP: main stays put)."""
+        with commit.commit_section(commit.warehouse_of(self.path)):
+            refs = self._refs()
+            head = refs["branches"].get(self.write_branch, -1)
+            if head != expected:
+                raise CommitConflictError(
+                    f"concurrent commit advanced branch {self.write_branch!r} "
+                    f"of {self.name} to v{head} (this commit was based on "
+                    f"v{expected})"
+                )
+            refs["branches"][self.write_branch] = version
+            self._write_refs(refs)
 
     def _cas_via_rest(
         self, endpoint: str, base: int, version: int, extra: dict | None
@@ -1454,15 +913,7 @@ class LakeTable:
                     .mode("overwrite")
                     .parquet(out)
                 )
-            files = []
-            for b in os.listdir(out):
-                if b.startswith("__bucket="):
-                    files += [
-                        os.path.join(rel, b, f)
-                        for f in os.listdir(os.path.join(out, b))
-                        if f.endswith(".parquet")
-                    ]
-            return sorted(files)
+            return manifest.written_files(self.path, rel)
         order = self._write_order_cols()
         if self.partition_spec:
             # Hidden partitioning: the derived value names the directory;
@@ -1485,14 +936,7 @@ class LakeTable:
                 pdf = pdf.sortWithinPartitions(*pnames, *order)
             with self._micros_timestamps():
                 self._writer(pdf).partitionBy(*pnames).mode("overwrite").parquet(out)
-            files = []
-            for root, _dirs, fnames in os.walk(out):
-                for fn in fnames:
-                    if fn.endswith(".parquet"):
-                        files.append(
-                            os.path.relpath(os.path.join(root, fn), self.path)
-                        )
-            return sorted(files)
+            return manifest.written_files(self.path, rel)
         if order:
             # range-cluster every append on the declared sort order (the
             # Iceberg write.sort-order role): files get near-disjoint
@@ -1509,7 +953,7 @@ class LakeTable:
             ).sortWithinPartitions(*order)
         with self._micros_timestamps():
             self._writer(df).mode("overwrite").parquet(out)
-        return [os.path.join(rel, os.path.basename(f)) for f in _list_parquet(out)]
+        return manifest.written_files(self.path, rel)
 
     def _write_order_cols(self) -> list[str]:
         """Columns of the ``write.sort-order`` table property (log tables;
@@ -1525,18 +969,6 @@ class LakeTable:
                     f"{self.name}: write.sort-order column {c!r} not in schema"
                 )
         return cols
-
-    def _partition_values_from_path(self, relpath: str) -> dict:
-        """Manifest partition record for one data file, parsed from its
-        ``__p_<name>=<value>`` directory components (the writer's
-        directory layout IS the authoritative value — every row in the
-        file shares it by construction)."""
-        vals: dict = {}
-        for comp in relpath.split(os.sep)[:-1]:
-            if comp.startswith("__p_") and "=" in comp:
-                k, _, raw = comp[4:].partition("=")
-                vals[k] = _parse_partition_path_value(raw)
-        return vals
 
     _CLUSTER_SPEC_RE = re.compile(
         r"^(?:(?:day|hour|month|year)\s*\(\s*(\w+)\s*\)|(\w+))$"
@@ -1614,14 +1046,8 @@ class LakeTable:
             df = df.sortWithinPartitions(ccol)
         version = self._next_version()
         files = self._write_files(df, version, bucketed=False)
-        added = self._rows_in(files)
         parent = self.snapshot()
-        all_files = (parent.files if parent else []) + files
-        # footer basis: _commit re-deducts active tombstones itself
-        prev = (
-            parent.total_rows + parent.active_delete_count() if parent else 0
-        )
-        return self._commit("append", all_files, prev + added, added)
+        return self._commit("append", parent, (parent.files if parent else []) + files)
 
     def _check_rewrite_allowed(self, op: str) -> None:
         """Log-table rewrites (compact/overwrite) re-emit existing rows to
@@ -1643,8 +1069,7 @@ class LakeTable:
         df = self._enforce_not_null(self._prepare(df))
         version = self._next_version()
         files = self._write_files(df, version, bucketed=bool(self.primary_key))
-        n = self._rows_in(files)
-        return self._commit("overwrite", files, n, n)
+        return self._commit("overwrite", self.snapshot(), files)
 
     def merge(self, updates: DataFrame, deletes: DataFrame | None = None) -> Snapshot:
         """PK-upsert (MERGE): last write per key wins (ST4, README.md:247-250).
@@ -1732,17 +1157,13 @@ class LakeTable:
 
         if parent is None or not parent.files:
             files = self._write_files(updates, version, bucketed=True)
-            n = self._rows_in(files)
-            return self._commit("merge", files, n, n, summary={"touched_buckets": touched})
+            return self._commit(
+                "merge", parent, files, summary={"touched_buckets": touched}
+            )
 
         # split parent files into touched vs untouched buckets
-        def bucket_of(relpath: str) -> int | None:
-            for part in relpath.split(os.sep):
-                if part.startswith("__bucket="):
-                    return int(part.split("=", 1)[1])
-            return None
-
         touched_set = set(touched)
+        bucket_of = manifest._bucket_of_path
         keep_files = [f for f in parent.files if bucket_of(f) not in touched_set]
         old_touched = [f for f in parent.files if bucket_of(f) in touched_set]
 
@@ -1778,23 +1199,9 @@ class LakeTable:
                 .mode("overwrite")
                 .parquet(out)
             )
-        new_files = []
-        for b in os.listdir(out):
-            if b.startswith("__bucket="):
-                new_files += [
-                    os.path.join(rel, b, f)
-                    for f in os.listdir(os.path.join(out, b))
-                    if f.endswith(".parquet")
-                ]
-        files = sorted(keep_files + new_files)
-        # footer-basis total in O(touched) footers, not O(table): the
-        # untouched files' counts are already in the parent's footer total
-        # (r13 — a merge on a wide table must not re-open every footer)
-        added = self._rows_in(new_files)
-        prev_footer = parent.total_rows + parent.active_delete_count()
-        total = prev_footer - self._rows_in(old_touched) + added
+        files = sorted(keep_files + manifest.written_files(self.path, rel))
         return self._commit(
-            "merge", files, total, added, summary={"touched_buckets": touched}
+            "merge", parent, files, summary={"touched_buckets": touched}
         )
 
     def delete(self, where: list[tuple]) -> Snapshot:
@@ -1853,23 +1260,20 @@ class LakeTable:
     def _delete_by_key_inner(self, keys: DataFrame, snap) -> Snapshot:
         if snap is None or not snap.files:
             return self._commit(
-                "delete", [], 0, 0, summary={"mode": "equality", "hidden_rows": 0}
+                "delete", snap, [], summary={"mode": "equality", "hidden_rows": 0}
             )
-        footer_total = snap.total_rows + snap.active_delete_count()
         version = self._next_version()
         # bucket routing: only buckets holding a delete key can hide rows
         keyed = keys.withColumn("__bucket", self._bucket_col())
         buckets = {
             r["__bucket"] for r in keyed.select("__bucket").distinct().collect()
         }
-        touched = [f for f in snap.files if _bucket_of_path(f) in buckets]
+        touched = [f for f in snap.files if manifest._bucket_of_path(f) in buckets]
         rel_dir = f"deletes/s{version}"
-        out = os.path.join(self.path, rel_dir)
-        keys.coalesce(1).write.mode("overwrite").parquet(out)
-        new_del = [
-            os.path.join(rel_dir, os.path.basename(p))
-            for p in _list_parquet(out)
-        ]
+        keys.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(self.path, rel_dir)
+        )
+        new_del = manifest.written_files(self.path, rel_dir)
         # exact per-bucket hide counts: semi-join LIVE rows of touched
         # buckets against the keys (bounded by the key set's buckets)
         if touched:
@@ -1910,9 +1314,8 @@ class LakeTable:
         }
         return self._commit(
             "delete",
+            snap,
             list(snap.files),
-            footer_total,
-            0,
             summary={
                 "mode": "equality",
                 "hidden_rows": n_hidden,
@@ -1932,12 +1335,11 @@ class LakeTable:
             raise ValueError(f"{self.name}: delete() requires a predicate")
         snap = self.snapshot()
         if snap is None or not snap.files:
-            return self._commit("delete", [], 0, 0, summary={"files_rewritten": 0})
+            return self._commit("delete", snap, [], summary={"files_rewritten": 0})
         touched = self.plan_scan(where, snapshot=snap)
-        footer_total = snap.total_rows + snap.active_delete_count()
         if not touched:
             return self._commit(
-                "delete", list(snap.files), footer_total, 0,
+                "delete", snap, list(snap.files),
                 summary={"mode": "merge-on-read", "deleted_positions": 0},
             )
         matched = F.coalesce(_where_filter(where), F.lit(False))
@@ -1959,9 +1361,8 @@ class LakeTable:
         }
         return self._commit(
             "delete",
+            snap,
             list(snap.files),
-            footer_total,
-            0,
             summary={
                 "mode": "merge-on-read",
                 "deleted_positions": n_del,
@@ -1996,7 +1397,7 @@ class LakeTable:
             *[os.path.join(self.path, f) for f in files]
         )
         rel = F.regexp_extract(
-            F.col("_metadata.file_path"), r"(data/s\d+/.+)$", 1
+            F.col("_metadata.file_path"), manifest.DATA_RELPATH_PATTERN, 1
         )
         tagged = raw.select(
             *cols,
@@ -2019,10 +1420,7 @@ class LakeTable:
         rel_dir = f"deletes/s{version}"
         out = os.path.join(self.path, rel_dir)
         pos_df.coalesce(1).write.mode("overwrite").parquet(out)
-        new_del = [
-            os.path.join(rel_dir, os.path.basename(p))
-            for p in _list_parquet(out)
-        ]
+        new_del = manifest.written_files(self.path, rel_dir)
         per_file = {
             r["__file"]: r["n"]
             for r in self.spark.read.parquet(out)
@@ -2044,12 +1442,11 @@ class LakeTable:
             raise ValueError(f"{self.name}: update() requires a predicate")
         snap = self.snapshot()
         if snap is None or not snap.files:
-            return self._commit("update", [], 0, 0, summary={"files_rewritten": 0})
+            return self._commit("update", snap, [], summary={"files_rewritten": 0})
         touched = self.plan_scan(where, snapshot=snap)
-        footer_total = snap.total_rows + snap.active_delete_count()
         if not touched:
             return self._commit(
-                "update", list(snap.files), footer_total, 0,
+                "update", snap, list(snap.files),
                 summary={"mode": "merge-on-read", "updated_rows": 0},
             )
         matched = F.coalesce(_where_filter(where), F.lit(False))
@@ -2084,9 +1481,8 @@ class LakeTable:
         }
         return self._commit(
             "update",
+            snap,
             files,
-            footer_total + self._rows_in(new_files),
-            self._rows_in(new_files),
             summary={
                 "mode": "merge-on-read",
                 "updated_rows": n_upd,
@@ -2104,16 +1500,15 @@ class LakeTable:
             raise ValueError(f"{self.name}: {op}() requires a predicate")
         snap = self.snapshot()
         if snap is None or not snap.files:
-            return self._commit(op, [], 0, 0, summary={"files_rewritten": 0})
+            return self._commit(op, snap, [], summary={"files_rewritten": 0})
         touched = self.plan_scan(where, snapshot=snap)
         touched_set = set(touched)
         keep = [f for f in snap.files if f not in touched_set]
         if not touched:
             return self._commit(
                 op,
+                snap,
                 list(snap.files),
-                snap.total_rows + snap.active_delete_count(),
-                0,
                 summary={"files_rewritten": 0, "files_skipped": len(keep)},
             )
         old = self._read_live(
@@ -2140,23 +1535,11 @@ class LakeTable:
         new_files = self._write_files(
             new_df, version, bucketed=bool(self.primary_key)
         )
-        files = sorted(keep + new_files)
-        total = self._rows_in(files)
         return self._commit(
             op,
-            files,
-            total,
-            self._rows_in(new_files),
+            snap,
+            sorted(keep + new_files),
             summary={"files_rewritten": len(touched), "files_skipped": len(keep)},
-        )
-
-    def _rows_in(self, files: list[str]) -> int:
-        """Exact row count from parquet footers — no plan re-execution.
-        (The Iceberg analogue: manifest-recorded record counts.)"""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(os.path.join(self.path, f)).metadata.num_rows for f in files
         )
 
     # ---------- reads ----------
@@ -2215,7 +1598,7 @@ class LakeTable:
         snap = self.snapshot(version)
         if snap is None:
             return self.spark.createDataFrame([], self.schema)
-        files = [f for f in snap.files if _bucket_of_path(f) == bucket]
+        files = [f for f in snap.files if manifest._bucket_of_path(f) == bucket]
         if not files:
             return self.spark.createDataFrame([], self.schema)
         return self._read_live(files, self.schema, self.field_ids, snap)
@@ -2241,21 +1624,17 @@ class LakeTable:
         anti-join then never enters the plan)."""
         if snap is None or not snap.delete_files:
             return None
-        present = set(files)
         hit = [
             d
-            for d in snap.delete_files
-            if any(
-                f in present
-                for f in (snap.delete_meta.get(d) or {}).get("files", {})
-            )
+            for d, meta in snap.active_deletes(files)
+            if meta.get("kind") != "equality"
         ]
         if not hit:
             return None
         return (
             self.spark.read.schema("__file string, __pos long")
             .parquet(*[os.path.join(self.path, d) for d in hit])
-            .filter(F.col("__file").isin(list(present)))
+            .filter(F.col("__file").isin(list(set(files))))
         )
 
     def _eq_deletes_for(
@@ -2266,12 +1645,11 @@ class LakeTable:
         in a bucket the delete recorded hides for)."""
         if snap is None or not snap.delete_files:
             return []
-        out = []
-        for d in snap.delete_files:
-            meta = snap.delete_meta.get(d) or {}
-            if meta.get("kind") == "equality" and _eq_delete_buckets(meta, files):
-                out.append((d, meta))
-        return out
+        return [
+            (d, meta)
+            for d, meta in snap.active_deletes(files)
+            if meta.get("kind") == "equality"
+        ]
 
     def _apply_eq_deletes(
         self, tagged: DataFrame, eqs: list[tuple[str, dict]]
@@ -2291,7 +1669,9 @@ class LakeTable:
             keys = keys.unionByName(kf)
         tagged = tagged.withColumn(
             "__fseq",
-            F.regexp_extract(F.col("__file"), r"data/s(\d+)/", 1).cast("long"),
+            F.regexp_extract(
+                F.col("__file"), manifest.DATA_SEQ_PATTERN, 1
+            ).cast("long"),
         )
         cond = F.col("__fseq") < F.col("__dseq")
         for k in self.primary_key:
@@ -2326,7 +1706,7 @@ class LakeTable:
         # table-relative path from the scan's file metadata: manifests
         # record paths as data/s{N}/..., so extract that suffix
         rel = F.regexp_extract(
-            F.col("_metadata.file_path"), r"(data/s\d+/.+)$", 1
+            F.col("_metadata.file_path"), manifest.DATA_RELPATH_PATTERN, 1
         )
         tagged = raw.select(
             *cols,
@@ -2380,11 +1760,11 @@ class LakeTable:
             f
             for f in snap.files
             if all(
-                _partition_may_match(
+                manifest._partition_may_match(
                     (snap.file_meta.get(f) or {}).get("partition"),
                     self.partition_spec, col, op, lit,
                 )
-                and _file_may_match(snap.file_meta.get(f), col, op, lit)
+                and manifest._file_may_match(snap.file_meta.get(f), col, op, lit)
                 for col, op, lit in where
             )
         ]
@@ -2413,22 +1793,10 @@ class LakeTable:
                 },
                 sort_keys=True,
             )
-            # real lineage when the snapshot recorded it (branch commits
-            # don't chain from id-1); legacy snapshots fall back to the
-            # id-adjacency heuristic. Expired parents display as None,
-            # matching Iceberg's $snapshots.
-            if s.parent_id is not None:
-                shown_parent = s.parent_id if s.parent_id in retained else None
-            else:
-                shown_parent = (
-                    s.snapshot_id - 1
-                    if s.snapshot_id > 0 and s.snapshot_id - 1 in retained
-                    else None
-                )
             rows.append(
                 (
                     s.snapshot_id,
-                    shown_parent,
+                    _shown_parent(s, retained),
                     s.committed_at_ms,
                     s.operation,
                     commit.snapshot_path(self.path, s.snapshot_id),
@@ -2500,15 +1868,7 @@ class LakeTable:
         snap = self.snapshot(version)
         # exact per-file position-tombstone counts (equality deletes are
         # PK-bucket-scoped, and PK tables don't take a partition spec)
-        pos_by_file: dict[str, int] = {}
-        if snap:
-            present = set(snap.files)
-            for d in snap.delete_files:
-                meta = snap.delete_meta.get(d) or {}
-                if meta.get("kind") != "equality":
-                    for f, n in (meta.get("files") or {}).items():
-                        if f in present:
-                            pos_by_file[f] = pos_by_file.get(f, 0) + int(n)
+        pos_by_file = snap.position_tombstones() if snap else {}
         agg: dict[str, dict] = {}
         for f in snap.files if snap else []:
             m = snap.file_meta.get(f) or {}
@@ -2572,19 +1932,17 @@ class LakeTable:
 
     def history(self) -> DataFrame:
         """The ``t$history`` metadata table: the commit log as Iceberg
-        reports it — when each snapshot became current and whether it is
-        an ancestor of the current table state (always true here: the
-        stand-in has no branch/rollback, history is linear)."""
+        reports it — each retained snapshot's commit time, the parent it
+        chained from (the same lineage ``$snapshots`` shows, so a branch
+        commit's id is never mistaken for main's parent), and whether it
+        is main's current snapshot."""
         cur = self.current_version()
-        rows = [
-            (
-                self.snapshot(v).committed_at_ms,
-                v,
-                v - 1 if v - 1 in set(self.snapshot_versions()) else None,
-                v == cur,
-            )
-            for v in self.snapshot_versions()
-        ]
+        versions = self.snapshot_versions()
+        retained = set(versions)
+        rows = []
+        for v in versions:
+            s = self.snapshot(v)
+            rows.append((s.committed_at_ms, v, _shown_parent(s, retained), v == cur))
         return arrow_local_df(
             self.spark,
             rows,
@@ -2808,12 +2166,7 @@ class LakeTable:
                 pdf = pdf.sortWithinPartitions(*sort_by)
             with self._micros_timestamps():
                 self._writer(pdf).partitionBy(*pnames).mode("overwrite").parquet(out)
-            files = sorted(
-                os.path.relpath(os.path.join(root, fn), self.path)
-                for root, _dirs, fnames in os.walk(out)
-                for fn in fnames
-                if fn.endswith(".parquet")
-            )
+            files = manifest.written_files(self.path, rel)
         else:
             if zorder_by:
                 df = (
@@ -2830,7 +2183,7 @@ class LakeTable:
                 df = df.coalesce(n_files)
             with self._micros_timestamps():
                 self._writer(df).mode("overwrite").parquet(out)
-            files = [os.path.join(rel, os.path.basename(f)) for f in _list_parquet(out)]
+            files = manifest.written_files(self.path, rel)
         summary = {"files_before": len(snap.files)}
         if sort_by:
             summary["sort_by"] = sort_by
@@ -2842,10 +2195,7 @@ class LakeTable:
         elif only_smaller_than_bytes is not None:
             summary["files_rewritten"] = len(touched)
             summary["small_file_threshold_bytes"] = only_smaller_than_bytes
-        total_footer = n + sum(
-            int((snap.file_meta.get(f) or {}).get("rows", 0)) for f in keep
-        )
-        return self._commit("compact", keep + files, total_footer, 0, summary=summary)
+        return self._commit("compact", snap, keep + files, summary=summary)
 
     def analyze(self, columns: list[str] | None = None) -> dict:
         """ANALYZE TABLE (the Iceberg puffin/table-stats role): one scan
@@ -2901,9 +2251,8 @@ class LakeTable:
             raise ValueError(f"{self.name}: no snapshot v{version} to roll back to")
         return self._commit(
             "rollback",
+            self.snapshot(),
             list(target.files),
-            target.total_rows + target.active_delete_count(),
-            0,
             summary={"rollback_to": version},
             delete_files=list(target.delete_files),
             delete_meta=dict(target.delete_meta),
@@ -2951,7 +2300,7 @@ class LakeTable:
             stats = meta.get("stats", {}).get(col)
             if not stats:
                 return None  # a file without bounds could hold the extreme
-            flo, fhi = _stat_decode(stats[0]), _stat_decode(stats[1])
+            flo, fhi = manifest._stat_decode(stats[0]), manifest._stat_decode(stats[1])
             lo = flo if lo is None else min(lo, flo)
             hi = fhi if hi is None else max(hi, fhi)
         return (lo, hi)
@@ -2991,31 +2340,11 @@ class LakeTable:
         old_files = set(old_snap.files) if old_snap else set()
         new_files = set(new_snap.files)
 
-        def bucket_of(relpath: str) -> int | None:
-            for part in relpath.split(os.sep):
-                if part.startswith("__bucket="):
-                    return int(part.split("=", 1)[1])
-            return None
-
         def by_bucket(files: set[str]) -> dict:
             d: dict = {}
             for f in files:
-                d.setdefault(bucket_of(f), set()).add(f)
+                d.setdefault(manifest._bucket_of_path(f), set()).add(f)
             return d
-
-        def tomb_counts(snap: Snapshot | None) -> dict:
-            """file → active tombstone count: a bucket whose file set is
-            unchanged can still differ via a merge-on-read delete file,
-            so pruning must compare tombstones too (metadata-only)."""
-            out: dict = {}
-            if snap is None:
-                return out
-            present = set(snap.files)
-            for d in snap.delete_files:
-                for f, c in (snap.delete_meta.get(d) or {}).get("files", {}).items():
-                    if f in present:
-                        out[f] = out.get(f, 0) + c
-            return out
 
         def eq_state(snap: Snapshot | None) -> dict:
             """bucket → frozenset of (delete_file, seq) equality deletes
@@ -3028,12 +2357,16 @@ class LakeTable:
                 meta = snap.delete_meta.get(d) or {}
                 if meta.get("kind") != "equality":
                     continue
-                for b in _eq_delete_buckets(meta, snap.files):
+                for b in manifest._eq_delete_buckets(meta, snap.files):
                     out.setdefault(b, set()).add((d, meta.get("seq", -1)))
             return out
 
+        # a bucket whose file set is unchanged can still differ via a
+        # merge-on-read delete file, so pruning compares per-file
+        # tombstone counts too (metadata-only)
         ob, nb = by_bucket(old_files), by_bucket(new_files)
-        ot, nt = tomb_counts(old_snap), tomb_counts(new_snap)
+        ot = old_snap.position_tombstones() if old_snap else {}
+        nt = new_snap.position_tombstones()
         oe, ne = eq_state(old_snap), eq_state(new_snap)
         changed = {
             b
@@ -3503,11 +2836,7 @@ class LakeTable:
         snap = self.snapshot()
         if snap is not None:
             self._commit(
-                "schema-change",
-                list(snap.files),
-                snap.total_rows + snap.active_delete_count(),
-                0,
-                summary={"change": what},
+                "schema-change", snap, list(snap.files), summary={"change": what}
             )
 
     def add_constraint(self, name: str, expr: str) -> None:
@@ -3724,6 +3053,11 @@ class LakeTable:
     def _hot_dir(self, batch_id: int) -> str:
         return os.path.join(self.path, "hot", f"batch={batch_id}")
 
+    def _hot_watermark(self) -> int:
+        """Highest hot batch id the current snapshot has tiered (-1: none)."""
+        snap = self.snapshot()
+        return snap.hot_watermark if snap else -1
+
     def hot_batches(self) -> list[int]:
         hot = os.path.join(self.path, "hot")
         if not os.path.isdir(hot):
@@ -3759,11 +3093,7 @@ class LakeTable:
     def read_hot(
         self, after_watermark: int | None = None, with_batch_id: bool = False
     ) -> DataFrame:
-        wm = (
-            after_watermark
-            if after_watermark is not None
-            else (self.snapshot().hot_watermark if self.snapshot() else -1)
-        )
+        wm = after_watermark if after_watermark is not None else self._hot_watermark()
         batches = [b for b in self.hot_batches() if b > wm]
         if not batches:
             df = self.spark.createDataFrame([], self.schema)
@@ -3786,7 +3116,7 @@ class LakeTable:
         end at batch 7's value. Duplicate keys are resolved by descending
         batch id *before* the merge.
         """
-        current_wm = self.snapshot().hot_watermark if self.snapshot() else -1
+        current_wm = self._hot_watermark()
         batches = [b for b in self.hot_batches() if b > current_wm]
         if up_to_batch is not None:
             batches = [b for b in batches if b <= up_to_batch]
@@ -3843,7 +3173,7 @@ class LakeTable:
     def _hot_bytes(self) -> int:
         """Driver-side size of un-tiered hot batches (os.stat only — no
         Spark job), used to pick the union_read plan."""
-        wm = self.snapshot().hot_watermark if self.snapshot() else -1
+        wm = self._hot_watermark()
         total = 0
         for b in self.hot_batches():
             if b <= wm:

@@ -9,11 +9,8 @@ import tempfile
 import pytest
 from pyspark.sql import types as T
 
-from fluss_iceberg_spark.lake.table import (
-    LakeCatalog,
-    _bloom_positions,
-    _file_may_match,
-)
+from fluss_iceberg_spark.lake.manifest import _bloom_positions, _file_may_match
+from fluss_iceberg_spark.lake.table import LakeCatalog
 
 SCHEMA = T.StructType(
     [

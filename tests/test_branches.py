@@ -59,6 +59,20 @@ def test_branch_interleaves_with_main_commits(spark, t):
         t.fast_forward("wip")
 
 
+def test_history_shows_recorded_lineage(spark, t):
+    """$history reports the parent each snapshot chained from — the one
+    $snapshots shows — not the previous id: main's v2 follows v0 past the
+    branch commit v1."""
+    t.create_branch("wip")
+    with t.on_branch("wip"):
+        t.append(spark.createDataFrame([(50, 1)], "k int, v long"))  # v1
+    t.append(spark.createDataFrame([(60, 2)], "k int, v long"))  # v2
+    snaps = {r.snapshot_id: r.parent_id for r in t.snapshots().collect()}
+    hist = {r.snapshot_id: r.parent_id for r in t.history().collect()}
+    assert snaps == {0: None, 1: 0, 2: 0}
+    assert hist == snaps
+
+
 def test_branch_guards_and_expiry(spark, t):
     t.create_branch("keep")
     with pytest.raises(ValueError, match="already exists"):

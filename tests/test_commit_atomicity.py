@@ -136,7 +136,7 @@ def test_commit_conflict_detection(spark):
         t.append(spark.createDataFrame([(2, "b")], schema))  # v1
         # logical CAS: commit based on stale v0 while current is v1
         with pytest.raises(CommitConflictError):
-            t._commit("append", [], 0, 0, expected_version=0)
+            t._commit("append", t.snapshot(0), [])
         # physical CAS: a racing writer already created v2.json
         import json as _json
         import os as _os
@@ -166,15 +166,15 @@ def test_commit_conflict_detection(spark):
         calls = {"n": 0}
 
         def moved(_tpath):
-            # _commit reads the pointer for base, parent, and next-id
-            # (calls 1-3); the publish re-check (call 4) sees it moved
+            # _commit reads the pointer for its parent check and next-id
+            # (calls 1-2); the publish re-check (call 3) sees it moved
             calls["n"] += 1
-            return base if calls["n"] <= 3 else base + 7
+            return base if calls["n"] <= 2 else base + 7
 
         commit.read_version = moved
         try:
             with pytest.raises(CommitConflictError, match="concurrent"):
-                t._commit("append", list(t.snapshot(base).files), 2, 0)
+                t._commit("append", t.snapshot(base), list(t.snapshot(base).files))
         finally:
             commit.read_version = orig_cv
         # the loser's snapshot file was cleaned up
@@ -188,3 +188,75 @@ def test_commit_conflict_detection(spark):
             f.write(stale)
         t.append(spark.createDataFrame([(3, "c")], schema))
         assert t.current_version() == 6 and t.read().count() == 3
+
+
+def _rollback_while_writing(t, other, version: int) -> None:
+    """Make ``t``'s next write race a rollback: the other handle commits
+    ``rollback(version)`` after ``t`` read its parent and before ``t``
+    commits (the first id pick of a write follows its parent read)."""
+    orig = t._next_version
+
+    def racing():
+        t._next_version = orig  # race once
+        other.rollback(version)
+        return orig()
+
+    t._next_version = racing
+
+
+def test_cow_delete_does_not_undo_a_concurrent_rollback(spark, tmp_path):
+    """A copy-on-write delete computed from v1 must not publish on top of
+    a rollback that landed meanwhile: its file list would bring back
+    the rows the rollback removed."""
+    from fluss_iceberg_spark.lake.table import CommitConflictError
+
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    df = spark.range(1, 4).select(F.col("id").alias("k"))
+    t = cat.create_table("log_t", df.schema)
+    t.append(df.filter(F.col("k") <= 2).coalesce(1))  # v0: 1, 2
+    t.append(df.filter(F.col("k") == 3).coalesce(1))  # v1: 1, 2, 3
+    _rollback_while_writing(t, cat.load("log_t"), 0)
+    with pytest.raises(CommitConflictError):
+        t.delete(where=[("k", "=", 1)])
+    assert sorted(r.k for r in t.read().collect()) == [1, 2]  # the rollback
+    t.delete(where=[("k", "=", 1)])
+    assert sorted(r.k for r in t.read().collect()) == [2]
+
+
+def test_pk_merge_does_not_undo_a_concurrent_rollback(spark, tmp_path):
+    from fluss_iceberg_spark.lake.table import CommitConflictError
+
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    df = spark.range(1, 4).select(F.col("id").alias("k"), F.lit("a").alias("v"))
+    t = cat.create_table("pk_t", df.schema, primary_key=["k"], n_buckets=2)
+    t.merge(df.filter(F.col("k") <= 2))  # v0: keys 1, 2
+    t.merge(df.filter(F.col("k") == 3))  # v1: keys 1, 2, 3
+    upd = df.filter(F.col("k") == 1).withColumn("v", F.lit("b"))
+    _rollback_while_writing(t, cat.load("pk_t"), 0)
+    with pytest.raises(CommitConflictError):
+        t.merge(upd)
+    assert sorted(r.k for r in t.read().collect()) == [1, 2]
+    t.merge(upd)
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [(1, "b"), (2, "a")]
+
+
+def test_tier_parses_the_snapshot_at_most_twice(spark, tmp_path, monkeypatch):
+    """tier() reads its watermark from one parse and the append's parent
+    from one more; the commit derives its counts without another."""
+    from fluss_iceberg_spark.lake.table import Snapshot
+
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    df = spark.range(10).select(F.col("id").alias("k"))
+    t = cat.create_table("log_t", df.schema)
+    t.append(df)
+    t.write_hot_batch(df, batch_id=1)
+    parse = Snapshot.from_json
+    calls = []
+
+    def counting(s):
+        calls.append(1)
+        return parse(s)
+
+    monkeypatch.setattr(Snapshot, "from_json", staticmethod(counting))
+    t.tier()
+    assert len(calls) <= 2

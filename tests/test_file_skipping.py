@@ -12,13 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fluss_iceberg_spark.lake.table import (
-    LakeCatalog,
+from fluss_iceberg_spark.lake.manifest import (
     _file_may_match,
     _stat_canon,
     _stat_decode,
     _stat_encode,
 )
+from fluss_iceberg_spark.lake.table import LakeCatalog
 
 SCHEMA = T.StructType(
     [
@@ -502,7 +502,7 @@ def test_value_set_type_mismatch_keeps_file():
 
 
 def test_in_predicate_bloom_forms():
-    from fluss_iceberg_spark.lake.table import _BLOOM_BITS, _bloom_positions
+    from fluss_iceberg_spark.lake.manifest import _BLOOM_BITS, _bloom_positions
 
     def bloom_of(values, m):
         bits = 0

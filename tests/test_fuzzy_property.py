@@ -8,7 +8,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fluss_iceberg_spark.lake.table import _bloom_positions
+from fluss_iceberg_spark.lake.manifest import _bloom_positions
 from fluss_iceberg_spark.operators.fuzzy import deletion_signatures  # noqa: F401
 
 

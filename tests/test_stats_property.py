@@ -11,7 +11,7 @@ import operator
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fluss_iceberg_spark.lake.table import _file_may_match, _stat_encode
+from fluss_iceberg_spark.lake.manifest import _file_may_match, _stat_encode
 
 _OPS = {
     "=": operator.eq,
