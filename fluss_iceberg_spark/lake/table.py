@@ -54,7 +54,7 @@ import os
 import re
 import shutil
 import time
-
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1008,6 +1008,11 @@ class LakeTable:
         ``rewrite_data_files(sort_order => 'zorder(a, b)')``), so range
         predicates on EITHER column prune files, not just the leading
         one."""
+        return self._append(df, self.snapshot)
+
+    def _append(self, df: DataFrame, parent_of: Callable[[], Snapshot | None]) -> Snapshot:
+        """``append``, committed on top of ``parent_of()`` read after the
+        write (``tier`` passes the snapshot it drained from)."""
         if self.primary_key:
             raise ValueError(f"{self.name}: PK table requires merge(), not append()")
         df = self._enforce_not_null(self._prepare(df))
@@ -1046,7 +1051,7 @@ class LakeTable:
             df = df.sortWithinPartitions(ccol)
         version = self._next_version()
         files = self._write_files(df, version, bucketed=False)
-        parent = self.snapshot()
+        parent = parent_of()
         return self._commit("append", parent, (parent.files if parent else []) + files)
 
     def _check_rewrite_allowed(self, op: str) -> None:
@@ -1084,6 +1089,16 @@ class LakeTable:
         touched-bucket rewrite is bounded by the delete key set, never
         the table).
         """
+        return self._merge(updates, deletes, self.snapshot)
+
+    def _merge(
+        self,
+        updates: DataFrame,
+        deletes: DataFrame | None,
+        parent_of: Callable[[], Snapshot | None],
+    ) -> Snapshot:
+        """``merge``, committed on top of ``parent_of()`` (``tier`` passes
+        the snapshot it drained from)."""
         if not self.primary_key:
             raise ValueError(f"{self.name}: merge() requires a primary key")
         updates = self._enforce_not_null(self._prepare(updates))
@@ -1104,15 +1119,18 @@ class LakeTable:
                 deletes.select(*self.primary_key).dropDuplicates()
             )
         try:
-            return self._merge_inner(updates, deletes)
+            return self._merge_inner(updates, deletes, parent_of)
         finally:
             rel_u()
             rel_d()
 
     def _merge_inner(
-        self, updates: DataFrame, deletes: DataFrame | None
+        self,
+        updates: DataFrame,
+        deletes: DataFrame | None,
+        parent_of: Callable[[], Snapshot | None],
     ) -> Snapshot:
-        parent = self.snapshot()
+        parent = parent_of()
         version = self._next_version()
         touch_keys = updates.select(*self.primary_key)
         if deletes is not None:
@@ -3116,7 +3134,10 @@ class LakeTable:
         end at batch 7's value. Duplicate keys are resolved by descending
         batch id *before* the merge.
         """
-        current_wm = self._hot_watermark()
+        # one parse: the batches to drain and the commit's parent come from
+        # the same snapshot, so a tier that lands meanwhile is a conflict
+        parent = self.snapshot()
+        current_wm = parent.hot_watermark if parent else -1
         batches = [b for b in self.hot_batches() if b > current_wm]
         if up_to_batch is not None:
             batches = [b for b in batches if b <= up_to_batch]
@@ -3141,8 +3162,8 @@ class LakeTable:
                     .filter(F.col("__rn") == 1)
                     .select(*self.schema.fieldNames())
                 )
-                return self.merge(resolved)
-            return self.append(df.select(*self.schema.fieldNames()))
+                return self._merge(resolved, None, lambda: parent)
+            return self._append(df.select(*self.schema.fieldNames()), lambda: parent)
         finally:
             self._pending_commit_extra = None
 

@@ -4,12 +4,13 @@ span the domain and value sets (cap 64) refuse to record."""
 
 from __future__ import annotations
 
+import random
 import tempfile
 
 import pytest
 from pyspark.sql import types as T
 
-from fluss_iceberg_spark.lake.manifest import _bloom_positions, _file_may_match
+from fluss_iceberg_spark.lake.manifest import _BLOOM_K_V2, _bloom_of, _bloom_positions, _file_may_match
 from fluss_iceberg_spark.lake.table import LakeCatalog
 
 SCHEMA = T.StructType(
@@ -95,3 +96,26 @@ def test_bloom_positions_deterministic_and_typed():
     assert _bloom_positions("7") == _bloom_positions(7)  # canon: str(int)
     assert _bloom_positions(1.5) is None  # floats excluded by design
     assert _bloom_positions(True) is None  # bools excluded
+
+
+def _bloom_from_positions(values: list, m: int) -> str:
+    buf = bytearray(m // 8)
+    for v in values:
+        for p in _bloom_positions(v, m=m, k=_BLOOM_K_V2):
+            buf[p >> 3] |= 1 << (p & 7)
+    return f"{int.from_bytes(buf, 'little'):x}"
+
+
+# (distinct values, the filter size they get): every size from the 2048-bit
+# floor to the 2^21-bit cap, and past the cap
+@pytest.mark.parametrize("n,m", [(1, 2048)] + [(64 << i, 2048 << i) for i in range(11)] + [(70_000, 1 << 21)])
+def test_bloom_of_matches_probe_positions(n, m):
+    rng = random.Random(n)
+    ints = [rng.getrandbits(63) - (1 << 62) for _ in range(n - n // 2)]
+    values = ints + [f"key-{rng.getrandbits(40)}" for _ in range(n // 2)]
+    assert _bloom_of(values) == {"m": m, "k": _BLOOM_K_V2, "bits": _bloom_from_positions(values, m)}
+
+
+@pytest.mark.parametrize("values", [[], [None], [1, 2.5], ["a", True], [1, "b", None]])
+def test_bloom_of_none_without_only_bloomable_values(values):
+    assert _bloom_of(values) is None

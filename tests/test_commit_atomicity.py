@@ -190,15 +190,15 @@ def test_commit_conflict_detection(spark):
         assert t.current_version() == 6 and t.read().count() == 3
 
 
-def _rollback_while_writing(t, other, version: int) -> None:
-    """Make ``t``'s next write race a rollback: the other handle commits
-    ``rollback(version)`` after ``t`` read its parent and before ``t``
-    commits (the first id pick of a write follows its parent read)."""
+def _while_writing(t, race) -> None:
+    """Make ``t``'s next write race another commit: ``race()`` runs after
+    ``t`` read its parent and before ``t`` commits (the first id pick of a
+    write follows its parent read)."""
     orig = t._next_version
 
     def racing():
         t._next_version = orig  # race once
-        other.rollback(version)
+        race()
         return orig()
 
     t._next_version = racing
@@ -215,7 +215,8 @@ def test_cow_delete_does_not_undo_a_concurrent_rollback(spark, tmp_path):
     t = cat.create_table("log_t", df.schema)
     t.append(df.filter(F.col("k") <= 2).coalesce(1))  # v0: 1, 2
     t.append(df.filter(F.col("k") == 3).coalesce(1))  # v1: 1, 2, 3
-    _rollback_while_writing(t, cat.load("log_t"), 0)
+    other = cat.load("log_t")
+    _while_writing(t, lambda: other.rollback(0))
     with pytest.raises(CommitConflictError):
         t.delete(where=[("k", "=", 1)])
     assert sorted(r.k for r in t.read().collect()) == [1, 2]  # the rollback
@@ -232,7 +233,8 @@ def test_pk_merge_does_not_undo_a_concurrent_rollback(spark, tmp_path):
     t.merge(df.filter(F.col("k") <= 2))  # v0: keys 1, 2
     t.merge(df.filter(F.col("k") == 3))  # v1: keys 1, 2, 3
     upd = df.filter(F.col("k") == 1).withColumn("v", F.lit("b"))
-    _rollback_while_writing(t, cat.load("pk_t"), 0)
+    other = cat.load("pk_t")
+    _while_writing(t, lambda: other.rollback(0))
     with pytest.raises(CommitConflictError):
         t.merge(upd)
     assert sorted(r.k for r in t.read().collect()) == [1, 2]
@@ -240,9 +242,28 @@ def test_pk_merge_does_not_undo_a_concurrent_rollback(spark, tmp_path):
     assert sorted((r.k, r.v) for r in t.read().collect()) == [(1, "b"), (2, "a")]
 
 
-def test_tier_parses_the_snapshot_at_most_twice(spark, tmp_path, monkeypatch):
-    """tier() reads its watermark from one parse and the append's parent
-    from one more; the commit derives its counts without another."""
+def test_tier_does_not_commit_a_batch_a_concurrent_tier_landed(spark, tmp_path):
+    """tier() drains the batches past one snapshot's watermark and commits
+    on top of that same snapshot: a second handle that tiers the batch
+    meanwhile makes the first a conflict, not a second copy of the batch."""
+    from fluss_iceberg_spark.lake.table import CommitConflictError
+
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    df = spark.range(10).select(F.col("id").alias("k"))
+    t = cat.create_table("log_t", df.schema)
+    t.append(df.filter(F.col("k") < 5).coalesce(1))  # v0: 5 rows
+    t.write_hot_batch(df.filter(F.col("k") >= 5), batch_id=1)
+    other = cat.load("log_t")
+    _while_writing(t, other.tier)
+    with pytest.raises(CommitConflictError):
+        t.tier()
+    assert t.read().count() == 10
+    assert t.tier() is None  # batch 1 is in the lake once
+
+
+def test_tier_parses_the_snapshot_once(spark, tmp_path, monkeypatch):
+    """tier() takes its watermark and the commit's parent from one parse;
+    the commit derives its counts without another."""
     from fluss_iceberg_spark.lake.table import Snapshot
 
     cat = LakeCatalog(spark, str(tmp_path / "wh"))
@@ -259,4 +280,4 @@ def test_tier_parses_the_snapshot_at_most_twice(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(Snapshot, "from_json", staticmethod(counting))
     t.tier()
-    assert len(calls) <= 2
+    assert len(calls) <= 1
