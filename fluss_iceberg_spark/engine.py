@@ -31,7 +31,7 @@ from fluss_iceberg_spark.lake.table import LakeCatalog, LakeTable
 # tiny literal frames; the classic list path parallelizes them into a
 # 32-partition pickled Python RDD whose every action spawns Python
 # workers (measured: a 1-row DDL frame cost a 32-task job)
-from fluss_iceberg_spark.operators.util import arrow_local_df
+from fluss_iceberg_spark.operators.util import arrow_local_df, conf_bytes
 from fluss_iceberg_spark.sources.tpch import register_views
 
 # Flink-DDL type names → Spark types (the reference's DDL vocabulary,
@@ -224,22 +224,11 @@ class Engine:
         except (OSError, ValueError, KeyError):
             return None  # unreadable/garbled stats: plan without them
 
-    _SIZE_SUFFIX = {"b": 1, "k": 1024, "kb": 1024, "m": 1024**2,
-                    "mb": 1024**2, "g": 1024**3, "gb": 1024**3,
-                    "t": 1024**4, "tb": 1024**4}
-
     def _auto_broadcast_threshold(self) -> int:
-        """The session's autoBroadcastJoinThreshold in bytes (Spark
-        accepts '10MB' / '10485760b' / bare bytes / '-1' = disabled)."""
-        raw = str(
-            self.spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-        ).strip().lower()
-        m = re.match(r"^(-?\d+)\s*([a-z]*)$", raw)
-        if not m:
-            return 10 * 1024 * 1024
-        return int(m.group(1)) * self._SIZE_SUFFIX.get(m.group(2), 1)
+        """The session's autoBroadcastJoinThreshold in bytes (-1 = disabled)."""
+        return conf_bytes(
+            self.spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
+        )
 
     @staticmethod
     def _table_state(t: LakeTable) -> tuple:

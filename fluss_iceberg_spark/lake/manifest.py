@@ -34,8 +34,11 @@ from dataclasses import dataclass, field
 
 # Data files live under data/s{N}/, N being the id of the snapshot whose
 # write produced them — the Iceberg data-sequence-number role that scopes
-# equality deletes to files written BEFORE the delete. Spark scans extract
-# the same fields from a file path with these patterns (regexp_extract).
+# equality deletes to files written BEFORE the delete. Each write has its
+# own directory below that, data/s{N}/<uuid>/ (tables written before that
+# rule hold data/s{N}/ files directly; both read alike). Spark scans
+# extract the same fields from a file path with these patterns
+# (regexp_extract).
 DATA_SEQ_PATTERN = r"data/s(\d+)/"
 DATA_RELPATH_PATTERN = r"(data/s\d+/.+)$"
 _FILE_SEQ_RE = re.compile(DATA_SEQ_PATTERN)

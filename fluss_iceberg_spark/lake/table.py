@@ -3,13 +3,14 @@
 Layout per table, under a catalog warehouse directory::
 
     {warehouse}/{table}/
-        meta/table.json          # schema DDL, primary key, bucket count, props
-        meta/v{N}.json           # snapshot N: operation, file list, counters
-        meta/VERSION             # current snapshot pointer (atomic os.replace)
-        meta/refs.json           # named refs: tags and branch heads
-        data/s{N}/...parquet     # files added by snapshot N (immutable)
-        deletes/s{N}/...parquet  # position / equality delete files of snapshot N
-        hot/batch={B}/...parquet # staged stream batches not yet tiered
+        meta/table.json              # schema DDL, primary key, bucket count, props
+        meta/v{N}.json               # snapshot N: operation, file list, counters
+        meta/VERSION                 # current snapshot pointer (atomic os.replace)
+        meta/refs.json               # named refs: tags and branch heads
+        data/s{N}/{W}/...parquet     # files added by snapshot N (immutable);
+                                     # {W}: one directory (a uuid) per write
+        deletes/s{N}/{W}/...parquet  # position / equality delete files of snapshot N
+        hot/batch={B}/...parquet     # staged stream batches not yet tiered
 
 The snapshot record and its per-file rules — manifest entries, row and
 delete accounting, the path conventions above, file skipping — live in
@@ -54,16 +55,22 @@ import os
 import re
 import shutil
 import time
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Arrow-path local frames for metadata tables (guide §6): the classic
 # list path pickles rows into a 32-partition Python RDD — every read of
 # $snapshots/$files/$history then pays Python workers for metadata
-from fluss_iceberg_spark.operators.util import arrow_local_df, release_checkpoint
+from fluss_iceberg_spark.operators.util import (
+    arrow_local_df,
+    conf_bytes,
+    release_checkpoint,
+)
 from pyspark.sql import types as T
 
 from fluss_iceberg_spark.lake import commit, manifest
@@ -801,11 +808,19 @@ class LakeTable:
             )
         # cast to the declared column types (Iceberg-style write coercion):
         # SQL arithmetic widens decimals (15,2)+(15,2) → (16,2), and a file
-        # written at the widened type is unreadable under the table schema
+        # written at the widened type is unreadable under the table schema.
+        # Only columns whose type differs are cast, and a frame already in
+        # the table's shape comes back as is: every column expression is
+        # a few JVM round trips on the driver
+        have = [(f.name, f.dataType) for f in df.schema.fields]
+        want = [(f.name, f.dataType) for f in self.schema.fields]
+        if have == want:
+            return df
+        typed = dict(have)
         return df.select(
             *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in self.schema.fields
+                F.col(n) if typed.get(n) == t else F.col(n).cast(t).alias(n)
+                for n, t in want
             ]
         )
 
@@ -834,7 +849,9 @@ class LakeTable:
             analyzed.containsPattern(getattr(tp, p)()) for p in self._HEAVY_PATTERNS
         )
 
-    def _materialize_delta(self, df: DataFrame):
+    def _materialize_delta(
+        self, df: DataFrame, observation: Observation | None = None
+    ):
         """Delta-frame policy for multi-action consumers (merge/delete):
         the frame feeds 2-3 separate Spark actions (stats/guard collect,
         then the write).
@@ -846,23 +863,52 @@ class LakeTable:
           instead of re-running Catalyst over the changelog tree per
           action (measured r13: 42-56% of merge-family
           wall was BETWEEN jobs, i.e. per-action planning; guide §5
-          "localCheckpoint is a cheaper way to cut lineage").
+          "localCheckpoint is a cheaper way to cut lineage"). With an
+          ``observation``, that same job also records the delta's
+          touched buckets and row count (``_observed`` reads them), so
+          a merge needs no separate stats query.
         - TRIVIAL lineage (scan/local frame + row-level ops only): no
-          materialization. Re-executing a delta-sized scan per action is
-          cheaper than building and re-reading 32 cached partitions (the
-          r12 unconditional persist regressed exactly these consumers —
-          lake_scd2_dimension, stream_txn_two_sinks; adjudicated by the
-          interleaved A/B in OPTIMIZATION_r13.md).
+          materialization, and ``df`` itself comes back with the
+          observation unattached. Re-executing a delta-sized scan per
+          action is cheaper than building and re-reading 32 cached
+          partitions (the r12 unconditional persist regressed exactly
+          these consumers — lake_scd2_dimension, stream_txn_two_sinks;
+          adjudicated by the interleaved A/B in OPTIMIZATION_r13.md).
 
         Returns ``(frame, release_fn)``."""
         try:
             heavy = self._heavy_lineage(df)
-        except Exception:
+        except Py4JError:
             heavy = True  # unknown plan shape: materializing is the safe default
         if not heavy:
             return df, lambda: None
+        if observation is not None:
+            df = df.observe(
+                observation,
+                F.collect_set(self._bucket_col()).alias("buckets"),
+                F.count(F.lit(1)).alias("rows"),
+            )
         cp = df.localCheckpoint(eager=True)
         return cp, lambda: release_checkpoint(cp)
+
+    @staticmethod
+    def _observed(observation: Observation | None) -> dict | None:
+        """The metrics ``_materialize_delta`` asked ``observation`` for,
+        or None when there is none or it was never attached (trivial
+        lineage). The query listener fills an observation a few ms after
+        its job ends, so this waits on it, boundedly: ``getRowOrEmpty``
+        waits up to 100 ms per call. That method is internal to Spark,
+        so a Py4JError (or no metrics within ~5 s) also reads None and
+        the caller falls back to querying the delta."""
+        if observation is None or observation._jo is None:
+            return None
+        try:
+            for _ in range(50):
+                if observation._jo.getRowOrEmpty().isDefined():
+                    return observation.get
+        except Py4JError:
+            pass
+        return None
 
     @contextmanager
     def _micros_timestamps(self):
@@ -895,11 +941,20 @@ class LakeTable:
         codec = self.properties.get("write.parquet.compression-codec")
         return w.option("compression", codec) if codec else w
 
+    @staticmethod
+    def _write_dir(kind: str, snapshot_id: int) -> str:
+        """Table-relative directory of one write of ``kind`` files
+        (``data``/``deletes``) for snapshot ``snapshot_id``:
+        ``{kind}/s{N}/<uuid>``. ``N`` is the write sequence (see
+        manifest._file_seq); the uuid keeps two writers that picked the
+        same ``N`` apart, since each write overwrites its own directory."""
+        return f"{kind}/s{snapshot_id}/{uuid.uuid4().hex}"
+
     def _write_files(self, df: DataFrame, snapshot_id: int, bucketed: bool) -> list[str]:
-        """Write df as parquet under data/s{snapshot_id}; returns
-        table-relative paths. PK tables write one directory per PK-hash
-        bucket so merges can prune untouched buckets."""
-        rel = f"data/s{snapshot_id}"
+        """Write df as parquet under ``_write_dir("data", snapshot_id)``;
+        returns table-relative paths. PK tables write one directory per
+        PK-hash bucket so merges can prune untouched buckets."""
+        rel = self._write_dir("data", snapshot_id)
         out = os.path.join(self.path, rel)
         if bucketed:
             with self._micros_timestamps():
@@ -1082,6 +1137,15 @@ class LakeTable:
         Bucketed copy-on-write: only buckets containing updated keys are
         rewritten (anti-join old ∪ new within the bucket); files of
         untouched buckets carry forward into the new snapshot unchanged.
+        Each rewritten bucket gets one new file; the write's partition
+        count follows its bytes (AQE coalescing), not the bucket count.
+
+        The touched buckets come from the job that materializes a heavy
+        delta (``_materialize_delta``'s observation), which also counts
+        its rows: when that key set fits
+        ``spark.sql.autoBroadcastJoinThreshold``, the anti-join
+        broadcasts it. A trivial delta, and a merge with ``deletes``,
+        query the touched buckets with one job of their own.
 
         ``deletes`` (optional): a frame of primary-key values whose rows
         are dropped in the SAME commit — the WHEN MATCHED THEN DELETE arm
@@ -1106,12 +1170,15 @@ class LakeTable:
         # undefined without order, so use an arbitrary-but-deterministic
         # max-by over all columns via row_number on a monotonic id
         #
-        # merge() consumes the collapsed batch through 2-3 SEPARATE
-        # actions (conflict guard, touched-bucket collect, the bucket
-        # write) — _materialize_delta decides per lineage whether to
-        # checkpoint it once or recompute it per action (see its doc)
+        # merge() consumes the collapsed batch through SEPARATE actions
+        # (the touched-bucket query, or with deletes the conflict guard;
+        # then the bucket write) — _materialize_delta decides per lineage
+        # whether to checkpoint it once or recompute it per action, and a
+        # checkpoint of the updates observes their buckets, which saves
+        # the query (see its doc)
+        observation = Observation() if deletes is None else None
         updates, rel_u = self._materialize_delta(
-            updates.dropDuplicates(self.primary_key)
+            updates.dropDuplicates(self.primary_key), observation
         )
         rel_d = lambda: None  # noqa: E731
         if deletes is not None:
@@ -1119,7 +1186,8 @@ class LakeTable:
                 deletes.select(*self.primary_key).dropDuplicates()
             )
         try:
-            return self._merge_inner(updates, deletes, parent_of)
+            seen = self._observed(observation)
+            return self._merge_inner(updates, deletes, parent_of, seen)
         finally:
             rel_u()
             rel_d()
@@ -1129,7 +1197,10 @@ class LakeTable:
         updates: DataFrame,
         deletes: DataFrame | None,
         parent_of: Callable[[], Snapshot | None],
+        seen: dict | None = None,
     ) -> Snapshot:
+        """The merge of key-distinct ``updates``/``deletes``. ``seen``:
+        the updates' observed ``buckets`` and ``rows``, if any."""
         parent = parent_of()
         version = self._next_version()
         touch_keys = updates.select(*self.primary_key)
@@ -1167,6 +1238,8 @@ class LakeTable:
                     f"{self.name}: merge() key appears in both updates and deletes"
                 )
             touched = list(stat["bks"] or [])
+        elif seen is not None:
+            touched = list(seen["buckets"])
         else:
             upd = touch_keys.withColumn("__bucket", self._bucket_col())
             touched = [
@@ -1185,7 +1258,7 @@ class LakeTable:
         keep_files = [f for f in parent.files if bucket_of(f) not in touched_set]
         old_touched = [f for f in parent.files if bucket_of(f) in touched_set]
 
-        rel = f"data/s{version}"
+        rel = self._write_dir("data", version)
         out = os.path.join(self.path, rel)
         if old_touched:
             old_df = self._read_live(
@@ -1198,6 +1271,11 @@ class LakeTable:
             upd_keys = touch_keys.select(
                 *[F.col(k).alias(f"__u_{k}") for k in self.primary_key]
             )
+            # a checkpointed delta carries no size estimate, so Spark would
+            # plan a sort-merge join and AQE would shuffle both sides before
+            # switching to a broadcast: the observed row count decides it
+            if seen is not None and self._fits_broadcast(seen["rows"], upd_keys):
+                upd_keys = F.broadcast(upd_keys)
             cond = None
             for k in self.primary_key:
                 c = old_df[k].eqNullSafe(upd_keys[f"__u_{k}"])
@@ -1206,11 +1284,14 @@ class LakeTable:
             new_state = survivors.unionByName(updates)
         else:
             new_state = updates
+        # hash-partitioning on the bucket puts each bucket in one task,
+        # hence one file; with no partition count AQE sizes the write by
+        # its bytes
         with self._micros_timestamps():
             (
                 self._writer(
                     new_state.withColumn("__bucket", self._bucket_col()).repartition(
-                        len(touched_set) or 1, "__bucket"
+                        "__bucket"
                     )
                 )
                 .partitionBy("__bucket")
@@ -1221,6 +1302,15 @@ class LakeTable:
         return self._commit(
             "merge", parent, files, summary={"touched_buckets": touched}
         )
+
+    def _fits_broadcast(self, rows: int, keys: DataFrame) -> bool:
+        """Whether ``rows`` rows of ``keys`` fit the session's
+        ``spark.sql.autoBroadcastJoinThreshold`` (-1: never), at Spark's
+        default size of a row of that schema."""
+        threshold = conf_bytes(
+            self.spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
+        )
+        return rows * keys._jdf.schema().defaultSize() <= threshold
 
     def delete(self, where: list[tuple]) -> Snapshot:
         """Row-level DELETE (the Iceberg copy-on-write v2 role): remove
@@ -1287,7 +1377,7 @@ class LakeTable:
             r["__bucket"] for r in keyed.select("__bucket").distinct().collect()
         }
         touched = [f for f in snap.files if manifest._bucket_of_path(f) in buckets]
-        rel_dir = f"deletes/s{version}"
+        rel_dir = self._write_dir("deletes", version)
         keys.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self.path, rel_dir)
         )
@@ -1433,9 +1523,10 @@ class LakeTable:
         return tagged
 
     def _write_delete_file(self, pos_df: DataFrame, version: int) -> tuple:
-        """Write (__file, __pos) tombstones under deletes/s{version};
-        returns (relpaths, per_file_counts)."""
-        rel_dir = f"deletes/s{version}"
+        """Write (__file, __pos) tombstones under
+        ``_write_dir("deletes", version)``; returns (relpaths,
+        per_file_counts)."""
+        rel_dir = self._write_dir("deletes", version)
         out = os.path.join(self.path, rel_dir)
         pos_df.coalesce(1).write.mode("overwrite").parquet(out)
         new_del = manifest.written_files(self.path, rel_dir)
@@ -2154,7 +2245,7 @@ class LakeTable:
             n = snap.total_rows
         n_files = max(1, -(-n // target_file_rows))
         version = self._next_version()
-        rel = f"data/s{version}"
+        rel = self._write_dir("data", version)
         out = os.path.join(self.path, rel)
         if self.primary_key:
             if cluster:
@@ -3133,6 +3224,11 @@ class LakeTable:
         log-ordered — a key written in batch 5 and again in batch 7 must
         end at batch 7's value. Duplicate keys are resolved by descending
         batch id *before* the merge.
+
+        File sizing: the drained batches are read as ceil(their on-disk
+        bytes / ``spark.sql.files.maxPartitionBytes``) partitions, so a
+        log table's tier writes that many files instead of one per scan
+        split (the scan splits small inputs across every core).
         """
         # one parse: the batches to drain and the commit's parent come from
         # the same snapshot, so a tier that lands meanwhile is a conflict
@@ -3144,7 +3240,13 @@ class LakeTable:
         if not batches:
             return None
         new_wm = max(batches)
-        df = self._read_hot_batches(batches, with_batch_id=bool(self.primary_key))
+        split = conf_bytes(
+            self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2
+        )
+        n_files = max(1, -(-self._hot_batch_bytes(batches) // max(split, 1)))
+        df = self._read_hot_batches(
+            batches, with_batch_id=bool(self.primary_key)
+        ).coalesce(n_files)
         self._pending_commit_extra = {
             "operation": "tier",
             "hot_watermark": new_wm,
@@ -3173,7 +3275,13 @@ class LakeTable:
         file stream over the data directory picks up each append commit's
         files as they land; exactly-once via the file-source log +
         downstream checkpoints. Log tables only (PK tables rewrite bucket
-        files on merge, which would re-emit rows)."""
+        files on merge, which would re-emit rows).
+
+        A file stream lists one directory level unless told to recurse,
+        and data files sit at different depths (``data/s{N}/<write>/``,
+        partition directories below that, legacy ``data/s{N}/``), so it
+        looks up files recursively; partition values need no inference,
+        since hidden partitioning keeps the source column in the file."""
         if self.primary_key:
             raise ValueError(
                 f"{self.name}: changelog streaming of PK tables is not "
@@ -3182,7 +3290,8 @@ class LakeTable:
         return (
             self.spark.readStream.schema(T.StructType(self.schema.fields))
             .option("pathGlobFilter", "*.parquet")
-            .parquet(os.path.join(self.path, "data", "*"))
+            .option("recursiveFileLookup", "true")
+            .parquet(os.path.join(self.path, "data"))
         )
 
     # Hot bytes above which PK union_read falls back to the full-shuffle
@@ -3195,14 +3304,16 @@ class LakeTable:
         """Driver-side size of un-tiered hot batches (os.stat only — no
         Spark job), used to pick the union_read plan."""
         wm = self._hot_watermark()
+        return self._hot_batch_bytes([b for b in self.hot_batches() if b > wm])
+
+    def _hot_batch_bytes(self, batches: list[int]) -> int:
+        """On-disk parquet bytes of the given hot batches (os.stat only)."""
         total = 0
-        for b in self.hot_batches():
-            if b <= wm:
-                continue
-            d = self._hot_dir(b)
-            for f in os.listdir(d):
-                if f.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(d, f))
+        for b in batches:
+            with os.scandir(self._hot_dir(b)) as it:
+                total += sum(
+                    e.stat().st_size for e in it if e.name.endswith(".parquet")
+                )
         return total
 
     def union_read(self) -> DataFrame:

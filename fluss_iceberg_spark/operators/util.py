@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Row, SparkSession
 
@@ -19,6 +21,22 @@ def release_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Py4JError:
         pass
+
+
+_SIZE_SUFFIX = {"b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
+                "g": 1024**3, "gb": 1024**3, "t": 1024**4, "tb": 1024**4}
+_SIZE_RE = re.compile(r"^(-?\d+)\s*([a-z]*)$")
+
+
+def conf_bytes(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-size Spark conf in bytes. Spark accepts '10MB' /
+    '10485760b' / bare bytes / '-1' (a disabled threshold); a value it
+    would not parse reads as ``default``."""
+    raw = str(spark.conf.get(key, str(default))).strip().lower()
+    m = _SIZE_RE.match(raw)
+    if not m:
+        return default
+    return int(m.group(1)) * _SIZE_SUFFIX.get(m.group(2), 1)
 
 
 def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
