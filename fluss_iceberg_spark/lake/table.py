@@ -592,12 +592,7 @@ class LakeTable:
             else commit.REST if rest_endpoint
             else "",
         )
-        try:
-            commit.exclusive_write(snap_path, snap.to_json())
-        except CommitConflictError:
-            if extra:  # let a retry carry the watermark/batch-id forward
-                self._pending_commit_extra = extra
-            raise
+        commit.exclusive_write(snap_path, snap.to_json())
         if self._txn is not None:
             # transactional stage: the staged file exists (exclusive-
             # create above arbitrates same-version transactions) but
@@ -608,8 +603,6 @@ class LakeTable:
             cur = self.current_version()
             if cur != self._txn.base_version(self, cur):
                 os.remove(snap_path)
-                if extra:
-                    self._pending_commit_extra = extra
                 raise CommitConflictError(
                     f"concurrent commit advanced {self.name} to v{cur} "
                     f"during the transaction"
@@ -625,7 +618,7 @@ class LakeTable:
         # writes; the facade takes the same section, so all entry points
         # serialize against each other).
         if rest_endpoint:
-            self._cas_via_rest(rest_endpoint, base, version, extra)
+            self._cas_via_rest(rest_endpoint, base, version)
             return snap
         # ref CAS: snapshot ids skip past orphan files (crash debris must
         # not wedge the table), so same-base racers may pick DIFFERENT
@@ -642,8 +635,6 @@ class LakeTable:
                 commit.publish_pointer(self.path, base, version)
         except (CommitConflictError, OSError):
             os.remove(snap_path)
-            if extra:
-                self._pending_commit_extra = extra
             raise
         return snap
 
@@ -662,9 +653,7 @@ class LakeTable:
             refs["branches"][self.write_branch] = version
             self._write_refs(refs)
 
-    def _cas_via_rest(
-        self, endpoint: str, base: int, version: int, extra: dict | None
-    ) -> None:
+    def _cas_via_rest(self, endpoint: str, base: int, version: int) -> None:
         """Publish the staged rest-v{version}.json by asking the catalog
         facade to link it into its public place and compare-and-swap the
         pointer (lake/rest_catalog.py). 409 = lost the race: same error
@@ -713,8 +702,6 @@ class LakeTable:
             return
         if status == 409:
             _cleanup_staged()  # definitive: the CAS never linked it
-            if extra:
-                self._pending_commit_extra = extra
             raise CommitConflictError(
                 f"catalog rejected commit of {self.name} v{version}: "
                 f"{body.get('error')}"
@@ -741,8 +728,6 @@ class LakeTable:
                 commit.snapshot_path(self.path, version)
             ):
                 return  # applied, then a later commit advanced the pointer
-        if extra:
-            self._pending_commit_extra = extra
         if not we_removed_staged:
             # staged name gone but no public snapshot: an outcome this
             # client cannot resolve (e.g. external cleanup raced us) —
@@ -950,119 +935,139 @@ class LakeTable:
         same ``N`` apart, since each write overwrites its own directory."""
         return f"{kind}/s{snapshot_id}/{uuid.uuid4().hex}"
 
-    def _write_files(self, df: DataFrame, snapshot_id: int, bucketed: bool) -> list[str]:
-        """Write df as parquet under ``_write_dir("data", snapshot_id)``;
-        returns table-relative paths. PK tables write one directory per
-        PK-hash bucket so merges can prune untouched buckets."""
-        rel = self._write_dir("data", snapshot_id)
-        out = os.path.join(self.path, rel)
-        if bucketed:
-            with self._micros_timestamps():
-                (
-                    self._writer(
-                        df.withColumn("__bucket", self._bucket_col()).repartition(
-                            self.n_buckets, "__bucket"
-                        )
-                    )
-                    .partitionBy("__bucket")
-                    .mode("overwrite")
-                    .parquet(out)
+    def _write_files(
+        self,
+        df: DataFrame,
+        snapshot_id: int,
+        n_files: int | None = None,
+        sort_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+    ) -> list[str]:
+        """The one data-file writer: write ``df`` as parquet under
+        ``_write_dir("data", snapshot_id)`` in the table's layout and
+        return the table-relative paths. Every write — append, overwrite,
+        merge, row-level rewrite, tier, compaction — goes through here,
+        so a table has one layout, as an Iceberg table has one write
+        order that writes and ``rewrite_data_files`` both follow.
+
+        - PK table: one directory per PK-hash bucket (``__bucket=b``), so
+          merges prune untouched buckets. Hash-partitioning on the bucket
+          puts each bucket in one task, hence one file; with no partition
+          count AQE sizes the write by its bytes.
+        - Partition spec (hidden partitioning): the derived value names
+          the directory, the source column stays in the file (Iceberg
+          §4). One shuffle on the partition tuple, so a write emits one
+          file per partition instead of #tasks × #partitions fragments,
+          rows ordered within by the layout order.
+        - Otherwise: range-partitioned and sorted on the layout order, so
+          files get near-disjoint [min, max] ranges from the first write
+          and manifest skipping works without a compaction pass. The
+          partition count is ``n_files`` (compaction), else
+          ``write.cluster-partitions``, else 16 for a z-order and AQE's
+          byte sizing for a sort order. With no order, a compaction
+          coalesces to ``n_files`` files.
+
+        The layout order is the compaction's explicit ``sort_by`` /
+        ``zorder_by``, else the table's ``write.zorder-by`` (the Morton
+        key of operators/zorder.py, which prunes on every listed column)
+        or ``write.sort-order``."""
+        layout = self._layout_columns()
+        parts: list[str] = []
+        if self.primary_key:
+            parts = ["__bucket"]
+            df = df.withColumn("__bucket", self._bucket_col()).repartition("__bucket")
+        else:
+            if not (sort_by or zorder_by):
+                sort_by = layout.get("write.sort-order")
+                zorder_by = layout.get("write.zorder-by")
+            order = [F.col(c) for c in sort_by or []]
+            if zorder_by:
+                from fluss_iceberg_spark.operators.zorder import zorder_key
+
+                df = df.withColumn("__z", zorder_key(df, zorder_by))
+                order = [F.col("__z")]
+            if self.partition_spec:
+                parts = [f"__p_{p['name']}" for p in self.partition_spec]
+                df = df.select(
+                    "*",
+                    *[
+                        _partition_expr(p).alias(n)
+                        for p, n in zip(self.partition_spec, parts)
+                    ],
+                ).repartition(*parts)
+                if order:
+                    df = df.sortWithinPartitions(*parts, *order)
+            elif order:
+                n = n_files or self.properties.get(
+                    "write.cluster-partitions", 16 if zorder_by else None
                 )
-            return manifest.written_files(self.path, rel)
-        order = self._write_order_cols()
-        if self.partition_spec:
-            # Hidden partitioning: the derived value names the directory;
-            # the source column stays in the data file (Iceberg §4 —
-            # queries never reference partition columns). One shuffle on
-            # the partition tuple concentrates each partition's rows so
-            # the write emits one file per partition per micro-batch
-            # instead of #tasks × #partitions fragments; at 100 TB a
-            # fanout writer (no shuffle) plus compaction is the
-            # alternative when single partitions exceed executor memory.
-            pnames = [f"__p_{p['name']}" for p in self.partition_spec]
-            pdf = df.select(
-                "*",
-                *[
-                    _partition_expr(p).alias(f"__p_{p['name']}")
-                    for p in self.partition_spec
-                ],
-            ).repartition(*[F.col(n) for n in pnames])
-            if order:
-                pdf = pdf.sortWithinPartitions(*pnames, *order)
-            with self._micros_timestamps():
-                self._writer(pdf).partitionBy(*pnames).mode("overwrite").parquet(out)
-            return manifest.written_files(self.path, rel)
-        if order:
-            # range-cluster every append on the declared sort order (the
-            # Iceberg write.sort-order role): files get near-disjoint
-            # [min,max] ranges from the FIRST write, so manifest skipping
-            # works continuously instead of only after a sort compaction.
-            # One extra range shuffle per append, amortized across every
-            # subsequent pruned scan.
-            n = self.properties.get("write.cluster-partitions")
-            rcols = [F.col(c) for c in order]
-            df = (
-                df.repartitionByRange(int(n), *rcols)
-                if n
-                else df.repartitionByRange(*rcols)
-            ).sortWithinPartitions(*order)
+                df = (
+                    df.repartitionByRange(int(n), *order)
+                    if n
+                    else df.repartitionByRange(*order)
+                ).sortWithinPartitions(*order)
+            elif n_files:
+                df = df.coalesce(n_files)
+            if zorder_by:
+                df = df.drop("__z")
+        rel = self._write_dir("data", snapshot_id)
         with self._micros_timestamps():
-            self._writer(df).mode("overwrite").parquet(out)
+            self._writer(df).partitionBy(*parts).mode("overwrite").parquet(
+                os.path.join(self.path, rel)
+            )
         return manifest.written_files(self.path, rel)
 
-    def _write_order_cols(self) -> list[str]:
-        """Columns of the ``write.sort-order`` table property (log tables;
-        PK tables are bucket-clustered by key hash instead). Unknown
-        columns raise at write time, not silently no-op."""
-        spec = self.properties.get("write.sort-order")
-        if not spec or self.primary_key:
-            return []
-        cols = [c.strip().strip("`") for c in spec.split(",") if c.strip()]
-        for c in cols:
-            if c not in self.schema.fieldNames():
+    def _layout_columns(self) -> dict[str, list[str]]:
+        """The columns each write-layout property of the table names —
+        ``write.sort-order`` (range clustering, any number of columns)
+        and ``write.zorder-by`` (Morton clustering over exactly two) —
+        checked against the schema. The writer, ALTER (``set_properties``)
+        and RENAME/DROP COLUMN (``_guard_column_references``) all read
+        them here, so a bad spec fails at ALTER, not at the next write.
+        ``write.clustered-by``, once the one-column form of the sort
+        order, is refused with a pointer to it."""
+        if "write.clustered-by" in self.properties:
+            raise ValueError(
+                f"{self.name}: write.clustered-by is not supported; set "
+                "write.sort-order to the same column (a transform such as "
+                "day(ts) is ts)"
+            )
+        out = {}
+        for prop in ("write.sort-order", "write.zorder-by"):
+            spec = self.properties.get(prop)
+            if spec is None:
+                continue
+            cols = [c.strip().strip("`") for c in spec.split(",") if c.strip()]
+            if prop == "write.zorder-by" and (
+                len(cols) != 2 or cols[0] == cols[1]
+            ):
                 raise ValueError(
-                    f"{self.name}: write.sort-order column {c!r} not in schema"
+                    f"{self.name}: write.zorder-by must name exactly two "
+                    f"columns ('colA,colB'), got {spec!r}"
                 )
-        return cols
-
-    _CLUSTER_SPEC_RE = re.compile(
-        r"^(?:(?:day|hour|month|year)\s*\(\s*(\w+)\s*\)|(\w+))$"
-    )
-
-    def _cluster_column(self) -> str | None:
-        """Column named by the ``write.clustered-by`` table property
-        (Iceberg's write.distribution-mode=range + sort-order role).
-        Accepted forms: ``col`` or ``day(col)``/``hour(col)`` etc. — the
-        transform names document intent; range partitioning clusters at
-        whatever granularity the data has, so only the column matters."""
-        spec = self.properties.get("write.clustered-by")
-        if not spec:
-            return None
-        m = self._CLUSTER_SPEC_RE.match(spec.strip())
-        if not m:
-            raise ValueError(f"{self.name}: bad write.clustered-by spec {spec!r}")
-        col = m.group(1) or m.group(2)
-        if col not in self.schema.fieldNames():
-            raise ValueError(f"{self.name}: write.clustered-by unknown column {col!r}")
-        return col
+            unknown = [c for c in cols if c not in self.schema.fieldNames()]
+            if unknown:
+                raise ValueError(
+                    f"{self.name}: {prop} columns {unknown} not in schema"
+                )
+            if cols:
+                out[prop] = cols
+        if len(out) > 1:
+            raise ValueError(
+                f"{self.name}: write.sort-order and write.zorder-by are exclusive"
+            )
+        return out
 
     def append(self, df: DataFrame) -> Snapshot:
         """Log-table append (S14 batch form). New snapshot = parent files +
-        newly written files; existing data is never rewritten.
-
-        If the table declares ``write.clustered-by``, rows are
-        range-repartitioned and sorted on that column before writing, so
-        each file covers a tight, non-overlapping value range — that is
-        what makes the manifest min/max file skipping (``read(where=)``)
-        prune to O(matching slice) on time-series tables at 100 TB,
-        instead of every file straddling the full time range.
-
-        ``write.zorder-by`` ("colA,colB") is the two-dimensional form:
-        rows are laid out along a Morton curve over the rank-bucketed
-        column pair (operators/zorder.py — Iceberg's
-        ``rewrite_data_files(sort_order => 'zorder(a, b)')``), so range
-        predicates on EITHER column prune files, not just the leading
-        one."""
+        newly written files; existing data is never rewritten. The files
+        follow the table's layout (``_write_files``): under
+        ``write.sort-order`` each covers a tight, non-overlapping value
+        range, so manifest min/max skipping (``read(where=)``) prunes to
+        O(matching slice) on time-series tables at 100 TB;
+        ``write.zorder-by`` ("colA,colB") is the two-dimensional form, so
+        range predicates on EITHER column prune files (Iceberg's
+        ``rewrite_data_files(sort_order => 'zorder(a, b)')``)."""
         return self._append(df, self.snapshot)
 
     def _append(self, df: DataFrame, parent_of: Callable[[], Snapshot | None]) -> Snapshot:
@@ -1071,41 +1076,8 @@ class LakeTable:
         if self.primary_key:
             raise ValueError(f"{self.name}: PK table requires merge(), not append()")
         df = self._enforce_not_null(self._prepare(df))
-        zcols = self.properties.get("write.zorder-by")
-        ccol = self._cluster_column()
-        if zcols is not None:
-            from fluss_iceberg_spark.operators.zorder import zorder_layout
-
-            # validate eagerly (mirrors _cluster_column): a typo'd column
-            # or wrong arity should fail with a named error here, not an
-            # opaque one deep inside approxQuantile / tuple unpacking
-            pair = [c.strip() for c in zcols.split(",") if c.strip()]
-            if len(pair) != 2:
-                raise ValueError(
-                    f"{self.name}: write.zorder-by must name exactly two "
-                    f"columns ('colA,colB'), got {zcols!r}"
-                )
-            unknown = [c for c in pair if c not in df.columns]
-            if unknown:
-                raise ValueError(
-                    f"{self.name}: write.zorder-by columns {unknown} not in "
-                    f"table columns {df.columns}"
-                )
-            a, b = pair
-            n = int(self.properties.get("write.cluster-partitions", "16"))
-            df = zorder_layout(df, a, b, n)
-        elif ccol is not None:
-            # partition count: explicit property, else the session default
-            # (AQE then sizes the write by bytes — at scale that is the
-            # right behavior; small writes may coalesce to few files)
-            n = self.properties.get("write.cluster-partitions")
-            if n is not None:
-                df = df.repartitionByRange(int(n), F.col(ccol))
-            else:
-                df = df.repartitionByRange(F.col(ccol))
-            df = df.sortWithinPartitions(ccol)
         version = self._next_version()
-        files = self._write_files(df, version, bucketed=False)
+        files = self._write_files(df, version)
         parent = parent_of()
         return self._commit("append", parent, (parent.files if parent else []) + files)
 
@@ -1128,7 +1100,7 @@ class LakeTable:
         self._check_rewrite_allowed("overwrite")
         df = self._enforce_not_null(self._prepare(df))
         version = self._next_version()
-        files = self._write_files(df, version, bucketed=bool(self.primary_key))
+        files = self._write_files(df, version)
         return self._commit("overwrite", self.snapshot(), files)
 
     def merge(self, updates: DataFrame, deletes: DataFrame | None = None) -> Snapshot:
@@ -1246,20 +1218,12 @@ class LakeTable:
                 r["__bucket"] for r in upd.select("__bucket").distinct().collect()
             ]
 
-        if parent is None or not parent.files:
-            files = self._write_files(updates, version, bucketed=True)
-            return self._commit(
-                "merge", parent, files, summary={"touched_buckets": touched}
-            )
-
         # split parent files into touched vs untouched buckets
         touched_set = set(touched)
         bucket_of = manifest._bucket_of_path
-        keep_files = [f for f in parent.files if bucket_of(f) not in touched_set]
-        old_touched = [f for f in parent.files if bucket_of(f) in touched_set]
-
-        rel = self._write_dir("data", version)
-        out = os.path.join(self.path, rel)
+        parent_files = parent.files if parent else []
+        keep_files = [f for f in parent_files if bucket_of(f) not in touched_set]
+        old_touched = [f for f in parent_files if bucket_of(f) in touched_set]
         if old_touched:
             old_df = self._read_live(
                 old_touched, self.schema, self.field_ids, parent
@@ -1284,21 +1248,7 @@ class LakeTable:
             new_state = survivors.unionByName(updates)
         else:
             new_state = updates
-        # hash-partitioning on the bucket puts each bucket in one task,
-        # hence one file; with no partition count AQE sizes the write by
-        # its bytes
-        with self._micros_timestamps():
-            (
-                self._writer(
-                    new_state.withColumn("__bucket", self._bucket_col()).repartition(
-                        "__bucket"
-                    )
-                )
-                .partitionBy("__bucket")
-                .mode("overwrite")
-                .parquet(out)
-            )
-        files = sorted(keep_files + manifest.written_files(self.path, rel))
+        files = sorted(keep_files + self._write_files(new_state, version))
         return self._commit(
             "merge", parent, files, summary={"touched_buckets": touched}
         )
@@ -1377,11 +1327,7 @@ class LakeTable:
             r["__bucket"] for r in keyed.select("__bucket").distinct().collect()
         }
         touched = [f for f in snap.files if manifest._bucket_of_path(f) in buckets]
-        rel_dir = self._write_dir("deletes", version)
-        keys.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.path, rel_dir)
-        )
-        new_del = manifest.written_files(self.path, rel_dir)
+        new_del = self._write_delete_file(keys, version)
         # exact per-bucket hide counts: semi-join LIVE rows of touched
         # buckets against the keys (bounded by the key set's buckets)
         if touched:
@@ -1452,13 +1398,13 @@ class LakeTable:
             )
         matched = F.coalesce(_where_filter(where), F.lit(False))
         pos_df = (
-            self._tagged_live_rows(touched, snap)
+            self._tagged_live_rows(touched, snap, self.schema, self.field_ids)
             .filter(matched)
             .select("__file", "__pos")
         )
         version = self._next_version()
         # a delete file is O(matched rows) of (path, long) — single file
-        new_del, per_file = self._write_delete_file(pos_df, version)
+        new_del, per_file = self._write_position_deletes(pos_df, version)
         n_del = sum(per_file.values())
         delete_files = list(snap.delete_files) + new_del
         delete_meta = {
@@ -1497,13 +1443,27 @@ class LakeTable:
             return self._mor_update(set_exprs, where)
         return self._row_level_rewrite("update", where, set_exprs=set_exprs)
 
-    def _tagged_live_rows(self, files: list[str], snap: Snapshot):
-        """Live rows of ``files`` with (__file, __pos) provenance columns —
-        the shared scan under both merge-on-read write paths."""
-        ext, cols = self._alias_projection(self.schema, self.field_ids)
+    def _tagged_live_rows(
+        self,
+        files: list[str],
+        snap: Snapshot | None,
+        sch: T.StructType,
+        fids: dict[str, int],
+        active: list[tuple[str, dict]] | None = None,
+    ):
+        """Live rows of ``files`` under the target schema with (__file,
+        __pos) provenance columns — the one merge-on-read scan, under
+        ``_read_live`` (which states the delete semantics) and both
+        merge-on-read write paths. ``active``: the delete files ``snap``
+        still applies to ``files``, when the caller has them."""
+        if active is None:
+            active = snap.active_deletes(files) if snap is not None else []
+        ext, cols = self._alias_projection(sch, fids)
         raw = self.spark.read.schema(ext).parquet(
             *[os.path.join(self.path, f) for f in files]
         )
+        # table-relative path from the scan's file metadata: manifests
+        # record paths as data/s{N}/..., so extract that suffix
         rel = F.regexp_extract(
             F.col("_metadata.file_path"), manifest.DATA_RELPATH_PATTERN, 1
         )
@@ -1512,27 +1472,39 @@ class LakeTable:
             rel.alias("__file"),
             F.col("_metadata.row_index").alias("__pos"),
         )
-        prior = self._active_deletes_df(snap, files)
-        if prior is not None:
+        pos = [d for d, meta in active if meta.get("kind") != "equality"]
+        if pos:
+            prior = (
+                self.spark.read.schema("__file string, __pos long")
+                .parquet(*[os.path.join(self.path, d) for d in pos])
+                .filter(F.col("__file").isin(list(set(files))))
+            )
             tagged = tagged.join(
                 F.broadcast(prior), on=["__file", "__pos"], how="left_anti"
             )
-        eqs = self._eq_deletes_for(snap, files)
+        eqs = [(d, meta) for d, meta in active if meta.get("kind") == "equality"]
         if eqs:
             tagged = self._apply_eq_deletes(tagged, eqs)
         return tagged
 
-    def _write_delete_file(self, pos_df: DataFrame, version: int) -> tuple:
-        """Write (__file, __pos) tombstones under
-        ``_write_dir("deletes", version)``; returns (relpaths,
-        per_file_counts)."""
+    def _write_delete_file(self, df: DataFrame, version: int) -> list[str]:
+        """The one delete-file writer: ``df`` — (__file, __pos) position
+        tombstones or a PK key set — as a single file under
+        ``_write_dir("deletes", version)`` (a delete file is O(deleted
+        rows)); returns its table-relative paths."""
         rel_dir = self._write_dir("deletes", version)
-        out = os.path.join(self.path, rel_dir)
-        pos_df.coalesce(1).write.mode("overwrite").parquet(out)
-        new_del = manifest.written_files(self.path, rel_dir)
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
+        return manifest.written_files(self.path, rel_dir)
+
+    def _write_position_deletes(self, pos_df: DataFrame, version: int) -> tuple:
+        """Write (__file, __pos) tombstones; returns (relpaths,
+        per_file_counts)."""
+        new_del = self._write_delete_file(pos_df, version)
         per_file = {
             r["__file"]: r["n"]
-            for r in self.spark.read.parquet(out)
+            for r in self.spark.read.parquet(
+                *[os.path.join(self.path, d) for d in new_del]
+            )
             .groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect()
         }
         return new_del, per_file
@@ -1559,13 +1531,15 @@ class LakeTable:
                 summary={"mode": "merge-on-read", "updated_rows": 0},
             )
         matched = F.coalesce(_where_filter(where), F.lit(False))
-        rows = self._tagged_live_rows(touched, snap).filter(matched)
+        rows = self._tagged_live_rows(
+            touched, snap, self.schema, self.field_ids
+        ).filter(matched)
         # one pass: persist so the tombstone write and the data write
         # don't re-scan (model-sized: only matched rows)
         rows = rows.persist()
         try:
             version = self._next_version()
-            new_del, per_file = self._write_delete_file(
+            new_del, per_file = self._write_position_deletes(
                 rows.select("__file", "__pos"), version
             )
             n_upd = sum(per_file.values())
@@ -1577,9 +1551,7 @@ class LakeTable:
                     for f in self.schema.fields
                 ]
             )
-            new_files = self._write_files(
-                updated, version, bucketed=bool(self.primary_key)
-            )
+            new_files = self._write_files(updated, version)
         finally:
             rows.unpersist()
         files = sorted(list(snap.files) + new_files)
@@ -1641,9 +1613,7 @@ class LakeTable:
                 ]
             )
         version = self._next_version()
-        new_files = self._write_files(
-            new_df, version, bucketed=bool(self.primary_key)
-        )
+        new_files = self._write_files(new_df, version)
         return self._commit(
             op,
             snap,
@@ -1725,41 +1695,6 @@ class LakeTable:
         ext, cols = self._alias_projection(sch, fids)
         return self.spark.read.schema(ext).parquet(*paths).select(*cols)
 
-    def _active_deletes_df(
-        self, snap: Snapshot | None, files: list[str]
-    ) -> DataFrame | None:
-        """(__file, __pos) tombstones referencing any of ``files``, or
-        None when the scan has no active deletes (the common case — the
-        anti-join then never enters the plan)."""
-        if snap is None or not snap.delete_files:
-            return None
-        hit = [
-            d
-            for d, meta in snap.active_deletes(files)
-            if meta.get("kind") != "equality"
-        ]
-        if not hit:
-            return None
-        return (
-            self.spark.read.schema("__file string, __pos long")
-            .parquet(*[os.path.join(self.path, d) for d in hit])
-            .filter(F.col("__file").isin(list(set(files))))
-        )
-
-    def _eq_deletes_for(
-        self, snap: Snapshot | None, files: list[str]
-    ) -> list[tuple[str, dict]]:
-        """Equality-delete files still active against any scanned file
-        (some scanned file is older than the delete's sequence and lives
-        in a bucket the delete recorded hides for)."""
-        if snap is None or not snap.delete_files:
-            return []
-        return [
-            (d, meta)
-            for d, meta in snap.active_deletes(files)
-            if meta.get("kind") == "equality"
-        ]
-
     def _apply_eq_deletes(
         self, tagged: DataFrame, eqs: list[tuple[str, dict]]
     ) -> DataFrame:
@@ -1805,30 +1740,14 @@ class LakeTable:
         anti-join side stays model-sized while data files are never
         rewritten. Scans of snapshots without deletes skip the joins
         entirely."""
-        paths = [os.path.join(self.path, f) for f in files]
-        dels = self._active_deletes_df(snap, files)
-        eqs = self._eq_deletes_for(snap, files)
-        if dels is None and not eqs:
-            return self._project_files(paths, sch, fids)
-        ext, cols = self._alias_projection(sch, fids)
-        raw = self.spark.read.schema(ext).parquet(*paths)
-        # table-relative path from the scan's file metadata: manifests
-        # record paths as data/s{N}/..., so extract that suffix
-        rel = F.regexp_extract(
-            F.col("_metadata.file_path"), manifest.DATA_RELPATH_PATTERN, 1
-        )
-        tagged = raw.select(
-            *cols,
-            rel.alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        if dels is not None:
-            tagged = tagged.join(
-                F.broadcast(dels), on=["__file", "__pos"], how="left_anti"
+        active = snap.active_deletes(files) if snap is not None else []
+        if not active:
+            return self._project_files(
+                [os.path.join(self.path, f) for f in files], sch, fids
             )
-        if eqs:
-            tagged = self._apply_eq_deletes(tagged, eqs)
-        return tagged.drop("__file", "__pos")
+        return self._tagged_live_rows(files, snap, sch, fids, active).drop(
+            "__file", "__pos"
+        )
 
     def _alias_projection(
         self, sch: T.StructType, fids: dict[str, int]
@@ -1948,7 +1867,7 @@ class LakeTable:
             rows.append(
                 (
                     d,
-                    "position-deletes",
+                    f"{m.get('kind', 'position')}-deletes",
                     -1,
                     int(m.get("rows", -1)),
                     json.dumps({}, sort_keys=True),
@@ -2061,41 +1980,6 @@ class LakeTable:
 
     # ---------- maintenance ----------
 
-    def _zorder_col(self, df: DataFrame, cols: list[str], bits: int = 10) -> F.Column:
-        """Z-value (Morton code) over numeric columns: per-column uniform
-        bucket id in [0, 2^bits) from a single min/max aggregate (a tiny
-        driver-side model, like the IVF centroids), bit-interleaved so
-        nearby (c1, c2, …) tuples get nearby z-values. Pure JVM arithmetic
-        — the only extra job is the one-row min/max agg."""
-        n = 1 << bits
-        bounds = df.agg(
-            *[F.min(c).cast("double").alias(f"lo_{c}") for c in cols],
-            *[F.max(c).cast("double").alias(f"hi_{c}") for c in cols],
-        ).first()
-        z = F.lit(0).cast("long")
-        for idx, c in enumerate(cols):
-            lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
-            if lo is None or hi is None or hi == lo:
-                continue  # constant / all-null column adds no ordering bits
-            bucket = F.least(
-                F.lit(n - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (F.col(c).cast("double") - F.lit(lo))
-                        / F.lit((hi - lo))
-                        * n
-                    ),
-                ),
-            ).cast("long")
-            bucket = F.coalesce(bucket, F.lit(0))
-            for b in range(bits):
-                z = z + F.shiftleft(
-                    F.shiftright(bucket, b).bitwiseAND(F.lit(1)),
-                    b * len(cols) + idx,
-                )
-        return z
-
     def compact(
         self,
         target_file_rows: int = 1_000_000,
@@ -2114,6 +1998,11 @@ class LakeTable:
         (30 s freshness → 2,880 commits/day); periodic compaction is what
         keeps scan planning and open-file overhead bounded at scale.
 
+        The rewrite follows the table's layout (``_write_files``): a
+        plain compaction of a ``write.sort-order`` or ``write.zorder-by``
+        table keeps that clustering, and ``sort_by``/``zorder_by``
+        override it for this rewrite.
+
         ``sort_by`` (log tables): range-partition + sort the rewrite on
         the given columns (Iceberg's sort-order rewrite strategy). Files
         then hold disjoint key ranges, so the manifest min/max bounds
@@ -2123,8 +2012,9 @@ class LakeTable:
         subsequent scan's pruning.
 
         ``zorder_by`` (log tables, numeric columns): cluster by the
-        interleaved-bit Morton code instead (the Delta/Iceberg OPTIMIZE
-        ZORDER role) — every listed column's min/max bounds tighten
+        interleaved-bit Morton code of equi-depth buckets instead
+        (operators/zorder.py; the Delta/Iceberg OPTIMIZE ZORDER role) —
+        every listed column's min/max bounds tighten
         per-file, so predicates on ANY of them prune, where a plain sort
         only serves its leading column.
 
@@ -2145,6 +2035,11 @@ class LakeTable:
         self._check_rewrite_allowed("compact")
         if sort_by and zorder_by:
             raise ValueError(f"{self.name}: sort_by and zorder_by are exclusive")
+        if self.primary_key and (sort_by or zorder_by):
+            raise ValueError(
+                f"{self.name}: sort_by/zorder_by compaction applies to log "
+                "tables; PK tables are clustered by bucket"
+            )
         if where is not None and only_smaller_than_bytes is not None:
             raise ValueError(
                 f"{self.name}: where and only_smaller_than_bytes are exclusive"
@@ -2245,54 +2140,7 @@ class LakeTable:
             n = snap.total_rows
         n_files = max(1, -(-n // target_file_rows))
         version = self._next_version()
-        rel = self._write_dir("data", version)
-        out = os.path.join(self.path, rel)
-        if self.primary_key:
-            if cluster:
-                raise ValueError(
-                    f"{self.name}: sort_by/zorder_by compaction applies to log "
-                    "tables; PK tables are clustered by bucket"
-                )
-            files = self._write_files(df, version, bucketed=True)
-        elif self.partition_spec:
-            # partitioned compact: rewrite WITHIN the partition layout
-            # (one shuffle on the partition tuple; in-partition order
-            # follows sort_by/zorder_by), so partition dirs and manifest
-            # partition values survive the rewrite
-            if zorder_by:
-                df = df.withColumn("__z", self._zorder_col(df, zorder_by))
-            pnames = [f"__p_{p['name']}" for p in self.partition_spec]
-            pdf = df.select(
-                "*",
-                *[
-                    _partition_expr(p).alias(f"__p_{p['name']}")
-                    for p in self.partition_spec
-                ],
-            ).repartition(*[F.col(n) for n in pnames])
-            if zorder_by:
-                pdf = pdf.sortWithinPartitions("__z").drop("__z")
-            elif sort_by:
-                pdf = pdf.sortWithinPartitions(*sort_by)
-            with self._micros_timestamps():
-                self._writer(pdf).partitionBy(*pnames).mode("overwrite").parquet(out)
-            files = manifest.written_files(self.path, rel)
-        else:
-            if zorder_by:
-                df = (
-                    df.withColumn("__z", self._zorder_col(df, zorder_by))
-                    .repartitionByRange(n_files, "__z")
-                    .sortWithinPartitions("__z")
-                    .select(*self.schema.fieldNames())
-                )
-            elif sort_by:
-                df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(
-                    *sort_by
-                )
-            else:
-                df = df.coalesce(n_files)
-            with self._micros_timestamps():
-                self._writer(df).mode("overwrite").parquet(out)
-            files = manifest.written_files(self.path, rel)
+        files = self._write_files(df, version, n_files, sort_by, zorder_by)
         summary = {"files_before": len(snap.files)}
         if sort_by:
             summary["sort_by"] = sort_by
@@ -2834,24 +2682,23 @@ class LakeTable:
 
         return iceberg_meta.export_iceberg_metadata(self)
 
-    def _persist_schema_meta(self) -> None:
-        meta_path = os.path.join(self.path, "meta", "table.json")
-        with open(meta_path) as f:
-            meta = json.load(f)
-        meta["schema"] = self.schema.jsonValue()
-        meta["not_null"] = self.not_null
-        meta["field_ids"] = self.field_ids
-        meta["name_log"] = self.name_log
-        meta["retired_names"] = self.retired_names
-        meta["next_field_id"] = self.next_field_id
-        meta["constraints"] = self.constraints
-        commit.atomic_write(meta_path, json.dumps(meta))
+    # the table.json fields a schema change (``_commit_schema_change``)
+    # writes; properties and the partition spec are written on their own
+    _SCHEMA_META = (
+        "schema", "not_null", "field_ids", "name_log", "retired_names",
+        "next_field_id", "constraints",
+    )
 
-    def _persist_properties(self) -> None:
+    def _persist_meta(self, *keys: str) -> None:
+        """Write this handle's ``keys`` fields into meta/table.json and
+        leave every other field as stored, so a schema change never
+        overwrites properties another handle set (and vice versa)."""
         meta_path = os.path.join(self.path, "meta", "table.json")
         with open(meta_path) as f:
             meta = json.load(f)
-        meta["properties"] = self.properties
+        for k in keys:
+            v = getattr(self, k)
+            meta[k] = v.jsonValue() if k == "schema" else v
         commit.atomic_write(meta_path, json.dumps(meta))
 
     def set_properties(self, props: dict) -> None:
@@ -2865,14 +2712,12 @@ class LakeTable:
         before = dict(self.properties)
         self.properties.update({str(k): str(v) for k, v in props.items()})
         try:
-            self._write_order_cols()
-            self._cluster_column()
+            self._layout_columns()
         except ValueError:
             self.properties = before
             raise
-        self._persist_properties()
         self._commit_schema_change(
-            "set-properties " + ",".join(sorted(map(str, props)))
+            "set-properties " + ",".join(sorted(map(str, props))), "properties"
         )
 
     def unset_properties(self, keys: list) -> None:
@@ -2880,17 +2725,9 @@ class LakeTable:
         absent key is a no-op, matching Spark/Iceberg."""
         for k in keys:
             self.properties.pop(str(k), None)
-        self._persist_properties()
         self._commit_schema_change(
-            "unset-properties " + ",".join(sorted(map(str, keys)))
+            "unset-properties " + ",".join(sorted(map(str, keys))), "properties"
         )
-
-    def _persist_partition_spec(self) -> None:
-        meta_path = os.path.join(self.path, "meta", "table.json")
-        with open(meta_path) as f:
-            meta = json.load(f)
-        meta["partition_spec"] = self.partition_spec
-        commit.atomic_write(meta_path, json.dumps(meta))
 
     def add_partition_field(self, spec: str) -> None:
         """Partition-spec evolution, add (Iceberg ``ALTER TABLE ... ADD
@@ -2914,8 +2751,9 @@ class LakeTable:
                 f"{self.name}: partition field {entry['name']!r} already exists"
             )
         self.partition_spec = self.partition_spec + [entry]
-        self._persist_partition_spec()
-        self._commit_schema_change(f"add-partition-field {entry['name']}")
+        self._commit_schema_change(
+            f"add-partition-field {entry['name']}", "partition_spec"
+        )
 
     def drop_partition_field(self, name_or_spec: str) -> None:
         """Partition-spec evolution, drop: future writes stop deriving
@@ -2933,15 +2771,16 @@ class LakeTable:
                 f"(have {[p['name'] for p in self.partition_spec]})"
             )
         self.partition_spec = keep
-        self._persist_partition_spec()
-        self._commit_schema_change(f"drop-partition-field {target}")
+        self._commit_schema_change(f"drop-partition-field {target}", "partition_spec")
 
-    def _commit_schema_change(self, what: str) -> None:
-        """Schema evolution lands as a snapshot (same files, zero data
-        I/O), so time travel to any earlier snapshot reads under the
-        schema THAT snapshot recorded — Iceberg's metadata-version
-        semantics. No-op before the first data commit."""
-        self._persist_schema_meta()
+    def _commit_schema_change(self, what: str, *keys: str) -> None:
+        """Persist the table.json fields ``keys`` changed (default: the
+        schema's, ``_SCHEMA_META``) and land the change as a snapshot
+        (same files, zero data I/O), so time travel to any earlier
+        snapshot reads under the schema THAT snapshot recorded —
+        Iceberg's metadata-version semantics. No snapshot before the
+        first data commit."""
+        self._persist_meta(*(keys or self._SCHEMA_META))
         snap = self.snapshot()
         if snap is not None:
             self._commit(
@@ -3061,9 +2900,9 @@ class LakeTable:
 
     def _guard_column_references(self, col: str, action: str) -> None:
         """Refuse a metadata-only column change that would brick later
-        writes: CHECK constraints, write.sort-order, and
-        write.clustered-by all store column references by NAME and are
-        evaluated in the write path (_prepare / _write_files), so a
+        writes: CHECK constraints, write.sort-order and write.zorder-by
+        all store column references by NAME and are evaluated in the
+        write path (_prepare / _write_files), so a
         rename/drop of a referenced column would make every subsequent
         append/merge raise. Word-boundary text match on constraint
         expressions — conservative (a name inside a string literal also
@@ -3076,18 +2915,12 @@ class LakeTable:
                     f"constraint {cname!r} references it ({expr}); DROP "
                     "CONSTRAINT first"
                 )
-        spec = self.properties.get("write.sort-order") or ""
-        if col in [c.strip().strip("`") for c in spec.split(",") if c.strip()]:
-            raise ValueError(
-                f"{self.name}: cannot {action} column {col!r} — it is in "
-                "write.sort-order; unset the property first"
-            )
-        cspec = self.properties.get("write.clustered-by")
-        if cspec and pat.search(cspec):
-            raise ValueError(
-                f"{self.name}: cannot {action} column {col!r} — it is in "
-                "write.clustered-by; unset the property first"
-            )
+        for prop, cols in self._layout_columns().items():
+            if col in cols:
+                raise ValueError(
+                    f"{self.name}: cannot {action} column {col!r} — it is in "
+                    f"{prop}; unset the property first"
+                )
 
     def rename_column(self, old: str, new: str) -> None:
         """Schema evolution: RENAME COLUMN, metadata-only (Iceberg §2.7).

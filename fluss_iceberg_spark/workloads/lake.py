@@ -503,7 +503,7 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write clustering end-to-end (`write.clustered-by` — the Iceberg
+    """Write clustering end-to-end (`write.sort-order` — the Iceberg
     write.distribution-mode=range + sort-order role): the events fixture
     lands range-clustered on ts, so the first-6-hours slice query reads
     only the files whose manifest bounds intersect the slice (the window
@@ -518,7 +518,7 @@ def clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events_clustered",
         ev.schema,
         properties={
-            "write.clustered-by": "day(ts)",
+            "write.sort-order": "ts",
             "write.cluster-partitions": "16",
         },
     )
@@ -1034,7 +1034,7 @@ def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orders_fact",
         fact_df.schema,
         properties={
-            "write.clustered-by": "date_key",
+            "write.sort-order": "date_key",
             "write.cluster-partitions": "8",
         },
     )

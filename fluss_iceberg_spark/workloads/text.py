@@ -1119,7 +1119,7 @@ def keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "postings",
         postings_df.schema,
         properties={
-            "write.clustered-by": "tok",
+            "write.sort-order": "tok",
             "write.cluster-partitions": "8",
         },
     )
@@ -1301,7 +1301,7 @@ def index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "postings_incr",
         base_postings.schema,
         properties={
-            "write.clustered-by": "tok",
+            "write.sort-order": "tok",
             "write.cluster-partitions": "8",
         },
     )

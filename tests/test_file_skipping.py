@@ -255,7 +255,7 @@ def test_compression_codec_property(spark):
 
 
 def test_clustered_append_prunes_to_time_slice(spark, tmp_path):
-    """write.clustered-by range-clusters appends so per-file min/max
+    """write.sort-order range-clusters appends so per-file min/max
     ranges are tight and disjoint: a one-slice predicate scans a small
     fraction of files instead of all of them."""
     from fluss_iceberg_spark.lake.table import LakeCatalog
@@ -272,7 +272,7 @@ def test_clustered_append_prunes_to_time_slice(spark, tmp_path):
     t = cat.create_table(
         "ev_clustered",
         rows.schema,
-        properties={"write.clustered-by": "hour(ts)", "write.cluster-partitions": "8"},
+        properties={"write.sort-order": "ts", "write.cluster-partitions": "8"},
     )
     t.append(scrambled)
     all_files = t.plan_scan()
@@ -300,6 +300,10 @@ def test_unclustered_append_unchanged(spark, tmp_path):
 
 
 def test_bad_cluster_spec_rejected(spark, tmp_path):
+    """write.clustered-by was the one-column form of write.sort-order: a
+    table that still carries it refuses to write rather than write
+    unclustered, and ALTER refuses to set it; both errors name
+    write.sort-order."""
     from fluss_iceberg_spark.lake.table import LakeCatalog
     from pyspark.sql import functions as F
     import pytest as _pytest
@@ -307,10 +311,14 @@ def test_bad_cluster_spec_rejected(spark, tmp_path):
     cat = LakeCatalog(spark, str(tmp_path / "wh3"))
     rows = spark.range(10).select(F.col("id").alias("a"))
     t = cat.create_table(
-        "bad_spec", rows.schema, properties={"write.clustered-by": "nope(x"}
+        "bad_spec", rows.schema, properties={"write.clustered-by": "a"}
     )
-    with _pytest.raises(ValueError, match="bad write.clustered-by"):
+    with _pytest.raises(ValueError, match="write.clustered-by .*write.sort-order"):
         t.append(rows)
+    t2 = cat.create_table("alter_spec", rows.schema)
+    with _pytest.raises(ValueError, match="write.clustered-by .*write.sort-order"):
+        t2.set_properties({"write.clustered-by": "a"})
+    assert "write.clustered-by" not in cat.load("alter_spec").properties
 
 
 def test_min_max_metadata_only(spark, tmp_path):
@@ -451,12 +459,60 @@ def test_write_sort_order_clusters_every_append(spark, tmp_path):
     assert len(kept) < len(all_files) / 2, (len(kept), len(all_files))
     # exactness through the pruned scan
     assert t.read(where=[("k", ">=", 3500)]).count() == df.filter("k >= 3500").count()
+    # a plain compaction keeps the sort order: unclustered files
+    # compacted after the property is set come out range-clustered
+    t3 = cat.create_table("so3", df.schema)
+    t3.append(df)
+    t3.set_properties({"write.sort-order": "k"})
+    t3.compact(target_file_rows=500)
+    all_files = t3.plan_scan()
+    assert len(all_files) == 8
+    kept = t3.plan_scan(where=[("k", ">=", 3500)])
+    assert len(kept) < len(all_files) / 2, (len(kept), len(all_files))
+    assert t3.read(where=[("k", ">=", 3500)]).count() == df.filter("k >= 3500").count()
     # unknown sort column fails loudly at write time
     t2 = cat.create_table("so2", df.schema, properties={"write.sort-order": "nope"})
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="not in schema"):
         t2.append(df)
+
+
+def test_pk_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """Merge (into an empty table and into a populated one), overwrite
+    and compact of a PK table write through the one data-file writer:
+    each bucket a write touches gets exactly one new file, whatever the
+    partitioning of the input."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from fluss_iceberg_spark.lake import manifest
+    from fluss_iceberg_spark.lake.table import LakeCatalog
+
+    cat = LakeCatalog(spark, str(tmp_path / "pkb"))
+    rows = spark.range(200).select(
+        F.col("id").cast("int").alias("k"), (F.col("id") * 2).alias("v")
+    ).repartition(8)
+    t = cat.create_table("pkb", rows.schema, primary_key=["k"], n_buckets=4)
+
+    def new_files_per_bucket(before):
+        added = [f for f in t.snapshot().files if f not in before]
+        return Counter(manifest._bucket_of_path(f) for f in added)
+
+    t.merge(rows)
+    assert new_files_per_bucket(set()) == {b: 1 for b in range(4)}
+    before = set(t.snapshot().files)
+    snap = t.merge(rows.filter("k < 3"))
+    assert new_files_per_bucket(before) == {
+        b: 1 for b in snap.summary["touched_buckets"]
+    }
+    for op in (lambda: t.overwrite(rows), lambda: t.compact()):
+        before = set(t.snapshot().files)
+        op()
+        assert new_files_per_bucket(before) == {b: 1 for b in range(4)}
+        assert len(t.snapshot().files) == 4
+    assert t.read().count() == 200
 
 
 def test_in_predicate_algebra():

@@ -230,13 +230,13 @@ def test_lake_merge_deletes_bucket_pruned(spark):
 
 def test_create_table_as_select(spark, eng):
     eng.sql(
-        "CREATE TABLE acct_big WITH ('write.clustered-by' = 'k') AS "
+        "CREATE TABLE acct_big WITH ('write.sort-order' = 'k') AS "
         "SELECT k, v, CAST(bal * 2 AS DECIMAL(15,2)) AS bal FROM acct WHERE k <= 2"
     )
     got = {(r.k, float(r.bal)) for r in eng.sql("SELECT k, bal FROM acct_big").collect()}
     assert got == {(1, 20.0), (2, 40.0)}
     t = eng.catalog.load("acct_big")
-    assert t.properties.get("write.clustered-by") == "k"
+    assert t.properties.get("write.sort-order") == "k"
     with pytest.raises(ValueError, match="already exists"):
         eng.sql("CREATE TABLE acct_big AS SELECT * FROM acct")
     eng.sql("CREATE TABLE IF NOT EXISTS acct_big AS SELECT * FROM acct")  # no-op

@@ -244,6 +244,9 @@ def test_equality_delete_hides_keys_without_rewrite(spark):
         assert snap.summary["mode"] == "equality"
         assert snap.summary["hidden_rows"] == 10
         assert snap.files == before  # no data file rewritten
+        # $files labels the delete file by its kind, as $delete_files does
+        content = {r.file_path: r.content for r in t.files().collect()}
+        assert [content[d] for d in snap.delete_files] == ["equality-deletes"]
         assert snap.total_rows == 90
         assert t.count_rows() == 90
         assert sorted(r.k for r in t.read().collect()) == list(range(10, 100))

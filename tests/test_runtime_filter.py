@@ -25,7 +25,7 @@ def star(spark, tmp_path):
         "fact",
         fact_df.schema,
         properties={
-            "write.clustered-by": "date_key",
+            "write.sort-order": "date_key",
             "write.cluster-partitions": "8",
         },
     )

@@ -4,12 +4,12 @@ column."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluss_iceberg_spark.operators.zorder import (
     equidepth_bucket,
     interleave_bits,
-    zorder_layout,
     zorder_morton_local,
 )
 
@@ -28,7 +28,7 @@ def test_spark_interleave_matches_local(spark):
         [(a, b) for a in range(8) for b in range(8)], "a int, b int"
     )
     got = df.select(
-        "a", "b", interleave_bits(F.col("a"), F.col("b"), 8).alias("z")
+        "a", "b", interleave_bits([F.col("a"), F.col("b")], 8).alias("z")
     ).collect()
     for r in got:
         assert r["z"] == zorder_morton_local(r["a"], r["b"]), (r["a"], r["b"])
@@ -44,7 +44,11 @@ def test_equidepth_bucket_is_rank_based(spark):
     assert got == {0: 10, 1: 40, 2: 40, 3: 10}
 
 
-def _prune_counts(spark, tmp_path, zorder: bool):
+def _prune_counts(spark, tmp_path, zorder: bool, op: str = "append"):
+    """File counts of a full scan and of three range scans after ``op``
+    writes the events. For ``overwrite``/``update`` the events are first
+    appended with no layout property, then the property is set and the
+    op rewrites every row, so the layout is the op's own."""
     from fluss_iceberg_spark.lake.table import LakeCatalog
 
     n = 20_000
@@ -57,10 +61,16 @@ def _prune_counts(spark, tmp_path, zorder: bool):
     props = (
         {"write.zorder-by": "user_id,value", "write.cluster-partitions": "16"}
         if zorder
-        else {"write.clustered-by": "user_id", "write.cluster-partitions": "16"}
+        else {"write.sort-order": "user_id", "write.cluster-partitions": "16"}
     )
-    t = cat.create_table("ev", df.schema, properties=props)
+    t = cat.create_table("ev", df.schema, properties=props if op == "append" else {})
     t.append(df)
+    if op != "append":
+        t.set_properties(props)
+    if op == "overwrite":
+        t.overwrite(df)
+    elif op == "update":
+        t.update({"value": "value"}, [("event_id", ">=", 0)])
     total = len(t.plan_scan())
     by_user = len(t.plan_scan([("user_id", ">=", 100), ("user_id", "<", 200)]))
     by_value = len(t.plan_scan([("value", ">=", 20.0), ("value", "<", 30.0)]))
@@ -86,8 +96,20 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
     assert rect <= min(by_user, by_value)
 
 
+@pytest.mark.parametrize("op", ["overwrite", "update"])
+def test_zorder_rewrites_keep_the_layout(spark, tmp_path, op):
+    """Every write of a write.zorder-by table lays its files out on the
+    curve, not only an append: an overwrite and a copy-on-write update
+    of unclustered files both leave files that prune on both columns."""
+    total, by_user, by_value, rect, _ = _prune_counts(spark, tmp_path, True, op)
+    assert total >= 8
+    assert by_user < total * 0.75, (by_user, total)
+    assert by_value < total * 0.75, (by_value, total)
+    assert rect <= min(by_user, by_value)
+
+
 def test_linear_layout_cannot_prune_second_dim(spark, tmp_path):
-    """The control: clustered-by user_id prunes user ranges hard but
+    """The control: sort-order user_id prunes user ranges hard but
     keeps EVERY file for a value-range scan — the gap z-ordering closes."""
     total, by_user, by_value, _, _ = _prune_counts(spark, tmp_path, False)
     assert by_user <= total * 0.5
@@ -157,9 +179,8 @@ def test_bm25_no_term_in_corpus_returns_empty(spark):
 
 def test_zorder_by_property_validation(spark, tmp_path):
     """write.zorder-by must fail fast with a named error on a typo'd
-    column or wrong arity (ADVICE r11), mirroring _cluster_column()."""
-    import pytest
-
+    column or wrong arity (ADVICE r11): at the write, at ALTER, and a
+    z-order column cannot be renamed or dropped away under the property."""
     from fluss_iceberg_spark.lake.table import LakeCatalog
 
     cat = LakeCatalog(spark, str(tmp_path / "wh"))
@@ -178,6 +199,13 @@ def test_zorder_by_property_validation(spark, tmp_path):
         )
         with pytest.raises(ValueError, match=frag):
             t.append(df)
+    t = cat.create_table("zv_ok", df.schema, properties={"write.zorder-by": "a,b"})
+    with pytest.raises(ValueError, match="typo"):
+        t.set_properties({"write.zorder-by": "a,typo"})
+    assert cat.load("zv_ok").properties["write.zorder-by"] == "a,b"
+    for change in (lambda: t.rename_column("b", "c"), lambda: t.drop_column("b")):
+        with pytest.raises(ValueError, match="write.zorder-by"):
+            change()
 
 
 def test_rrf_fuse_arithmetic(spark):
