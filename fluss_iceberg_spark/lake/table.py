@@ -70,6 +70,7 @@ from fluss_iceberg_spark.operators.util import (
     arrow_local_df,
     conf_bytes,
     release_checkpoint,
+    session_conf,
 )
 from pyspark.sql import types as T
 
@@ -189,6 +190,51 @@ def _shown_parent(s: Snapshot, retained: set[int]) -> int | None:
     )
 
 
+def _layout_columns(
+    name: str, schema: T.StructType, properties: dict
+) -> dict[str, list[str]]:
+    """The columns each write-layout property of table ``name`` names —
+    ``write.sort-order`` (range clustering, any number of columns)
+    and ``write.zorder-by`` (Morton clustering over exactly two) —
+    checked against the schema. CREATE (``LakeCatalog.create_table``),
+    the writer, ALTER (``set_properties``) and RENAME/DROP COLUMN
+    (``_guard_column_references``) all read them here, so a bad spec
+    fails at CREATE or ALTER, not at the next write.
+    ``write.clustered-by``, once the one-column form of the sort
+    order, is refused with a pointer to it."""
+    if "write.clustered-by" in properties:
+        raise ValueError(
+            f"{name}: write.clustered-by is not supported; set "
+            "write.sort-order to the same column (a transform such as "
+            "day(ts) is ts)"
+        )
+    out = {}
+    for prop in ("write.sort-order", "write.zorder-by"):
+        spec = properties.get(prop)
+        if spec is None:
+            continue
+        cols = [c.strip().strip("`") for c in spec.split(",") if c.strip()]
+        if prop == "write.zorder-by" and (
+            len(cols) != 2 or cols[0] == cols[1]
+        ):
+            raise ValueError(
+                f"{name}: write.zorder-by must name exactly two "
+                f"columns ('colA,colB'), got {spec!r}"
+            )
+        unknown = [c for c in cols if c not in schema.fieldNames()]
+        if unknown:
+            raise ValueError(
+                f"{name}: {prop} columns {unknown} not in schema"
+            )
+        if cols:
+            out[prop] = cols
+    if len(out) > 1:
+        raise ValueError(
+            f"{name}: write.sort-order and write.zorder-by are exclusive"
+        )
+    return out
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -217,8 +263,6 @@ class LakeTable:
         self.next_field_id: int = meta.get(
             "next_field_id", max(self.field_ids.values(), default=-1) + 1
         )
-        # state the next _commit() folds into its atomic snapshot write
-        self._pending_commit_extra: dict | None = None
         # when set (on_branch), snapshot()/commits target this branch ref
         self.write_branch: str | None = None
         # when set (CatalogTransaction.table), commits stage instead of
@@ -512,18 +556,6 @@ class LakeTable:
                 f"(this commit was based on v{base})"
             )
         version = self._next_version()
-        # A caller (tier(), the streaming pipeline) may ask the *next*
-        # commit to carry extra state — watermark advance, idempotence
-        # batch id — so it lands in the snapshot json in the same atomic
-        # write as the commit itself (no post-commit rewrite window in
-        # which a crash could double-expose or double-apply a batch).
-        extra = self._pending_commit_extra
-        self._pending_commit_extra = None
-        if extra:
-            operation = extra.get("operation", operation)
-            if hot_watermark is None:
-                hot_watermark = extra.get("hot_watermark")
-            summary = {**(summary or {}), **extra.get("summary", {})}
         # unchanged files carry their manifest entry forward; only files
         # new to this snapshot get one built (O(#added files))
         prev_meta = parent.file_meta if parent else {}
@@ -895,33 +927,12 @@ class LakeTable:
             pass
         return None
 
-    @contextmanager
-    def _micros_timestamps(self):
-        """Scoped ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``.
-
-        Spark's default parquet timestamp encoding is legacy INT96, which
-        carries NO footer min/max statistics — every timestamp predicate
-        would lose file skipping. Lake writes need INT64 micros (the
-        modern encoding, what Iceberg mandates) so stats exist — but the
-        writer API ignores a per-write ``outputTimestampType`` option, so
-        the session conf is the only lever; save/restore it here so lake
-        writes don't silently change the timestamp encoding of unrelated
-        DataFrame writes in the same session."""
-        key = "spark.sql.parquet.outputTimestampType"
-        prev = self.spark.conf.get(key)
-        self.spark.conf.set(key, "TIMESTAMP_MICROS")
-        try:
-            yield
-        finally:
-            self.spark.conf.set(key, prev)
-
     def _writer(self, df: DataFrame):
         """DataFrameWriter honoring the table's
         ``write.parquet.compression-codec`` property (the Iceberg write
         property; zstd/snappy/gzip/lz4/uncompressed). Codec choice is a
         per-table storage contract: zstd for cold archival slices, snappy
-        (Spark default) for hot scan-heavy tables. Callers executing the
-        write must hold ``_micros_timestamps()`` (footer-stats contract)."""
+        (Spark default) for hot scan-heavy tables."""
         w = df.write
         codec = self.properties.get("write.parquet.compression-codec")
         return w.option("compression", codec) if codec else w
@@ -971,7 +982,7 @@ class LakeTable:
         ``zorder_by``, else the table's ``write.zorder-by`` (the Morton
         key of operators/zorder.py, which prunes on every listed column)
         or ``write.sort-order``."""
-        layout = self._layout_columns()
+        layout = _layout_columns(self.name, self.schema, self.properties)
         parts: list[str] = []
         if self.primary_key:
             parts = ["__bucket"]
@@ -1011,52 +1022,17 @@ class LakeTable:
             if zorder_by:
                 df = df.drop("__z")
         rel = self._write_dir("data", snapshot_id)
-        with self._micros_timestamps():
+        # Spark's default parquet timestamp encoding, legacy INT96, has no
+        # footer min/max statistics, so timestamp predicates would skip no
+        # file. Data files are INT64 micros (what Iceberg mandates); the
+        # writer ignores a per-write option, so the session conf is the
+        # lever, scoped to this write.
+        micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+        with session_conf(self.spark, micros):
             self._writer(df).partitionBy(*parts).mode("overwrite").parquet(
                 os.path.join(self.path, rel)
             )
         return manifest.written_files(self.path, rel)
-
-    def _layout_columns(self) -> dict[str, list[str]]:
-        """The columns each write-layout property of the table names —
-        ``write.sort-order`` (range clustering, any number of columns)
-        and ``write.zorder-by`` (Morton clustering over exactly two) —
-        checked against the schema. The writer, ALTER (``set_properties``)
-        and RENAME/DROP COLUMN (``_guard_column_references``) all read
-        them here, so a bad spec fails at ALTER, not at the next write.
-        ``write.clustered-by``, once the one-column form of the sort
-        order, is refused with a pointer to it."""
-        if "write.clustered-by" in self.properties:
-            raise ValueError(
-                f"{self.name}: write.clustered-by is not supported; set "
-                "write.sort-order to the same column (a transform such as "
-                "day(ts) is ts)"
-            )
-        out = {}
-        for prop in ("write.sort-order", "write.zorder-by"):
-            spec = self.properties.get(prop)
-            if spec is None:
-                continue
-            cols = [c.strip().strip("`") for c in spec.split(",") if c.strip()]
-            if prop == "write.zorder-by" and (
-                len(cols) != 2 or cols[0] == cols[1]
-            ):
-                raise ValueError(
-                    f"{self.name}: write.zorder-by must name exactly two "
-                    f"columns ('colA,colB'), got {spec!r}"
-                )
-            unknown = [c for c in cols if c not in self.schema.fieldNames()]
-            if unknown:
-                raise ValueError(
-                    f"{self.name}: {prop} columns {unknown} not in schema"
-                )
-            if cols:
-                out[prop] = cols
-        if len(out) > 1:
-            raise ValueError(
-                f"{self.name}: write.sort-order and write.zorder-by are exclusive"
-            )
-        return out
 
     def append(self, df: DataFrame) -> Snapshot:
         """Log-table append (S14 batch form). New snapshot = parent files +
@@ -1070,16 +1046,29 @@ class LakeTable:
         ``rewrite_data_files(sort_order => 'zorder(a, b)')``)."""
         return self._append(df, self.snapshot)
 
-    def _append(self, df: DataFrame, parent_of: Callable[[], Snapshot | None]) -> Snapshot:
+    def _append(
+        self,
+        df: DataFrame,
+        parent_of: Callable[[], Snapshot | None],
+        operation: str = "append",
+        hot_watermark: int | None = None,
+        summary: dict | None = None,
+    ) -> Snapshot:
         """``append``, committed on top of ``parent_of()`` read after the
-        write (``tier`` passes the snapshot it drained from)."""
+        write (``tier`` passes the snapshot it drained from). The
+        ``operation``, ``hot_watermark`` and ``summary`` go to ``_commit``:
+        what a caller records lands in the same atomic snapshot write as
+        the files (``tier`` advances the watermark this way)."""
         if self.primary_key:
             raise ValueError(f"{self.name}: PK table requires merge(), not append()")
         df = self._enforce_not_null(self._prepare(df))
         version = self._next_version()
         files = self._write_files(df, version)
         parent = parent_of()
-        return self._commit("append", parent, (parent.files if parent else []) + files)
+        return self._commit(
+            operation, parent, (parent.files if parent else []) + files,
+            hot_watermark, summary,
+        )
 
     def _check_rewrite_allowed(self, op: str) -> None:
         """Log-table rewrites (compact/overwrite) re-emit existing rows to
@@ -1103,7 +1092,12 @@ class LakeTable:
         files = self._write_files(df, version)
         return self._commit("overwrite", self.snapshot(), files)
 
-    def merge(self, updates: DataFrame, deletes: DataFrame | None = None) -> Snapshot:
+    def merge(
+        self,
+        updates: DataFrame,
+        deletes: DataFrame | None = None,
+        summary: dict | None = None,
+    ) -> Snapshot:
         """PK-upsert (MERGE): last write per key wins (ST4, README.md:247-250).
 
         Bucketed copy-on-write: only buckets containing updated keys are
@@ -1124,17 +1118,25 @@ class LakeTable:
         of SQL MERGE, and the scale path for key-targeted deletion (the
         touched-bucket rewrite is bounded by the delete key set, never
         the table).
+
+        ``summary`` (optional): entries the commit adds to its snapshot
+        summary, in the same atomic write as the merge (Iceberg's snapshot
+        properties) — the streaming pipeline's idempotence batch id.
         """
-        return self._merge(updates, deletes, self.snapshot)
+        return self._merge(updates, deletes, self.snapshot, summary=summary)
 
     def _merge(
         self,
         updates: DataFrame,
         deletes: DataFrame | None,
         parent_of: Callable[[], Snapshot | None],
+        operation: str = "merge",
+        hot_watermark: int | None = None,
+        summary: dict | None = None,
     ) -> Snapshot:
         """``merge``, committed on top of ``parent_of()`` (``tier`` passes
-        the snapshot it drained from)."""
+        the snapshot it drained from); ``operation``, ``hot_watermark`` and
+        ``summary`` go to the commit as in ``_append``."""
         if not self.primary_key:
             raise ValueError(f"{self.name}: merge() requires a primary key")
         updates = self._enforce_not_null(self._prepare(updates))
@@ -1159,7 +1161,10 @@ class LakeTable:
             )
         try:
             seen = self._observed(observation)
-            return self._merge_inner(updates, deletes, parent_of, seen)
+            return self._merge_inner(
+                updates, deletes, parent_of, seen,
+                operation, hot_watermark, summary,
+            )
         finally:
             rel_u()
             rel_d()
@@ -1169,7 +1174,10 @@ class LakeTable:
         updates: DataFrame,
         deletes: DataFrame | None,
         parent_of: Callable[[], Snapshot | None],
-        seen: dict | None = None,
+        seen: dict | None,
+        operation: str,
+        hot_watermark: int | None,
+        summary: dict | None,
     ) -> Snapshot:
         """The merge of key-distinct ``updates``/``deletes``. ``seen``:
         the updates' observed ``buckets`` and ``rows``, if any."""
@@ -1250,7 +1258,8 @@ class LakeTable:
             new_state = updates
         files = sorted(keep_files + self._write_files(new_state, version))
         return self._commit(
-            "merge", parent, files, summary={"touched_buckets": touched}
+            operation, parent, files, hot_watermark,
+            {"touched_buckets": touched, **(summary or {})},
         )
 
     def _fits_broadcast(self, rows: int, keys: DataFrame) -> bool:
@@ -2709,13 +2718,9 @@ class LakeTable:
         effect for every subsequent write from any session. Write-path
         column specs are validated eagerly — a typo fails at ALTER, not
         at the next append."""
-        before = dict(self.properties)
-        self.properties.update({str(k): str(v) for k, v in props.items()})
-        try:
-            self._layout_columns()
-        except ValueError:
-            self.properties = before
-            raise
+        after = {**self.properties, **{str(k): str(v) for k, v in props.items()}}
+        _layout_columns(self.name, self.schema, after)
+        self.properties = after
         self._commit_schema_change(
             "set-properties " + ",".join(sorted(map(str, props))), "properties"
         )
@@ -2915,7 +2920,9 @@ class LakeTable:
                     f"constraint {cname!r} references it ({expr}); DROP "
                     "CONSTRAINT first"
                 )
-        for prop, cols in self._layout_columns().items():
+        for prop, cols in _layout_columns(
+            self.name, self.schema, self.properties
+        ).items():
             if col in cols:
                 raise ValueError(
                     f"{self.name}: cannot {action} column {col!r} — it is in "
@@ -3048,8 +3055,8 @@ class LakeTable:
         Append semantics for log tables, MERGE for PK tables — matching
         the reference tiering job (docker-compose.yml:95-111).
 
-        The watermark advance rides the merge/append commit itself (via
-        ``_pending_commit_extra``), so a crash can never leave a batch
+        The watermark advance rides the merge/append commit itself, so a
+        crash can never leave a batch
         visible in both the lake and the hot store: either the snapshot
         (files + watermark) landed atomically, or neither did.
 
@@ -3080,27 +3087,26 @@ class LakeTable:
         df = self._read_hot_batches(
             batches, with_batch_id=bool(self.primary_key)
         ).coalesce(n_files)
-        self._pending_commit_extra = {
+        commit_as = {
             "operation": "tier",
             "hot_watermark": new_wm,
             "summary": {"tiered_batches": batches},
         }
-        try:
-            if self.primary_key:
-                from pyspark.sql.window import Window
+        if self.primary_key:
+            from pyspark.sql.window import Window
 
-                w = Window.partitionBy(*self.primary_key).orderBy(
-                    F.col("__batch_id").desc()
-                )
-                resolved = (
-                    df.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .select(*self.schema.fieldNames())
-                )
-                return self._merge(resolved, None, lambda: parent)
-            return self._append(df.select(*self.schema.fieldNames()), lambda: parent)
-        finally:
-            self._pending_commit_extra = None
+            w = Window.partitionBy(*self.primary_key).orderBy(
+                F.col("__batch_id").desc()
+            )
+            resolved = (
+                df.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .select(*self.schema.fieldNames())
+            )
+            return self._merge(resolved, None, lambda: parent, **commit_as)
+        return self._append(
+            df.select(*self.schema.fieldNames()), lambda: parent, **commit_as
+        )
 
     def stream_appends(self) -> DataFrame:
         """U2: subscribe to a log table as a stream — the reference's
@@ -3499,16 +3505,18 @@ class LakeCatalog:
         Fluss/Paimon model) — combining both would fragment every bucket
         across every partition, so it's rejected."""
         path = self.table_path(name)
-        if self.exists(name):
-            if not replace:
-                raise ValueError(f"table {name} already exists")
-            shutil.rmtree(path)
+        if self.exists(name) and not replace:
+            raise ValueError(f"table {name} already exists")
+        # every refusal comes before a replace removes the old table
         spec = parse_partition_spec(partition_by, schema) if partition_by else []
         if spec and primary_key:
             raise ValueError(
                 f"table {name}: partition_by applies to log tables; "
                 "PK tables are bucketed by key"
             )
+        _layout_columns(name, schema, properties or {})
+        if self.exists(name):
+            shutil.rmtree(path)
         os.makedirs(os.path.join(path, "meta"), exist_ok=True)
         meta = {
             "name": name,

@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fluss_iceberg_spark.operators.util import session_conf
+
 # (name, spark expression builder) — integer features, cheap JVM ops;
 # the DuckDB replays live next to each query's oracle SQL
 FEATURES = (
@@ -100,10 +102,7 @@ def train_logreg(
     # tick loop's measured finding, r13). Scoped off for the loop; the
     # physical aggregation tree (partial → single final) is unchanged, so
     # gradient values are bit-identical.
-    spark = labeled.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with session_conf(labeled.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         for _ in range(epochs):
             z = F.lit(w[0])
             for j, c in enumerate(cols):
@@ -119,8 +118,6 @@ def train_logreg(
             ).collect()[0]
             for j in range(len(w)):
                 w[j] -= lr * float(grads[f"g{j}"]) / n
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     proj.unpersist()
     # fold the standardization back so the returned weights apply to
     # RAW features: w0' = w0 - sum(wj*mj/sj), wj' = wj/sj

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -21,6 +22,27 @@ def release_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Py4JError:
         pass
+
+
+@contextmanager
+def session_conf(spark: SparkSession, confs: dict):
+    """Set the session confs ``confs`` ({key: value}) for the body of a
+    ``with`` block and put each key back as it was on every exit path,
+    an exception included: a key the session had set gets its value
+    back, a key it had not set is unset again. The one way the package
+    changes a session conf for a while, so no query leaks one into the
+    queries after it."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _SIZE_SUFFIX = {"b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,

@@ -77,6 +77,29 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One testdata table as stored on disk. ``events.ts`` has shipped as
+    parquet TIMESTAMP(NANOS), which Spark 4 rejects
+    (PARQUET_TYPE_ILLEGAL); it reads as a long of nanos under a
+    session-settable legacy conf, set here, so this works under any
+    caller's session. ``micros_ts`` turns it into a timestamp."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+def micros_ts(events: DataFrame) -> DataFrame:
+    """``events`` (a batch or streaming read of the events fixture) with a
+    nanos-long ``ts`` as a microsecond TimestampType column — the same
+    truncation DuckDB's epoch_us applies. A vintage that stores ``ts`` as
+    a timestamp passes through."""
+    if isinstance(events.schema["ts"].dataType, T.LongType):
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return events
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Plain parquet scan → Catalyst gets full
     pushdown/pruning; no caching of rows, so each query plans its own
@@ -87,21 +110,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     change inference (``_INFERENCE_CONFS``): a repeat load of an unchanged
     file reads with that schema and submits no Spark job, and a file
     rewritten at the same path is inferred again."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS) which Spark 4 rejects
-        # (PARQUET_TYPE_ILLEGAL). Read nanos as long (session-settable legacy
-        # conf, so this works under any caller's session) and convert to a
-        # microsecond TimestampType column — same truncation DuckDB's
-        # epoch_us applies.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return _read_parquet(spark, path)
+    df = read_fixture(spark, sf_dir, name)
+    return micros_ts(df) if name == "events" else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

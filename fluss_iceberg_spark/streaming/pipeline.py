@@ -139,10 +139,8 @@ class ReferencePipeline:
             # the idempotence marker rides the merge commit's own atomic
             # snapshot write — a crash can never commit the revenue delta
             # without the batch_id, so a replayed batch is always detected
-            self.revenue._pending_commit_extra = {"summary": {"batch_id": batch_id}}
-            self.revenue.merge(merged)
+            self.revenue.merge(merged, summary={"batch_id": batch_id})
         finally:
-            self.revenue._pending_commit_extra = None
             enriched.unpersist()
         return True
 

@@ -45,9 +45,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-10: Lloyd-refined coarse clusters, 4-of-16 probes per
     query. The cluster-equi-join touches ~25% of the vectors per query."""
-    # Lloyd iterations shuffle repeatedly — size the exchanges for the
-    # small centroid state rather than a default-200 session
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.ivf_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES), 10)
 

@@ -6,54 +6,116 @@ Structured Streaming with availableNow) and return the final table state.
 The oracle is the one-shot batch SQL — asserting the reference pipeline's
 core contract: incremental upsert aggregation == batch recompute
 (SURVEY §5.4, FIXTURES invariant 4).
+
+The Structured Streaming queries share one harness, each piece the only
+copy of its logic:
+
+- ``_fixture_stream`` streams a testdata table in place (a symlink in a
+  scratch source directory, optionally with extra rows beside it), with
+  the batch loader's ts normalization;
+- ``_replay_source`` writes a frame as N files and streams it back one
+  file per micro-batch, so state must carry across N batches;
+- ``_drain`` runs a stream to completion with ``availableNow``, into a
+  memory sink (returning its table) or through ``foreachBatch``, with
+  the query's shuffle/state partition count (``_state_partitions``)
+  scoped to the run by ``operators.util.session_conf``;
+- ``_interval_join`` is the one body of the inner / left / full
+  stream-stream interval joins.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fluss_iceberg_spark.lake.table import LakeCatalog
-from fluss_iceberg_spark.operators.util import arrow_local_df
+from fluss_iceberg_spark.operators.util import arrow_local_df, session_conf
 from fluss_iceberg_spark.registry import query
 from fluss_iceberg_spark.sources import faker
-from fluss_iceberg_spark.sources.tpch import load_table
+from fluss_iceberg_spark.sources.tpch import load_table, micros_ts, read_fixture
 from fluss_iceberg_spark.streaming.pipeline import ReferencePipeline
 from fluss_iceberg_spark.workloads.dedup import CDC_CHUNKS_ORACLE, KMV_SETOPS_ORACLE
+from fluss_iceberg_spark.workloads.lake import _scratch
 from fluss_iceberg_spark.workloads.reference import _ENRICH_SQL, _reference_frames
 
 
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/tmp/fluss_stream_scratch/{tag}/{name}"
-    shutil.rmtree(d, ignore_errors=True)
-    return d
-
-
-def _events_stream(spark: SparkSession, sf_dir: str, scratch_name: str) -> DataFrame:
-    """File-source stream over the events fixture with the SAME ts
-    normalization as the batch loader. The on-disk ts type has varied
+def _fixture_stream(
+    spark: SparkSession, sf_dir: str, table: str, name: str, extra_rows=None
+) -> DataFrame:
+    """File-source stream over testdata ``table`` (symlinked into the
+    scratch directory ``name``) with the SAME ts normalization as the
+    batch loader (``tpch.micros_ts``). The on-disk ts type has varied
     across testdata vintages (int64 nanos vs parquet timestamp[us] →
     TIMESTAMP_NTZ), so the stream schema is taken from a batch read of the
     actual file rather than hardcoded — a hardcoded ``ts long`` silently
-    reads micros as nanos and collapses every timestamp 1000×."""
-    from pyspark.sql import types as T
+    reads micros as nanos and collapses every timestamp 1000×.
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = _scratch(sf_dir, scratch_name)
-    os.makedirs(src_dir, exist_ok=True)
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ``extra_rows(raw)`` builds rows in the fixture's on-disk form from its
+    batch read ``raw``; they land beside the fixture as one more file."""
+    src_dir = _scratch(sf_dir, name)
+    os.symlink(f"{sf_dir}/{table}.parquet", f"{src_dir}/{table}.parquet")
+    raw = read_fixture(spark, sf_dir, table)
+    if extra_rows is not None:
+        extra_rows(raw).select(*raw.columns).write.mode("append").parquet(src_dir)
     stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        # legacy nanos vintage: nanos → micros → TimestampType
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
+    return micros_ts(stream) if table == "events" else stream
+
+
+def _replay_source(
+    spark: SparkSession, df: DataFrame, src_dir: str, n_files: int
+) -> DataFrame:
+    """``df`` written as ``n_files`` parquet files under ``src_dir`` and
+    streamed back one file per micro-batch (``maxFilesPerTrigger=1``), so
+    state must persist across ``n_files`` batches."""
+    df.repartition(n_files).write.mode("overwrite").parquet(src_dir)
+    return (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+
+def _drain(
+    stream: DataFrame,
+    name: str,
+    *,
+    mode: str = "append",
+    on_batch=None,
+    partitions: str | None = None,
+) -> DataFrame | None:
+    """Run ``stream`` to completion with ``availableNow``, checkpointed
+    in a scratch directory removed afterwards. Without ``on_batch`` the
+    rows land in a memory sink named after ``name``, whose table is
+    returned; with it, each micro-batch goes to ``on_batch(df,
+    batch_id)`` (``foreachBatch``) and nothing is returned.
+
+    ``partitions`` is ``spark.sql.shuffle.partitions`` for the run, put
+    back when it ends however it ends. Streaming state shuffles use the
+    session's value — 200 under a default session, far too many for
+    these state sizes — and a state store's partition count is fixed by
+    the checkpoint's first batch; a foreachBatch loop's batch jobs plan
+    under it too (see ``_state_partitions``)."""
+    spark = stream.sparkSession
+    sink = f"{name}_{uuid.uuid4().hex[:8]}"
+    confs = {} if partitions is None else {"spark.sql.shuffle.partitions": partitions}
+    with (
+        session_conf(spark, confs),
+        tempfile.TemporaryDirectory(prefix=f"{name}_ckpt_") as ckpt,
+    ):
+        writer = stream.writeStream.trigger(availableNow=True).option(
+            "checkpointLocation", ckpt
+        )
+        if on_batch is None:
+            writer = writer.outputMode(mode).format("memory").queryName(sink)
+        else:
+            writer = writer.foreachBatch(on_batch)
+        writer.start().awaitTermination()
+    return spark.table(sink) if on_batch is None else None
 
 
 _EVENTS_ROWS_CACHE: dict = {}
@@ -178,32 +240,16 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True Structured Streaming: file source → tumbling 1-hour window
     aggregation (complete mode) → memory sink, driven to completion with
     availableNow. Result equals the batch windowed aggregation."""
-    # streaming state shuffles use the session's shuffle.partitions; under
-    # a default session that is 200 — far too many for this state size.
-    # The state-store partition count is fixed per checkpoint (fresh here);
-    # volume-sized per the r10 state-churn rule.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, sf_dir)
-    )
-    stream = _events_stream(spark, sf_dir, "events_src")
+    stream = _fixture_stream(spark, sf_dir, "events", "events_src")
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
     )
-    sink = f"stream_events_hourly_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
+    out = _drain(
+        agg, "stream_events_hourly", mode="complete",
+        partitions=_state_partitions(spark, sf_dir),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
+    return out.select(
         F.col("window.start").alias("hour"), "event_type", "n_events", "sum_value"
     )
 
@@ -241,30 +287,15 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the batch oracle expresses."""
     from fluss_iceberg_spark.streaming.stateful import streaming_sessionize
 
-    # Python-stateful shape: size for Arrow-worker parallelism, not
-    # store churn (see _state_partitions' sweep table)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, rows_per_partition=6_250),
+    stream = _fixture_stream(spark, sf_dir, "events", "stateful_src")
+    out = _drain(
+        streaming_sessionize(stream, gap_seconds=1800),
+        "stateful_sessions",
+        # Python-stateful shape: size for Arrow-worker parallelism, not
+        # store churn (see _state_partitions' sweep table)
+        partitions=_state_partitions(spark, sf_dir, rows_per_partition=6_250),
     )
-    stream = _events_stream(spark, sf_dir, "stateful_src")
-    sink = f"stateful_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_sessionize(stream, gap_seconds=1800)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
-        "user_id", "session_start", "session_end", "n_events"
-    )
+    return out.select("user_id", "session_start", "session_end", "n_events")
 
 
 @query("faker_pipeline_top5")  # generator output: no SQL oracle (rows-only)
@@ -306,6 +337,82 @@ def faker_pipeline_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _interval_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The interval-join family's one body: clicks ⋈ views on user_id
+    within a 2-hour event-time band, both sides watermarked, as a ``how``
+    stream-stream join drained with availableNow; rows (click_id,
+    view_id, user_id).
+
+    The source is the events fixture plus a SENTINEL pair (one click, one
+    view) 100 h after its max ts, so the final watermark provably clears
+    every real event and an outer join emits all its null-extended rows.
+    The sentinels share user -1 and one ts, so they join each other and
+    form one row, dropped by their negative ids."""
+
+    def sentinel(raw: DataFrame) -> DataFrame:
+        # in the SAME on-disk ts representation as the fixture vintage
+        if isinstance(raw.schema["ts"].dataType, T.LongType):
+            bump = F.col("max_ts") + F.lit(100 * 3600 * 10**9)  # nanos
+        else:
+            bump = F.col("max_ts") + F.expr("INTERVAL 100 HOURS")
+        return (
+            raw.agg(F.max("ts").alias("max_ts"))
+            .crossJoin(
+                arrow_local_df(
+                    spark,
+                    [(-1, "click"), (-2, "view")], "event_id long, event_type string"
+                )
+            )
+            .select(
+                "event_id",
+                bump.alias("ts"),
+                F.lit(-1).cast("long").alias("user_id"),
+                "event_type",
+                F.lit(0.0).alias("value"),
+                F.lit(None).cast("string").alias("props"),
+            )
+        )
+
+    stream = _fixture_stream(
+        spark, sf_dir, "events", f"{how}_interval_join_src", sentinel
+    )
+
+    def side(kind: str) -> DataFrame:
+        # withWatermark requires TIMESTAMP (LTZ) event time — NTZ is
+        # rejected (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). The cast is safe
+        # here: both sides shift identically and no timestamp is emitted,
+        # so the band predicate (a timestamp difference) is tz-invariant.
+        return (
+            stream.filter(F.col("event_type") == kind)
+            .select(
+                F.col("event_id").alias(f"{kind}_id"),
+                F.col("ts").cast("timestamp").alias(f"{kind}_ts"),
+                F.col("user_id").alias(f"{kind}_uid"),
+            )
+            .withWatermark(f"{kind}_ts", "4 hours")
+        )
+
+    joined = side("click").join(
+        side("view"),
+        F.expr(
+            "click_uid = view_uid"
+            " AND view_ts >= click_ts - INTERVAL 2 HOURS"
+            " AND view_ts <= click_ts"
+        ),
+        how,
+    )
+    out = _drain(
+        joined, f"stream_{how}_interval_join",
+        partitions=_state_partitions(spark, sf_dir),
+    )
+    return out.filter(
+        (F.coalesce("click_id", F.lit(0)) >= 0)
+        & (F.coalesce("view_id", F.lit(0)) >= 0)
+    ).select(
+        "click_id", "view_id", F.coalesce("click_uid", "view_uid").alias("user_id")
+    )
+
+
 @query(
     "stream_interval_join",
     oracle="""
@@ -328,50 +435,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     StreamingSymmetricHashJoin partitioned on user_id; the watermark +
     interval bound is what lets Spark evict join state at scale. Driven
     to completion with availableNow; result equals the batch band join."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, sf_dir)
-    )
-
-    def _side(kind: str, prefix: str) -> DataFrame:
-        # withWatermark requires TIMESTAMP (LTZ) event time — NTZ is
-        # rejected (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). The cast is safe
-        # here: both sides shift identically and no timestamp is emitted,
-        # so the band predicate (a timestamp difference) is tz-invariant.
-        return (
-            _events_stream(spark, sf_dir, f"interval_join_src_{prefix}")
-            .filter(F.col("event_type") == kind)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_uid"),
-            )
-            .withWatermark(f"{prefix}_ts", "4 hours")
-        )
-
-    joined = _side("click", "click").join(
-        _side("view", "view"),
-        F.expr(
-            "click_uid = view_uid"
-            " AND view_ts >= click_ts - INTERVAL 2 HOURS"
-            " AND view_ts <= click_ts"
-        ),
-    )
-    sink = f"stream_interval_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
-        F.col("click_id"), F.col("view_id"), F.col("click_uid").alias("user_id")
-    )
+    return _interval_join(spark, sf_dir, "inner")
 
 
 @query(
@@ -400,87 +464,7 @@ def stream_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     click (otherwise rows in the last watermark-delay window would stay
     unemitted and batch != stream). The sentinel is filtered from the
     output by its negative id. Result equals the batch LEFT band join."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, sf_dir)
-    )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    from pyspark.sql import types as T
-
-    src_dir = _scratch(sf_dir, "left_interval_join_src")
-    os.makedirs(src_dir, exist_ok=True)
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # sentinel rows (one click, one view) 100 h after the max event, in
-    # the SAME on-disk ts representation as the fixture vintage
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        bump = F.col("max_ts") + F.lit(100 * 3600 * 10**9)  # nanos
-    else:
-        bump = F.col("max_ts") + F.expr("INTERVAL 100 HOURS")
-    sentinel = (
-        raw.agg(F.max("ts").alias("max_ts"))
-        .crossJoin(
-            arrow_local_df(
-                spark,
-                [(-1, "click"), (-2, "view")], "event_id long, event_type string"
-            )
-        )
-        .select(
-            "event_id",
-            bump.alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-        .select(*raw.columns)  # fixture column order
-    )
-    sentinel.write.mode("append").parquet(src_dir)
-
-    stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-
-    def _side(kind: str, prefix: str) -> DataFrame:
-        return (
-            stream.filter(F.col("event_type") == kind)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_uid"),
-            )
-            .withWatermark(f"{prefix}_ts", "4 hours")
-        )
-
-    joined = _side("click", "click").join(
-        _side("view", "view"),
-        F.expr(
-            "click_uid = view_uid"
-            " AND view_ts >= click_ts - INTERVAL 2 HOURS"
-            " AND view_ts <= click_ts"
-        ),
-        "left_outer",
-    )
-    sink = f"stream_left_interval_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        spark.table(sink)
-        .filter(F.col("click_id") >= 0)
-        .select("click_id", "view_id", F.col("click_uid").alias("user_id"))
-    )
+    return _interval_join(spark, sf_dir, "left_outer")
 
 
 @query(
@@ -503,96 +487,7 @@ def stream_full_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same sentinel flush as the LEFT form (one far-future event per side,
     filtered from the output by negative id), completing the streaming
     outer-join family (inner / left / full) against one batch oracle."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, sf_dir)
-    )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    from pyspark.sql import types as T
-
-    src_dir = _scratch(sf_dir, "full_interval_join_src")
-    os.makedirs(src_dir, exist_ok=True)
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        bump = F.col("max_ts") + F.lit(100 * 3600 * 10**9)  # nanos vintage
-    else:
-        bump = F.col("max_ts") + F.expr("INTERVAL 100 HOURS")
-    sentinel = (
-        raw.agg(F.max("ts").alias("max_ts"))
-        .crossJoin(
-            arrow_local_df(
-                spark,
-                [(-1, "click"), (-2, "view")], "event_id long, event_type string"
-            )
-        )
-        .select(
-            "event_id",
-            bump.alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-        .select(*raw.columns)
-    )
-    sentinel.write.mode("append").parquet(src_dir)
-
-    stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-
-    def _side(kind: str, prefix: str) -> DataFrame:
-        return (
-            stream.filter(F.col("event_type") == kind)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_uid"),
-            )
-            .withWatermark(f"{prefix}_ts", "4 hours")
-        )
-
-    joined = _side("click", "click").join(
-        _side("view", "view"),
-        F.expr(
-            "click_uid = view_uid"
-            " AND view_ts >= click_ts - INTERVAL 2 HOURS"
-            " AND view_ts <= click_ts"
-        ),
-        "full_outer",
-    )
-    sink = f"stream_full_interval_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        spark.table(sink)
-        # drop the two sentinel rows (never joined: user_id -1 on both
-        # sides but opposite types never share a band... they DO share
-        # user -1 and the view sentinel ts == click sentinel ts is inside
-        # [click-2h, click] — so they match each other and form one row)
-        .filter(
-            (F.coalesce("click_id", F.lit(0)) >= 0)
-            & (F.coalesce("view_id", F.lit(0)) >= 0)
-        )
-        .select(
-            "click_id",
-            "view_id",
-            F.coalesce("click_uid", "view_uid").alias("user_id"),
-        )
-    )
+    return _interval_join(spark, sf_dir, "full_outer")
 
 
 @query(
@@ -630,17 +525,9 @@ def stream_log_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t.append(nat.filter(_F.col("nation_key") < 10))   # commit 1
     t.append(nat.filter(_F.col("nation_key") >= 10))  # commit 2
-    sink = f"stream_log_appends_{uuid.uuid4().hex[:8]}"
-    q = (
-        t.stream_appends()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(t.stream_appends(), "stream_log_appends").select(
+        "nation_key", "name"
     )
-    q.awaitTermination()
-    return spark.table(sink).select("nation_key", "name")
 
 
 @query(
@@ -726,34 +613,13 @@ def stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan ages state out (dropDuplicatesWithinWatermark)."""
     from fluss_iceberg_spark.operators.text import fingerprint as _fp
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, "documents"),
-    )
-    src_dir = _scratch(sf_dir, "dedup_src")
     docs = load_table(spark, sf_dir, "documents")
-    # 4 source files -> 4 micro-batches (state must persist across them)
-    docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, docs, _scratch(sf_dir, "dedup_src"), 4)
     deduped = _fp(stream).dropDuplicates(["fingerprint"]).select("fingerprint")
-    sink = f"stream_exact_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        deduped, "stream_exact_dedup",
+        partitions=_state_partitions(spark, sf_dir, "documents"),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink)
 
 
 @query(
@@ -789,27 +655,13 @@ def stream_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT order_priority, SUM(total_price) AS sum_price, "
         "COUNT(1) AS n_orders FROM orders_stream_log GROUP BY order_priority"
     )
-    src_dir = _scratch(sf_dir, "stream_mv_src")
-    orders.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, orders, _scratch(sf_dir, "stream_mv_src"), 4)
 
     def _fold(bdf, batch_id):
         t.append(bdf)
         eng.sql("REFRESH MATERIALIZED VIEW mv_stream_rev")
 
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .option(
-            "checkpointLocation", _scratch(sf_dir, "stream_mv_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, "stream_matview_refresh", on_batch=_fold)
     return eng.sql(
         "SELECT order_priority, CAST(sum_price AS DOUBLE) AS sum_price, "
         "n_orders FROM mv_stream_rev"
@@ -842,16 +694,6 @@ def stream_txn_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish), so no reader ever observes sink 1 reflecting a batch sink
     2 hasn't applied. Final join of both sinks must equal the batch
     aggregation of the whole stream (the oracle)."""
-    from pyspark.sql import types as T
-
-    # foreachBatch merge loop: no streaming state store — the conf
-    # drives the per-tick batch merge jobs, which want core-level
-    # parallelism (see _state_partitions' sweep table)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, rows_per_partition=1_000),
-    )
     cat = LakeCatalog(spark, _scratch(sf_dir, "txn_two_sinks_wh"))
     events = load_table(spark, sf_dir, "events")
     hourly = cat.create_table(
@@ -877,11 +719,7 @@ def stream_txn_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         primary_key=["event_type"],
         n_buckets=4,
     )
-    src_dir = _scratch(sf_dir, "txn_two_sinks_src")
-    events.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(events.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src_dir)
+    stream = _replay_source(spark, events, _scratch(sf_dir, "txn_two_sinks_src"), 4)
 
     def _on_batch(bdf: DataFrame, batch_id: int) -> None:
         hd = bdf.groupBy(
@@ -910,16 +748,13 @@ def stream_txn_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             tt.merge(mt)
 
-    q = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", _scratch(sf_dir, "txn_two_sinks_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream, "stream_txn_two_sinks", on_batch=_on_batch,
+        # foreachBatch merge loop: no streaming state store — the conf
+        # drives the per-tick batch merge jobs, which want core-level
+        # parallelism (see _state_partitions' sweep table)
+        partitions=_state_partitions(spark, sf_dir, rows_per_partition=1_000),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return hourly.read().join(totals.read(), on="event_type").select(
         "hour", "event_type", "n_events", "total_events"
     )
@@ -942,11 +777,6 @@ def stream_watermarked_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic event-time spread (≤20 min), so every duplicate is caught
     and the surviving fingerprint set equals batch DISTINCT — while the
     state store's retention is bounded by the horizon, not the corpus."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, sf_dir)
-    )
-    src_dir = _scratch(sf_dir, "wm_dedup_src")
     docs = load_table(spark, sf_dir, "documents")
     base = 1_700_000_000
     stamped = docs.select(
@@ -959,12 +789,7 @@ def stream_watermarked_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup = stamped.unionByName(
         stamped.withColumn("ts", F.col("ts") + F.expr("INTERVAL 5 MINUTES"))
     )
-    dup.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(dup.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, dup, _scratch(sf_dir, "wm_dedup_src"), 4)
     fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     deduped = (
         stream.select(fp.alias("fingerprint"), "ts")
@@ -972,19 +797,9 @@ def stream_watermarked_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["fingerprint"])
         .select("fingerprint")
     )
-    sink = f"stream_wm_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        deduped, "stream_wm_dedup", partitions=_state_partitions(spark, sf_dir)
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink)
 
 
 @query(
@@ -1018,27 +833,16 @@ def stream_wap_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("decimal(18,6)").alias("value"),
     )
     src_dir = _scratch(sf_dir, "wap_src")
-    ev.repartition(3).write.mode("overwrite").parquet(src_dir)
-    # poison file: same schema, NULL event_type — written beside the
-    # clean files so availableNow replays it as its own micro-batch
-    poison_dir = _scratch(sf_dir, "wap_poison")
+    stream = _replay_source(spark, ev, src_dir, 3)
+    # poison file: same schema, NULL event_type — written beside (and
+    # after) the clean files so availableNow replays it as its own
+    # micro-batch
     ev.limit(7).withColumn(
         "event_type", F.lit(None).cast("string")
-    ).coalesce(1).write.mode("overwrite").parquet(poison_dir)
-    for fn in os.listdir(poison_dir):
-        if fn.endswith(".parquet"):
-            shutil.copy(
-                os.path.join(poison_dir, fn),
-                os.path.join(src_dir, "zz_poison.parquet"),
-            )
+    ).coalesce(1).write.mode("append").parquet(src_dir)
     cat = LakeCatalog(spark, _scratch(sf_dir, "wap_wh"))
     t = cat.create_table("events_audited", ev.schema)
     t.create_branch("staging")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
 
     def _on_batch(bdf, batch_id):
         main_v = t.current_version()
@@ -1051,13 +855,8 @@ def stream_wap_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             t.drop_branch("staging")  # audit failed: discard the stage
             t.create_branch("staging")  # re-branch at main's head
-    q = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", _scratch(sf_dir, "wap_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+
+    _drain(stream, "stream_wap_gated", on_batch=_on_batch)
     return t.read().groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").cast("double").alias("sum_value"),
@@ -1117,22 +916,17 @@ def stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overhead inside the tick loop too: every join is explicitly
     # broadcast and every frame micro-batch-bounded, so its per-stage
     # re-planning round-trips buy nothing (measured ~1.5 s/query at
-    # sf0.1). Set directly before try so no failure can leak the
-    # settings into the session.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, "documents"),
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # sf0.1).
+    tick_confs = {
+        "spark.sql.shuffle.partitions": _state_partitions(spark, sf_dir, "documents"),
+        "spark.sql.adaptive.enabled": "false",
+    }
     try:
-        for b in range(4):
-            batch = docs.filter(F.pmod("doc_id", F.lit(4)) == b)
-            DD.neardup_admit_batch(buckets, owner_sets, admitted, batch, b)
+        with session_conf(spark, tick_confs):
+            for b in range(4):
+                batch = docs.filter(F.pmod("doc_id", F.lit(4)) == b)
+                DD.neardup_admit_batch(buckets, owner_sets, admitted, batch, b)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         docs.unpersist()
     return admitted.read().select("doc_id", "batch")
 
@@ -1168,25 +962,12 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream == batch for deterministic inference."""
     from fluss_iceberg_spark.operators import classifier as CL
 
-    src_dir = _scratch(sf_dir, "classifier_gate_src")
-    os.makedirs(src_dir, exist_ok=True)
-    os.symlink(f"{sf_dir}/documents.parquet", f"{src_dir}/documents.parquet")
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    stream = spark.readStream.schema(raw.schema).parquet(src_dir)
+    stream = _fixture_stream(spark, sf_dir, "documents", "classifier_gate_src")
     scored = CL.score_fixed(
         CL.featurize(stream.select("doc_id", "text")), [-40, 8, -1, 2, 4]
     )
     gated = scored.where(F.col("keep") == 1).select("doc_id", "logit")
-    sink = f"stream_classifier_gate_{uuid.uuid4().hex[:8]}"
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return _drain(gated, "stream_classifier_gate")
 
 
 @query(
@@ -1217,8 +998,6 @@ def stream_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("value").cast("double").alias("value"),
     )
-    src_dir = _scratch(sf_dir, "stream_ivm_src")
-    ev.repartition(3).write.mode("overwrite").parquet(src_dir)
     users = (
         ev.select("user_id")
         .distinct()
@@ -1237,22 +1016,13 @@ def stream_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ON sivm_events.user_id = sivm_users.user_id "
         "WHERE sivm_events.event_type = 'click'"
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, ev, _scratch(sf_dir, "stream_ivm_src"), 3)
 
     def handle(bdf, _bid: int) -> None:
         et.append(bdf)
         eng.views.refresh_matview("mv_click_seg")
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, "stream_ivm_join", on_batch=handle)
     return eng.sql(
         "SELECT event_id, user_id, segment, CAST(value AS DOUBLE) AS value "
         "FROM mv_click_seg"
@@ -1283,25 +1053,9 @@ def stream_sketch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fluss_iceberg_spark.operators import sketches as SK
 
     k = 64
-    # foreachBatch merge loop (no streaming state store): size the
-    # per-tick batch shuffles for the micro-batch volume, not a
-    # default-200 session (see _state_partitions' sweep table)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, "documents", rows_per_partition=1_000),
-    )
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    src_dir = _scratch(sf_dir, "sketch_refresh_src")
-    docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, docs, _scratch(sf_dir, "sketch_refresh_src"), 4)
     state_dir = _scratch(sf_dir, "sketch_refresh_state")
-    os.makedirs(state_dir, exist_ok=True)
     state: dict = {"path": None}
 
     def _on_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1319,18 +1073,15 @@ def stream_sketch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk.write.mode("overwrite").parquet(path)
         state["path"] = path
 
-    q = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option(
-            "checkpointLocation", _scratch(sf_dir, "sketch_refresh_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream, "stream_sketch_refresh", on_batch=_on_batch,
+        # foreachBatch merge loop (no streaming state store): size the
+        # per-tick batch shuffles for the micro-batch volume, not a
+        # default-200 session (see _state_partitions' sweep table)
+        partitions=_state_partitions(
+            spark, sf_dir, "documents", rows_per_partition=1_000
+        ),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     final = spark.read.parquet(state["path"])
     w = Window.partitionBy("src").orderBy("h")
     sketches = final.withColumn("rk", F.row_number().over(w))
@@ -1358,19 +1109,8 @@ def stream_tdigest_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         tdigest_merge_quantiles,
     )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, rows_per_partition=1_000),
-    )
-    src_dir = _scratch(sf_dir, "tdigest_refresh_src")
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, ev, _scratch(sf_dir, "tdigest_refresh_src"), 4)
     state_dir = _scratch(sf_dir, "tdigest_refresh_state")
 
     def _on_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1378,18 +1118,10 @@ def stream_tdigest_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(state_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option(
-            "checkpointLocation", _scratch(sf_dir, "tdigest_refresh_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream, "stream_tdigest_refresh", on_batch=_on_batch,
+        partitions=_state_partitions(spark, sf_dir, rows_per_partition=1_000),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     td = tdigest_merge_quantiles(spark.read.parquet(state_dir))
     exact = ev.groupBy(F.col("event_type").cast("string").alias("grp")).agg(
         F.expr("percentile(value, 0.5)").alias("p500_exact"),
@@ -1425,23 +1157,10 @@ def stream_cdc_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-chunked."""
     from fluss_iceberg_spark.operators.dedup import cdc_chunk_rows
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _state_partitions(spark, sf_dir, "documents", rows_per_partition=1_000),
-    )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src_dir = _scratch(sf_dir, "cdc_census_src")
-    docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _replay_source(spark, docs, _scratch(sf_dir, "cdc_census_src"), 4)
     chunks_dir = _scratch(sf_dir, "cdc_census_chunks")
     state_dir = _scratch(sf_dir, "cdc_census_state")
-    os.makedirs(state_dir, exist_ok=True)
     state: dict = {"path": None}
 
     def _on_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1461,16 +1180,12 @@ def stream_cdc_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         tick.write.mode("overwrite").parquet(path)
         state["path"] = path
 
-    q = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", _scratch(sf_dir, "cdc_census_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream, "stream_cdc_chunk_census", on_batch=_on_batch,
+        partitions=_state_partitions(
+            spark, sf_dir, "documents", rows_per_partition=1_000
+        ),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     chunks = spark.read.parquet(chunks_dir)
     census = spark.read.parquet(state["path"])
     return chunks.join(census, on="fp").select(

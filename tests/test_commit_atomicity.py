@@ -46,6 +46,19 @@ def test_tier_watermark_rides_the_commit(spark, tmp_path):
     assert t.union_read().count() == 20
 
 
+def test_merge_summary_rides_the_commit(spark, tmp_path):
+    """merge(summary=) lands in the merge's own snapshot, after the merge's
+    own entries, and only there: the next merge carries none of it."""
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    df = spark.range(4).select(F.col("id").alias("k"), F.lit("a").alias("v"))
+    t = cat.create_table("pk_t", df.schema, primary_key=["k"], n_buckets=2)
+    snap = t.merge(df, summary={"batch_id": 7})
+    assert list(snap.summary) == ["touched_buckets", "batch_id"]
+    assert snap.summary["batch_id"] == 7
+    assert t.snapshot().summary == snap.summary
+    assert "batch_id" not in t.merge(df).summary
+
+
 def test_pk_tier_orders_batches_last_write_wins(spark, tmp_path):
     cat = LakeCatalog(spark, str(tmp_path / "wh"))
     df = spark.range(10).select(F.col("id").alias("k"), F.lit("b1").alias("v"))

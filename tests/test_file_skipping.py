@@ -301,20 +301,32 @@ def test_unclustered_append_unchanged(spark, tmp_path):
 
 def test_bad_cluster_spec_rejected(spark, tmp_path):
     """write.clustered-by was the one-column form of write.sort-order: a
-    table that still carries it refuses to write rather than write
-    unclustered, and ALTER refuses to set it; both errors name
-    write.sort-order."""
+    table that still carries it (an older table.json) refuses to write
+    rather than write unclustered, and CREATE and ALTER refuse to set it;
+    every error names write.sort-order."""
+    import json
+    import os
+
     from fluss_iceberg_spark.lake.table import LakeCatalog
     from pyspark.sql import functions as F
     import pytest as _pytest
 
     cat = LakeCatalog(spark, str(tmp_path / "wh3"))
     rows = spark.range(10).select(F.col("id").alias("a"))
-    t = cat.create_table(
-        "bad_spec", rows.schema, properties={"write.clustered-by": "a"}
-    )
     with _pytest.raises(ValueError, match="write.clustered-by .*write.sort-order"):
-        t.append(rows)
+        cat.create_table(
+            "bad_spec", rows.schema, properties={"write.clustered-by": "a"}
+        )
+    assert not cat.exists("bad_spec")
+    cat.create_table("legacy_spec", rows.schema)
+    meta_path = os.path.join(cat.table_path("legacy_spec"), "meta", "table.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["properties"]["write.clustered-by"] = "a"
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with _pytest.raises(ValueError, match="write.clustered-by .*write.sort-order"):
+        cat.load("legacy_spec").append(rows)
     t2 = cat.create_table("alter_spec", rows.schema)
     with _pytest.raises(ValueError, match="write.clustered-by .*write.sort-order"):
         t2.set_properties({"write.clustered-by": "a"})
@@ -470,12 +482,11 @@ def test_write_sort_order_clusters_every_append(spark, tmp_path):
     kept = t3.plan_scan(where=[("k", ">=", 3500)])
     assert len(kept) < len(all_files) / 2, (len(kept), len(all_files))
     assert t3.read(where=[("k", ">=", 3500)]).count() == df.filter("k >= 3500").count()
-    # unknown sort column fails loudly at write time
-    t2 = cat.create_table("so2", df.schema, properties={"write.sort-order": "nope"})
+    # unknown sort column fails loudly at CREATE
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="not in schema"):
-        t2.append(df)
+        cat.create_table("so2", df.schema, properties={"write.sort-order": "nope"})
 
 
 def test_pk_writes_one_file_per_touched_bucket(spark, tmp_path):

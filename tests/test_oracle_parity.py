@@ -36,11 +36,23 @@ def test_query_matches_oracle(spark, duck, name):
     assert ok, f"{name}: {msg}"
 
 
+# session confs a query may change for a while (operators.util.session_conf)
+# but must leave as it found them for the queries after it
+SCOPED_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.parquet.outputTimestampType",
+)
+
+
 def test_all_queries_return_rows(spark):
-    """Queries without oracles still get the rows-only smoke check."""
+    """Queries without oracles still get the rows-only smoke check, and
+    no query leaves a session conf changed behind it."""
     from fluss_iceberg_spark import registry
 
     registry.load_all()
     for name, fn in registry.QUERIES.items():
+        before = [spark.conf.get(k) for k in SCOPED_CONFS]
         df = fn(spark, SF_DIR)
         assert df.count() >= 0, name
+        assert [spark.conf.get(k) for k in SCOPED_CONFS] == before, name

@@ -170,3 +170,30 @@ def test_structured_streaming_rate_pipeline(spark):
         assert len(rows) == len({r.nation_name for r in rows})
         # enriched flows through hot store; union read sees them
         assert pipe.enriched.union_read().count() > 0
+
+
+def test_scratch_names_are_unique():
+    """Every workload builds its scratch tables under
+    ``workloads.lake._scratch(sf_dir, name)``, which empties the directory
+    it returns: two call sites sharing a name would clobber each other."""
+    import ast
+    import glob
+    import os
+
+    import fluss_iceberg_spark.workloads as W
+
+    names = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(W.__file__), "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        names += [
+            node.args[1].value
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "_scratch"
+            and isinstance(node.args[1], ast.Constant)
+        ]
+    assert len(names) > 40
+    assert len(names) == len(set(names)), sorted(
+        n for n in set(names) if names.count(n) > 1
+    )

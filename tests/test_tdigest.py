@@ -180,7 +180,7 @@ def test_stream_refresh_state_equals_batch_replay(spark):
     import hashlib
 
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
-    src_dir = f"/tmp/fluss_stream_scratch/{tag}/tdigest_refresh_src"
+    src_dir = f"/tmp/fluss_lake_scratch/{tag}/tdigest_refresh_src"
 
     files = sorted(glob.glob(f"{src_dir}/part-*"))
     files = [f for f in files if not f.endswith(".crc")]

@@ -4,6 +4,8 @@ column."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -179,8 +181,11 @@ def test_bm25_no_term_in_corpus_returns_empty(spark):
 
 def test_zorder_by_property_validation(spark, tmp_path):
     """write.zorder-by must fail fast with a named error on a typo'd
-    column or wrong arity (ADVICE r11): at the write, at ALTER, and a
-    z-order column cannot be renamed or dropped away under the property."""
+    column or wrong arity (ADVICE r11): at CREATE (API and SQL ``WITH``),
+    which then leaves no table behind and a refused replace keeps the old
+    one, at ALTER, and a z-order column cannot be renamed or dropped away
+    under the property."""
+    from fluss_iceberg_spark.engine import Engine
     from fluss_iceberg_spark.lake.table import LakeCatalog
 
     cat = LakeCatalog(spark, str(tmp_path / "wh"))
@@ -192,14 +197,21 @@ def test_zorder_by_property_validation(spark, tmp_path):
         ({"write.zorder-by": "a,b,a"}, "exactly two"),
         ({"write.zorder-by": "a,typo"}, "typo"),
     ):
-        t = cat.create_table(
-            f"zv_{len(props['write.zorder-by'])}_{frag.split()[0]}",
-            df.schema,
-            properties=props,
-        )
+        name = f"zv_{len(props['write.zorder-by'])}_{frag.split()[0]}"
         with pytest.raises(ValueError, match=frag):
-            t.append(df)
+            cat.create_table(name, df.schema, properties=props)
+        assert not os.path.exists(cat.table_path(name))
     t = cat.create_table("zv_ok", df.schema, properties={"write.zorder-by": "a,b"})
+    t.append(df)
+    with pytest.raises(ValueError, match="exactly two"):
+        cat.create_table(
+            "zv_ok", df.schema, properties={"write.zorder-by": "a"}, replace=True
+        )
+    assert cat.load("zv_ok").read().count() == 10
+    eng = Engine(spark, str(tmp_path / "sql_wh"))
+    with pytest.raises(ValueError, match="typo"):
+        eng.sql("CREATE TABLE zv_sql (a BIGINT, b BIGINT) WITH ('write.zorder-by' = 'a,typo')")
+    assert not eng.catalog.exists("zv_sql")
     with pytest.raises(ValueError, match="typo"):
         t.set_properties({"write.zorder-by": "a,typo"})
     assert cat.load("zv_ok").properties["write.zorder-by"] == "a,b"
