@@ -70,6 +70,7 @@ from fluss_iceberg_spark.operators.util import (
     arrow_local_df,
     conf_bytes,
     release_checkpoint,
+    right_size,
     session_conf,
 )
 from pyspark.sql import types as T
@@ -3021,6 +3022,11 @@ class LakeTable:
         df = self._enforce_not_null(self._prepare(df))
         df.write.mode("overwrite").parquet(self._hot_dir(batch_id))
 
+    def read_hot_batch(self, batch_id: int) -> DataFrame:
+        """The rows ``write_hot_batch`` staged for ``batch_id``, as the
+        sink kept them (after the write's projection and not-null drop)."""
+        return self._read_hot_batches([batch_id], False)
+
     def _read_hot_batches(self, batches: list[int], with_batch_id: bool) -> DataFrame:
         """Read the given staged batches; optionally tag each row with its
         batch id (one read per batch dir — batch counts are small by
@@ -3065,10 +3071,10 @@ class LakeTable:
         end at batch 7's value. Duplicate keys are resolved by descending
         batch id *before* the merge.
 
-        File sizing: the drained batches are read as ceil(their on-disk
-        bytes / ``spark.sql.files.maxPartitionBytes``) partitions, so a
-        log table's tier writes that many files instead of one per scan
-        split (the scan splits small inputs across every core).
+        File sizing: the drained batches are ``right_size``d by their
+        on-disk bytes, so a log table's tier writes ceil(bytes /
+        ``spark.sql.files.maxPartitionBytes``) files instead of one per
+        scan split (the scan splits small inputs across every core).
         """
         # one parse: the batches to drain and the commit's parent come from
         # the same snapshot, so a tier that lands meanwhile is a conflict
@@ -3080,13 +3086,10 @@ class LakeTable:
         if not batches:
             return None
         new_wm = max(batches)
-        split = conf_bytes(
-            self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2
+        df = right_size(
+            self._read_hot_batches(batches, with_batch_id=bool(self.primary_key)),
+            self._hot_batch_bytes(batches),
         )
-        n_files = max(1, -(-self._hot_batch_bytes(batches) // max(split, 1)))
-        df = self._read_hot_batches(
-            batches, with_batch_id=bool(self.primary_key)
-        ).coalesce(n_files)
         commit_as = {
             "operation": "tier",
             "hot_watermark": new_wm,

@@ -61,6 +61,31 @@ def conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     return int(m.group(1)) * _SIZE_SUFFIX.get(m.group(2), 1)
 
 
+def right_size(df: DataFrame, nbytes: int | None = None) -> DataFrame:
+    """Coalesce ``df`` to ceil(bytes / ``spark.sql.files.maxPartitionBytes``)
+    partitions when that is fewer than the session's default parallelism,
+    else return it unchanged. ``bytes`` is ``nbytes`` when given, else the
+    optimized plan's ``sizeInBytes``.
+
+    Every task and every written file costs a fixed slice of driver and
+    JVM CPU whatever its size, so a small input split across every core
+    pays that cost once per core for nothing. Only a small estimate is
+    acted on, and it is a safe one: Spark over-estimates a join as the
+    product of its inputs and sizes an unknown input (an RDD scan) as
+    ``spark.sql.defaultSizeInBytes``, so a large or unknown size leaves
+    ``df`` as it is. ``coalesce`` never raises the partition count."""
+    spark = df.sparkSession
+    if nbytes is None:
+        # a Scala BigInt: py4j hands it over as an int or a JavaObject
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        nbytes = int(str(stats.sizeInBytes()))
+    split = max(conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2), 1)
+    n = max(1, -(-nbytes // split))
+    if n >= spark.sparkContext.defaultParallelism:
+        return df
+    return df.coalesce(n)
+
+
 def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """``createDataFrame`` for driver-local row lists via the ARROW path.
 

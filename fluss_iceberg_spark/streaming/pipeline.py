@@ -17,17 +17,30 @@ directly by a driver loop in deterministic tests). The enrichment join is
 stream-static against the dimension tables' *current snapshot* — the
 Spark-idiomatic temporal/lookup join (the reference's ``FOR SYSTEM_TIME AS
 OF o.ptime``, README.md:236-238); we pin determinism by snapshotting dims
-at micro-batch start (SURVEY §7 risk 3).
+at micro-batch start (SURVEY §7 risk 3), so their broadcasts are built per
+batch.
 
-The aggregation is **MERGE-delta** (A1): per batch, partial-aggregate the
-delta, then upsert ``revenue = existing + delta`` into the PK table.
-Idempotence: the last applied batch id is recorded in the commit summary;
-a replayed batch (crash/retry) is skipped (ST5 exactly-once).
+The enrichment is written once, to the hot store, and the aggregation
+reads the batch it just staged — the reference's ``FROM enriched_orders``
+(README.md:247-250): it counts exactly the rows the sink kept, and the
+enriched frame is never cached. The aggregation is **MERGE-delta** (A1):
+per batch, partial-aggregate the delta, then upsert ``revenue = existing
++ delta`` into the PK table. Idempotence: the last applied batch id is
+recorded in the commit summary; a replayed batch (crash/retry) is skipped
+(ST5 exactly-once), and a batch that crashed between the stage and the
+merge restages itself on the retry.
+
+Sizing: the order batch and both dim snapshots are ``right_size``d, so a
+small batch runs its enrichment, broadcasts and hot write as one task
+each and stages one file. ``nation_revenue`` holds one row per nation
+(at most 26 with the NULL group) and has one bucket: a batch merges one
+file, not one per core-sized bucket.
 
 Scale: per batch the fact side is joined against broadcast dim snapshots
 (shuffle-free), and the merge exchanges only group-cardinality rows. At
 1000 executors the only wide operation is the delta aggregation, bounded
-by distinct nations per batch.
+by distinct nations per batch; a large batch's size estimate is at or
+above the default parallelism and keeps its scan partitioning.
 """
 
 from __future__ import annotations
@@ -38,6 +51,7 @@ from pyspark.sql import types as T
 
 from fluss_iceberg_spark.lake.table import LakeCatalog, LakeTable
 from fluss_iceberg_spark.operators.enrichment import enrich_orders
+from fluss_iceberg_spark.operators.util import right_size
 
 ENRICHED_SCHEMA = T.StructType(
     [
@@ -72,23 +86,23 @@ class ReferencePipeline:
         self.enriched = self._ensure(
             "enriched_orders",
             ENRICHED_SCHEMA,
-            primary_key=None,
             properties={"datalake.enabled": "true", "datalake.freshness": "30s"},
         )
-        # nation_revenue: PK upsert table (README.md:196-203)
+        # nation_revenue: PK upsert table (README.md:196-203); one row per
+        # nation, so one bucket (a table an earlier run created keeps its
+        # layout)
         self.revenue = self._ensure(
             "nation_revenue",
             REVENUE_SCHEMA,
             primary_key=["nation_name"],
+            n_buckets=1,
             properties={"datalake.enabled": "true", "datalake.freshness": "30s"},
         )
 
-    def _ensure(self, name, schema, primary_key, properties=None) -> LakeTable:
+    def _ensure(self, name, schema, **create) -> LakeTable:
         if self.catalog.exists(name):
             return self.catalog.load(name)
-        return self.catalog.create_table(
-            name, schema, primary_key=primary_key, n_buckets=8, properties=properties
-        )
+        return self.catalog.create_table(name, schema, **create)
 
     # -- the statement set's two continuous INSERTs (README.md:222-250) --
 
@@ -105,43 +119,44 @@ class ReferencePipeline:
         if batch_id <= self.last_applied_batch():
             return False
 
-        # the enriched batch feeds two sinks (hot store + delta agg) —
-        # persist so the lookup joins run once per batch (multi-sink plan
-        # reuse, the reference's statement-set sharing, SURVEY §4)
-        enriched = enrich_orders(orders, customer_snapshot, nation_snapshot).persist()
-        try:
-            # stage into the hot store (the Fluss role); the tiering job
-            # commits it to the lake on its freshness schedule (S17)
-            self.enriched.write_hot_batch(enriched, batch_id)
+        # stage into the hot store (the Fluss role); the tiering job
+        # commits it to the lake on its freshness schedule (S17)
+        self.enriched.write_hot_batch(
+            enrich_orders(
+                right_size(orders),
+                right_size(customer_snapshot),
+                right_size(nation_snapshot),
+            ),
+            batch_id,
+        )
 
-            # MERGE-delta: null-safe group key (NULL nation is a real group
-            # — FIXTURES invariant 3) — fold delta into existing revenue.
-            delta = enriched.groupBy("nation_name").agg(
-                F.sum("total_price").cast("decimal(15,2)").alias("__delta")
+        # MERGE-delta over the staged batch (the reference aggregates
+        # FROM enriched_orders): null-safe group key (NULL nation is a
+        # real group — FIXTURES invariant 3) — fold delta into existing
+        # revenue.
+        delta = (
+            self.enriched.read_hot_batch(batch_id)
+            .groupBy("nation_name")
+            .agg(F.sum("total_price").cast("decimal(15,2)").alias("__delta"))
+        )
+        current = self.revenue.read()
+        merged = delta.join(
+            current,
+            on=[delta.nation_name.eqNullSafe(current.nation_name)],
+            how="left",
+        ).select(
+            delta.nation_name.alias("nation_name"),
+            (
+                F.coalesce(current.revenue, F.lit(0).cast("decimal(15,2)"))
+                + F.col("__delta")
             )
-            current = self.revenue.read()
-            merged = (
-                delta.join(
-                    current,
-                    on=[delta.nation_name.eqNullSafe(current.nation_name)],
-                    how="left",
-                )
-                .select(
-                    delta.nation_name.alias("nation_name"),
-                    (
-                        F.coalesce(current.revenue, F.lit(0).cast("decimal(15,2)"))
-                        + F.col("__delta")
-                    )
-                    .cast("decimal(15,2)")
-                    .alias("revenue"),
-                )
-            )
-            # the idempotence marker rides the merge commit's own atomic
-            # snapshot write — a crash can never commit the revenue delta
-            # without the batch_id, so a replayed batch is always detected
-            self.revenue.merge(merged, summary={"batch_id": batch_id})
-        finally:
-            enriched.unpersist()
+            .cast("decimal(15,2)")
+            .alias("revenue"),
+        )
+        # the idempotence marker rides the merge commit's own atomic
+        # snapshot write — a crash can never commit the revenue delta
+        # without the batch_id, so a replayed batch is always detected
+        self.revenue.merge(merged, summary={"batch_id": batch_id})
         return True
 
     def tier_enriched(self) -> None:
@@ -165,8 +180,8 @@ class ReferencePipeline:
         """Continuous form: foreachBatch over a streaming orders source.
         The reference submits enrichment+aggregation as one statement set
         (README.md:211-216); here both sinks are written inside one
-        foreachBatch, sharing the per-batch enrichment (multi-sink plan
-        reuse, SURVEY §4)."""
+        foreachBatch: the enrichment is staged once and the aggregation
+        reads the staged batch."""
 
         def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
             self.process_order_batch(

@@ -90,9 +90,11 @@ def _drain(
 ) -> DataFrame | None:
     """Run ``stream`` to completion with ``availableNow``, checkpointed
     in a scratch directory removed afterwards. Without ``on_batch`` the
-    rows land in a memory sink named after ``name``, whose table is
-    returned; with it, each micro-batch goes to ``on_batch(df,
-    batch_id)`` (``foreachBatch``) and nothing is returned.
+    rows land in a memory sink named after ``name`` and come back as a
+    frame; the sink's view is dropped, so the rows live only as long as
+    that frame, not for the rest of the session. With ``on_batch``, each
+    micro-batch goes to ``on_batch(df, batch_id)`` (``foreachBatch``) and
+    nothing is returned.
 
     ``partitions`` is ``spark.sql.shuffle.partitions`` for the run, put
     back when it ends however it ends. Streaming state shuffles use the
@@ -115,7 +117,11 @@ def _drain(
         else:
             writer = writer.foreachBatch(on_batch)
         writer.start().awaitTermination()
-    return spark.table(sink) if on_batch is None else None
+    if on_batch is not None:
+        return None
+    out = spark.table(sink)  # its resolved plan holds the sink, not the view
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 _EVENTS_ROWS_CACHE: dict = {}

@@ -1,7 +1,8 @@
 """The ingest write path: MERGE takes its touched buckets from the job that
 materializes its delta, tiering sizes its files by bytes, each write has
-its own data directory, and one pipeline batch stays within its job
-budget."""
+its own data directory, ``right_size`` sizes small inputs by bytes, and
+one pipeline batch stays within its job and task budget and replays
+exactly once."""
 
 from __future__ import annotations
 
@@ -16,6 +17,8 @@ from pyspark.sql import types as T
 
 from fluss_iceberg_spark.lake import commit, manifest
 from fluss_iceberg_spark.lake.table import LakeCatalog, LakeTable
+from fluss_iceberg_spark.operators.enrichment import enrich_orders
+from fluss_iceberg_spark.operators.util import conf_bytes, right_size, session_conf
 from fluss_iceberg_spark.sources import faker
 from fluss_iceberg_spark.streaming.pipeline import ReferencePipeline
 
@@ -249,32 +252,45 @@ def test_stream_appends_finds_files_at_any_depth(spark, cat, partition_by):
     assert sorted(r.v for r in spark.table(sink).collect()) == [1, 2, 3]
 
 
-def _jobs(spark, group, fn) -> int:
-    tracker = spark.sparkContext.statusTracker()
-    spark.sparkContext.setJobGroup(group, group)
+def _jobs_and_tasks(spark, group, fn) -> tuple[int, int]:
+    """Spark jobs and tasks ``fn`` runs, counted per job group: the tasks
+    are the ``numTasks`` of every distinct stage of those jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
     try:
         fn()
     finally:
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-    return len(tracker.getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), sum(tracker.getStageInfo(s).numTasks for s in stages)
+
+
+def _local(spark, df):
+    """``df`` as a driver-local frame, as a stream hands a batch over."""
+    return spark.createDataFrame(df.toArrow())
+
+
+def _pipeline_inputs(spark, tmp_path, n_batches=4):
+    orders = faker.orders_batch(spark, 1200)
+    batches = [
+        _local(spark, orders.filter(F.pmod(F.col("order_key"), F.lit(n_batches)) == b))
+        for b in range(n_batches)
+    ]
+    customers = _local(spark, faker.customers_batch(spark, 50).dropDuplicates(["cust_key"]))
+    nations = _local(spark, faker.nations_batch(spark, 40).dropDuplicates(["nation_key"]))
+    pipe = ReferencePipeline(spark, LakeCatalog(spark, str(tmp_path / "wh")))
+    return pipe, batches, customers, nations
 
 
 def test_pipeline_batch_job_budget(spark, tmp_path):
-    """One micro-batch of the reference pipeline runs at most 10 Spark
-    jobs, and at most 11 with its tier (inputs are driver-local frames,
-    as a stream hands them over)."""
-
-    def local(df):
-        return spark.createDataFrame(df.toArrow())
-
-    orders = faker.orders_batch(spark, 1200)
-    batches = [
-        local(orders.filter(F.pmod(F.col("order_key"), F.lit(4)) == b))
-        for b in range(4)
-    ]
-    customers = local(faker.customers_batch(spark, 50).dropDuplicates(["cust_key"]))
-    nations = local(faker.nations_batch(spark, 40).dropDuplicates(["nation_key"]))
-    pipe = ReferencePipeline(spark, LakeCatalog(spark, str(tmp_path / "wh")))
+    """One micro-batch of the reference pipeline runs at most 9 Spark jobs
+    and 13 tasks, and at most 10 jobs and 14 tasks with its tier: each
+    small input is one task, the batch stages one hot file, and the
+    revenue table has one bucket."""
+    pipe, batches, customers, nations = _pipeline_inputs(spark, tmp_path)
 
     def batch(b):
         return lambda: pipe.process_order_batch(batches[b], customers, nations, b)
@@ -282,10 +298,79 @@ def test_pipeline_batch_job_budget(spark, tmp_path):
     for b in range(2):  # the first batches create the tables' snapshots
         batch(b)()
     pipe.tier_enriched()
-    assert _jobs(spark, "ingest-batch", batch(2)) <= 10
+    jobs, tasks = _jobs_and_tasks(spark, "ingest-batch", batch(2))
+    assert jobs <= 9 and tasks <= 13, (jobs, tasks)
+    staged = os.listdir(pipe.enriched._hot_dir(2))
+    assert len([n for n in staged if n.endswith(".parquet")]) == 1
+    assert len(pipe.revenue.snapshot().files) == 1
 
     def batch_and_tier():
         batch(3)()
         pipe.tier_enriched()
 
-    assert _jobs(spark, "ingest-batch-tier", batch_and_tier) <= 11
+    jobs, tasks = _jobs_and_tasks(spark, "ingest-batch-tier", batch_and_tier)
+    assert jobs <= 10 and tasks <= 14, (jobs, tasks)
+
+
+def test_batch_that_failed_after_staging_replays_exactly_once(spark, tmp_path):
+    """A batch whose revenue merge fails after its enrichment was staged
+    restages itself on the retry: revenue equals the one-shot GROUP BY,
+    the hot store holds the batch's rows once, and a later replay is
+    skipped."""
+    pipe, batches, customers, nations = _pipeline_inputs(spark, tmp_path, n_batches=2)
+    assert pipe.process_order_batch(batches[0], customers, nations, 0)
+    merge = pipe.revenue.merge
+
+    def fail_once(*args, **kwargs):
+        pipe.revenue.merge = merge
+        assert os.path.isdir(pipe.enriched._hot_dir(1))  # batch 1 is staged
+        raise RuntimeError("injected merge failure")
+
+    pipe.revenue.merge = fail_once
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.process_order_batch(batches[1], customers, nations, 1)
+    assert pipe.last_applied_batch() == 0
+    assert pipe.process_order_batch(batches[1], customers, nations, 1)
+
+    want = {
+        r.nation_name: r.revenue
+        for r in enrich_orders(batches[0].unionByName(batches[1]), customers, nations)
+        .groupBy("nation_name")
+        .agg(F.sum("total_price").cast("decimal(15,2)").alias("revenue"))
+        .collect()
+    }
+    assert {r.nation_name: r.revenue for r in pipe.revenue.read().collect()} == want
+    assert pipe.enriched.read_hot_batch(1).count() == batches[1].count()
+    assert pipe.enriched.union_read().count() == sum(b.count() for b in batches)
+    assert not pipe.process_order_batch(batches[1], customers, nations, 1)
+
+
+def test_right_size_coalesces_to_bytes_over_max_partition_bytes(spark):
+    df = spark.range(0, 1000, 1, 8)  # 8 KB by the optimizer's estimate
+    with session_conf(spark, {"spark.sql.files.maxPartitionBytes": "3000"}):
+        sized = right_size(df)
+    assert sized.rdd.getNumPartitions() == 3
+    assert right_size(df).rdd.getNumPartitions() == 1
+    assert sorted(sized.collect()) == sorted(df.collect())
+
+
+def test_right_size_never_raises_the_partition_count(spark):
+    df = spark.range(0, 1000, 1, 2)
+    split = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
+    assert right_size(df, nbytes=5 * split).rdd.getNumPartitions() == 2
+
+
+def test_right_size_keeps_an_unknown_size(spark):
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(100)], 4)
+    ckpt = spark.createDataFrame(rdd, "a int").localCheckpoint()
+    assert right_size(ckpt) is ckpt
+
+
+def test_right_size_takes_nbytes_over_the_estimate(spark):
+    df = spark.range(0, 1000, 1, 8)
+    split = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
+    n = spark.sparkContext.defaultParallelism
+    assert right_size(df, nbytes=n * split) is df
+    one = right_size(df, nbytes=1)
+    assert one.rdd.getNumPartitions() == 1
+    assert sorted(one.collect()) == sorted(df.collect())

@@ -197,3 +197,37 @@ def test_scratch_names_are_unique():
     assert len(names) == len(set(names)), sorted(
         n for n in set(names) if names.count(n) > 1
     )
+
+
+# sha256 of the sorted rows each query returned before its memory sink's
+# view was dropped (sf0.001)
+_MEMORY_SINK_ROWS = {
+    "stream_events_hourly": "17f771ff6b000259fa94db2fb52562e56f2630381049259a043045b556844405",
+    "stream_classifier_gate": "f28cf2622d08d2ef6a0729f0d5daadf364a37bae3d66d8cd063d57e66e1d2c17",
+}
+
+
+def test_memory_sink_queries_leave_no_table(spark):
+    """A memory-sink query returns its rows and drops the sink's view, so
+    running it again does not keep another copy of its rows in the
+    driver."""
+    import hashlib
+    import re
+
+    from fluss_iceberg_spark.workloads import streaming as S
+
+    from tests.conftest import SF_SMOKE
+
+    def tables():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if re.search(r"_[0-9a-f]{8}$", t.name)
+        }
+
+    before = tables()
+    for name, want in _MEMORY_SINK_ROWS.items():
+        for _ in range(2):
+            rows = sorted(repr(tuple(r)) for r in getattr(S, name)(spark, SF_SMOKE).collect())
+            assert hashlib.sha256("\n".join(rows).encode()).hexdigest() == want, name
+    assert tables() == before
