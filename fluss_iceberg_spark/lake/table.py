@@ -57,7 +57,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -69,7 +69,7 @@ from pyspark.sql import functions as F
 from fluss_iceberg_spark.operators.util import (
     arrow_local_df,
     conf_bytes,
-    release_checkpoint,
+    materialized,
     right_size,
     session_conf,
 )
@@ -867,47 +867,50 @@ class LakeTable:
             analyzed.containsPattern(getattr(tp, p)()) for p in self._HEAVY_PATTERNS
         )
 
+    @contextmanager
     def _materialize_delta(
         self, df: DataFrame, observation: Observation | None = None
     ):
-        """Delta-frame policy for multi-action consumers (merge/delete):
-        the frame feeds 2-3 separate Spark actions (stats/guard collect,
-        then the write).
+        """Delta-frame policy for multi-action consumers (merge/delete),
+        entered as a ``with`` block around them: the frame feeds 2-3
+        separate Spark actions (stats/guard collect, then the write).
 
         - HEAVY lineage (``_heavy_lineage``: joins/aggregates/Python UDFs
           and kernels — IVM refreshes, CDC mirror diffs): eager
           ``localCheckpoint`` — the lineage executes exactly ONCE and is
           truncated, so every downstream action analyzes a leaf scan
           instead of re-running Catalyst over the changelog tree per
-          action (measured r13: 42-56% of merge-family
-          wall was BETWEEN jobs, i.e. per-action planning; guide §5
-          "localCheckpoint is a cheaper way to cut lineage"). With an
+          action (measured: 42-56% of merge-family wall was BETWEEN
+          jobs, i.e. per-action planning; guide §5 "localCheckpoint is
+          a cheaper way to cut lineage"). The checkpoint is released
+          when the block exits. With an
           ``observation``, that same job also records the delta's
           touched buckets and row count (``_observed`` reads them), so
           a merge needs no separate stats query.
         - TRIVIAL lineage (scan/local frame + row-level ops only): no
-          materialization, and ``df`` itself comes back with the
+          materialization, and ``df`` itself is yielded with the
           observation unattached. Re-executing a delta-sized scan per
           action is cheaper than building and re-reading 32 cached
-          partitions (the r12 unconditional persist regressed exactly
-          these consumers — lake_scd2_dimension, stream_txn_two_sinks;
-          adjudicated by the interleaved A/B in OPTIMIZATION_r13.md).
+          partitions (an unconditional persist regressed exactly these
+          consumers — lake_scd2_dimension, stream_txn_two_sinks — in the
+          interleaved A/B of OPTIMIZATION_r13.md).
 
-        Returns ``(frame, release_fn)``."""
+        Yields the frame the consumers read."""
         try:
             heavy = self._heavy_lineage(df)
         except Py4JError:
             heavy = True  # unknown plan shape: materializing is the safe default
         if not heavy:
-            return df, lambda: None
+            yield df
+            return
         if observation is not None:
             df = df.observe(
                 observation,
                 F.collect_set(self._bucket_col()).alias("buckets"),
                 F.count(F.lit(1)).alias("rows"),
             )
-        cp = df.localCheckpoint(eager=True)
-        return cp, lambda: release_checkpoint(cp)
+        with materialized(df, checkpoint=True) as cp:
+            yield cp
 
     @staticmethod
     def _observed(observation: Observation | None) -> dict | None:
@@ -1152,23 +1155,21 @@ class LakeTable:
         # checkpoint of the updates observes their buckets, which saves
         # the query (see its doc)
         observation = Observation() if deletes is None else None
-        updates, rel_u = self._materialize_delta(
-            updates.dropDuplicates(self.primary_key), observation
-        )
-        rel_d = lambda: None  # noqa: E731
-        if deletes is not None:
-            deletes, rel_d = self._materialize_delta(
+        held_deletes = (
+            nullcontext()
+            if deletes is None
+            else self._materialize_delta(
                 deletes.select(*self.primary_key).dropDuplicates()
             )
-        try:
+        )
+        with self._materialize_delta(
+            updates.dropDuplicates(self.primary_key), observation
+        ) as updates, held_deletes as deletes:
             seen = self._observed(observation)
             return self._merge_inner(
                 updates, deletes, parent_of, seen,
                 operation, hot_watermark, summary,
             )
-        finally:
-            rel_u()
-            rel_d()
 
     def _merge_inner(
         self,
@@ -1188,7 +1189,7 @@ class LakeTable:
         if deletes is not None:
             touch_keys = touch_keys.unionByName(deletes)
         if deletes is not None:
-            # ONE stats job answers both driver questions (r13, guide §2
+            # ONE stats job answers both driver questions (guide §2
             # "remove actions outright"): the touched-bucket set AND the
             # ambiguity guard (a key in both updates and deletes is
             # ambiguous — Iceberg MERGE likewise rejects multi-action
@@ -1317,13 +1318,10 @@ class LakeTable:
         # delete-file write, the hide-count semi-join) — same
         # multi-action reuse as merge(); _materialize_delta picks
         # checkpoint vs recompute per lineage (see its doc)
-        keys, rel = self._materialize_delta(
+        with self._materialize_delta(
             keys.select(*self.primary_key).dropDuplicates()
-        )
-        try:
+        ) as keys:
             return self._delete_by_key_inner(keys, snap)
-        finally:
-            rel()
 
     def _delete_by_key_inner(self, keys: DataFrame, snap) -> Snapshot:
         if snap is None or not snap.files:
@@ -1544,10 +1542,9 @@ class LakeTable:
         rows = self._tagged_live_rows(
             touched, snap, self.schema, self.field_ids
         ).filter(matched)
-        # one pass: persist so the tombstone write and the data write
+        # one pass: held cached so the tombstone write and the data write
         # don't re-scan (model-sized: only matched rows)
-        rows = rows.persist()
-        try:
+        with materialized(rows) as rows:
             version = self._next_version()
             new_del, per_file = self._write_position_deletes(
                 rows.select("__file", "__pos"), version
@@ -1562,8 +1559,6 @@ class LakeTable:
                 ]
             )
             new_files = self._write_files(updated, version)
-        finally:
-            rows.unpersist()
         files = sorted(list(snap.files) + new_files)
         delete_files = list(snap.delete_files) + new_del
         delete_meta = {

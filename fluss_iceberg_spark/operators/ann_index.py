@@ -46,7 +46,7 @@ from fluss_iceberg_spark.operators.similarity import (
     train_ivf_centroids,
 )
 from fluss_iceberg_spark.operators.dedup import dot_expanded
-from fluss_iceberg_spark.operators.util import release_checkpoint
+from fluss_iceberg_spark.operators.util import materialized, release_checkpoint
 
 _POSTINGS_SCHEMA = (
     "list_id int, vec_id long, v array<double>, nrm double"
@@ -194,7 +194,7 @@ class IvfIndex:
         - ASSIGN + APPEND upserted vectors against the frozen quantizer.
 
         The inline-vs-rewrite decision is adaptive, measured not
-        assumed (r8 crossover run, SCALE.md): postings files are
+        assumed (SCALE.md, "CDC-sync backlog"): postings files are
         clustered by list_id, so stale vec_ids SCATTER across files —
         once the changed-key set bloom-hits most files, the inline path
         rewrites nearly the whole table anyway and additionally pays a
@@ -221,15 +221,13 @@ class IvfIndex:
         # counts), and a plain persist dedups the EXECUTION but leaves
         # every action re-analyzing the multi-commit diff tree —
         # localCheckpoint executes it once AND truncates the lineage
-        # (r13, the merge _materialize_delta finding: 42-56% of
+        # (the merge's _materialize_delta finding: 42-56% of
         # merge-family wall was per-action planning)
-        net = source.compose_changelog(log).localCheckpoint(eager=True)
-        try:
+        net = source.compose_changelog(log)
+        with materialized(net, checkpoint=True) as net:
             return self._apply_net_changes(
                 net, to_v, dim, max_inline_keys, id_col, vec_col
             )
-        finally:
-            release_checkpoint(net)
 
     def _apply_net_changes(
         self,

@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fluss_iceberg_spark.operators.util import session_conf
+from fluss_iceberg_spark.operators.util import materialized, session_conf
 
 # (name, spark expression builder) — integer features, cheap JVM ops;
 # the DuckDB replays live next to each query's oracle SQL
@@ -76,49 +76,49 @@ def train_logreg(
     """Full-batch GD; returns [bias, w_1..w_k]. Features are
     standardized inside the expression (mean/std from one stats pass)
     so one learning rate fits all scales; each epoch is a single
-    Catalyst aggregate over the persisted projection."""
+    Catalyst aggregate over the projection, held cached for the fit."""
     cols = list(feature_cols)
-    proj = labeled.select(label_col, *cols).persist()
-    # ONE stats action (r13): row count rides the same aggregate as the
-    # moments instead of a separate count() job (identical values —
-    # count/avg/stddev_pop over the same rows)
-    stats = proj.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.avg(c).alias(f"m_{c}") for c in cols],
-        *[F.stddev_pop(c).alias(f"s_{c}") for c in cols],
-    ).collect()[0]
-    n = int(stats["n"])
-    mean = {c: float(stats[f"m_{c}"]) for c in cols}
-    std = {c: float(stats[f"s_{c}"]) or 1.0 for c in cols}
+    with materialized(labeled.select(label_col, *cols)) as proj:
+        # ONE stats action: the row count rides the same aggregate as the
+        # moments instead of a separate count() job (identical values —
+        # count/avg/stddev_pop over the same rows)
+        stats = proj.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.avg(c).alias(f"m_{c}") for c in cols],
+            *[F.stddev_pop(c).alias(f"s_{c}") for c in cols],
+        ).collect()[0]
+        n = int(stats["n"])
+        mean = {c: float(stats[f"m_{c}"]) for c in cols}
+        std = {c: float(stats[f"s_{c}"]) or 1.0 for c in cols}
 
-    def zcol(c: str):
-        return (F.col(c) - mean[c]) / std[c]
+        def zcol(c: str):
+            return (F.col(c) - mean[c]) / std[c]
 
-    w = [0.0] * (len(cols) + 1)  # [bias, ...]
-    # The epoch loop is 30 sequential GLOBAL aggregates over a cached
-    # delta-sized projection. AQE buys nothing here — a global agg always
-    # reduces to one exchange partition — but charges per-epoch adaptive
-    # re-planning and an extra query-stage job per epoch (the admission
-    # tick loop's measured finding, r13). Scoped off for the loop; the
-    # physical aggregation tree (partial → single final) is unchanged, so
-    # gradient values are bit-identical.
-    with session_conf(labeled.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-        for _ in range(epochs):
-            z = F.lit(w[0])
-            for j, c in enumerate(cols):
-                z = z + F.lit(w[j + 1]) * zcol(c)
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-            err = p - F.col(label_col)
-            grads = proj.agg(
-                F.sum(err).alias("g0"),
-                *[
-                    F.sum(err * zcol(c)).alias(f"g{j + 1}")
-                    for j, c in enumerate(cols)
-                ],
-            ).collect()[0]
-            for j in range(len(w)):
-                w[j] -= lr * float(grads[f"g{j}"]) / n
-    proj.unpersist()
+        w = [0.0] * (len(cols) + 1)  # [bias, ...]
+        # The epoch loop is 30 sequential GLOBAL aggregates over a cached
+        # delta-sized projection. AQE buys nothing here — a global agg always
+        # reduces to one exchange partition — but charges per-epoch adaptive
+        # re-planning and an extra query-stage job per epoch (measured on the
+        # neardup admission tick loop). Scoped off for the loop; the
+        # physical aggregation tree (partial → single final) is unchanged, so
+        # gradient values are bit-identical.
+        no_aqe = {"spark.sql.adaptive.enabled": "false"}
+        with session_conf(labeled.sparkSession, no_aqe):
+            for _ in range(epochs):
+                z = F.lit(w[0])
+                for j, c in enumerate(cols):
+                    z = z + F.lit(w[j + 1]) * zcol(c)
+                p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+                err = p - F.col(label_col)
+                grads = proj.agg(
+                    F.sum(err).alias("g0"),
+                    *[
+                        F.sum(err * zcol(c)).alias(f"g{j + 1}")
+                        for j, c in enumerate(cols)
+                    ],
+                ).collect()[0]
+                for j in range(len(w)):
+                    w[j] -= lr * float(grads[f"g{j}"]) / n
     # fold the standardization back so the returned weights apply to
     # RAW features: w0' = w0 - sum(wj*mj/sj), wj' = wj/sj
     bias = w[0] - sum(w[j + 1] * mean[c] / std[c] for j, c in enumerate(cols))

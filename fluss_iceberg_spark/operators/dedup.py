@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fluss_iceberg_spark.operators.text import tokens
-from fluss_iceberg_spark.operators.util import release_checkpoint
+from fluss_iceberg_spark.operators.util import materialized, release_checkpoint
 
 
 def normalize(text_col) -> F.Column:
@@ -145,6 +145,17 @@ def _verify_candidates(
     )
 
 
+def _verified_pairs(
+    docs: DataFrame, text_col: str, n: int, threshold: float, candidates
+) -> DataFrame:
+    """The pairs of ``candidates(sets)`` with exact Jaccard ≥ ``threshold``
+    as an eager, result-sized checkpoint; the shingle sets both phases
+    read are held cached only while it is computed."""
+    with materialized(shingle_sets(docs, text_col, n)) as sets:
+        pairs = _verify_candidates(sets, candidates(sets), threshold)
+        return pairs.localCheckpoint(eager=True)
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, threshold: float = 0.8, text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -157,7 +168,12 @@ def ngram_jaccard_pairs(
     the naive full self-join, minus its Σ df² blowup on hot shingles.
     (+1 slack on the prefix bound guards ceil/float edges; precision is
     exact either way because every candidate is verified.)"""
-    sets = shingle_sets(docs, text_col, n).persist()
+    cand = lambda sets: _prefix_candidates(sets, threshold)  # noqa: E731
+    return _verified_pairs(docs, text_col, n, threshold, cand)
+
+
+def _prefix_candidates(sets: DataFrame, threshold: float) -> DataFrame:
+    """(d1 < d2) pairs sharing a shingle within their rarest-first prefixes."""
     index = sets.select("doc_id", F.explode("shset").alias("shingle"))
     freq = index.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     k = F.greatest(
@@ -183,7 +199,7 @@ def ngram_jaccard_pairs(
         .select("d1", "d2")
         .distinct()
     )
-    return _verify_candidates(sets, cand, threshold)
+    return cand
 
 
 N_PERM = 64
@@ -322,10 +338,14 @@ def minhash_lsh_pairs(
     Jaccard — so precision is exact and recall ≈ 1 above the threshold.
 
     The shingle-hash sets feed both the signature projection and the
-    candidate verification — persist them so tokenization runs once;
-    ContextCleaner unpersists when the plan is garbage collected.
+    candidate verification, so tokenization runs once
+    (``_verified_pairs``).
     """
-    sets = shingle_sets(docs, text_col, n).persist()
+    return _verified_pairs(docs, text_col, n, threshold, _lsh_candidates)
+
+
+def _lsh_candidates(sets: DataFrame) -> DataFrame:
+    """(d1 < d2) pairs whose MinHash signatures collide in some band."""
     # ONE banding implementation (band_keys) serves both this batch path
     # and the streaming admission state — bucket keys must stay
     # byte-identical across the two or cross-path collisions break
@@ -339,7 +359,7 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    return _verify_candidates(sets, cand, threshold)
+    return cand
 
 
 def _simhash_kernel(batch_iter):
@@ -469,94 +489,92 @@ def connected_components(
     threshold the distributed loop runs unchanged — correctness identical
     (both compute min-reachable-label).
     """
-    # persist the input first: both union branches read it, and without a
-    # cache the whole upstream pair-generation pipeline runs twice
-    pairs = pairs.persist()
-    edges = (
-        pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
-        .unionByName(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
-        .persist()
+    # hold the input: both union branches read it, and without a cache
+    # the whole upstream pair-generation pipeline runs twice
+    with materialized(pairs) as held:
+        edges = held.select(F.col("d1").alias("a"), F.col("d2").alias("b")).unionByName(
+            held.select(F.col("d2").alias("a"), F.col("d1").alias("b"))
+        )
+        # ONE action decides the path AND fetches the fast path's input: a
+        # limit-collect of the RAW edge union — no distinct exchange on this
+        # path (union-find dedups duplicate edges for free, and the limit
+        # caps driver transfer exactly as before; admission control pays
+        # this job per micro-batch tick). Duplicate-heavy graphs may hit the
+        # cap with fewer distinct edges and take the distributed path a bit
+        # early — that path is correct at any size, just slower.
+        rows = edges.limit(small_graph_edges + 1).collect()
+        if len(rows) > small_graph_edges:
+            return _propagate_min_labels(edges, max_iters)
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in rows:
+        a, b = r.a, r.b
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min so the representative IS the min label
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    out = [(node, find(node)) for node in parent]
+    from pyspark.sql import types as T
+
+    from fluss_iceberg_spark.operators.util import arrow_local_df
+
+    id_type = edges.schema["a"].dataType  # label type follows the input
+    schema = T.StructType(
+        [T.StructField("doc_id", id_type), T.StructField("component", id_type)]
     )
-    # ONE action decides the path AND fetches the fast path's input: a
-    # limit-collect of the RAW edge union — no distinct exchange on this
-    # path (union-find dedups duplicate edges for free, and the limit
-    # caps driver transfer exactly as before; admission control pays
-    # this job per micro-batch tick). Duplicate-heavy graphs may hit the
-    # cap with fewer distinct edges and take the distributed path a bit
-    # early — that path is correct at any size, just slower.
-    rows = edges.limit(small_graph_edges + 1).collect()
-    if len(rows) <= small_graph_edges:
-        parent: dict = {}
+    # Arrow local frame: the corpus-sized label list otherwise rides a
+    # pickled Python RDD whose every consumer re-pays the Python
+    # boundary (guide §4/§6) — measured 0.8-3 s per action at 10k rows
+    return arrow_local_df(pairs.sparkSession, out, schema)
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
 
-        for r in rows:
-            a, b = r.a, r.b
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min so the representative IS the min label
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        out = [(node, find(node)) for node in parent]
-        edges.unpersist()
-        pairs.unpersist()
-        from pyspark.sql import types as T
-
-        from fluss_iceberg_spark.operators.util import arrow_local_df
-
-        id_type = edges.schema["a"].dataType  # label type follows the input
-        schema = T.StructType(
-            [T.StructField("doc_id", id_type), T.StructField("component", id_type)]
+def _propagate_min_labels(edges: DataFrame, max_iters: int) -> DataFrame:
+    """``connected_components``' distributed path. Each iteration's labels
+    are a local checkpoint, released once the next one exists."""
+    # dedup the edge list once up front — the iteration joins it
+    # O(log n) times and duplicate edges would multiply every pass
+    # (this pays back the distinct the fast path skipped)
+    with materialized(edges.distinct()) as edges:
+        labels = (
+            edges.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
+            .localCheckpoint(eager=True)
         )
-        spark = pairs.sparkSession
-        # Arrow local frame: the corpus-sized label list otherwise rides a
-        # pickled Python RDD whose every consumer re-pays the Python
-        # boundary (guide §4/§6) — measured 0.8-3 s per action at 10k rows
-        return arrow_local_df(spark, out, schema)
-    # big-graph path: dedup the edge list once up front — the iteration
-    # joins it O(log n) times and duplicate edges would multiply every
-    # pass (this pays back the distinct the fast path skipped)
-    raw = edges
-    edges = raw.distinct().persist()
-    raw.unpersist()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .persist()
-    )
-    for _ in range(max_iters):
-        # neighbor's current label, then min(own, neighbors')
-        neigh = (
-            edges.join(labels, edges.b == labels.node)
-            .select(F.col("a").alias("node"), F.col("component"))
-        )
-        new_labels = (
-            labels.select("node", "component")
-            .unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
+        for _ in range(max_iters):
+            # neighbor's current label, then min(own, neighbors')
+            neigh = (
+                edges.join(labels, edges.b == labels.node)
+                .select(F.col("a").alias("node"), F.col("component"))
+            )
+            new_labels = (
+                labels.select("node", "component")
+                .unionByName(neigh)
+                .groupBy("node")
+                .agg(F.min("component").alias("component"))
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), on="node")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .count()
+            )
+            release_checkpoint(labels)
+            labels = new_labels
+            if changed == 0:
+                break
     return labels.select(F.col("node").alias("doc_id"), "component")
 
 
@@ -661,10 +679,9 @@ def embedding_near_pairs(
     ).withColumn("nrm", vec_norm(F.col("v")))
 
     if n is None:
-        # sizing-only count: cache the projected frame first so the block
-        # count doesn't re-execute the upstream lineage a second time
-        # (callers that know n — e.g. from table metadata — pass it in)
-        e = e.persist()
+        # sizing-only count: over a table scan it prunes to the parquet
+        # row counts, so it needs no cache (callers that know n — e.g.
+        # from table metadata — pass it in)
         n = e.count()
     n_blocks = max(1, -(-n // block_rows))
     eb = e.withColumn(

@@ -23,9 +23,9 @@ at least one out-edge, and ``pagerank`` ALSO handles dangling nodes
 convention — documented, and replayed identically by the oracle.
 
 100 TB design: the classic Pregel-on-DataFrames shape. Edges are
-repartitioned by src ONCE and persisted, so each iteration reuses the
-edge partitioning (one shuffle for the groupBy(dst) per iteration — the
-irreducible PageRank exchange); ranks are K rows of (id, long). No
+repartitioned by src ONCE, and every iteration reads that exchange
+(AQE reuses it), so each iteration adds one shuffle, the groupBy(dst) —
+the irreducible PageRank exchange; ranks are K rows of (id, long). No
 driver-side state beyond the loop counter; iterations are fixed-count
 (the convergence-check variant adds one tiny agg per iteration).
 """
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fluss_iceberg_spark.operators.util import release_checkpoint
+from fluss_iceberg_spark.operators.util import materialized, release_checkpoint
 
 SCALE = 10**12
 
@@ -69,12 +69,12 @@ def pagerank(
     participates (nodes absent from src are dangling: their share is
     dropped, the remove-dangling-mass convention)."""
     spark = edges.sparkSession
-    # edges partitioned by src once; the per-iteration join then reuses
-    # this layout and only the groupBy(dst) shuffles
-    e = edges.repartition("src").persist()
+    # edges partitioned by src once: every iteration's join reads the
+    # same edges⋈deg subtree, whose exchanges AQE reuses, so only the
+    # groupBy(dst) shuffles per iteration
+    e = edges.repartition("src")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(deg, "src").persist()
-    ed.count()  # materialize once so iterations don't recompute the join
+    ed = e.join(deg, "src")
 
     base = SCALE * (100 - damping_pct) // 100 // n_nodes
     nodes = spark.range(n_nodes).select(F.col("id"))
@@ -107,14 +107,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-    out = ranks
-    # free BOTH cached frames — without the ed.unpersist a long-lived
-    # session iterating graphs accumulates edge-sized cache blocks (the
-    # r9 ADVICE leak). The caller's action recomputes the edges⋈deg join
-    # once per iteration reference, which is cheap next to the exchange.
-    e.unpersist()
-    ed.unpersist()
-    return out
+    return ranks
 
 
 def pagerank_oracle_sql(iterations: int = 5, damping_pct: int = 85) -> str:
@@ -192,69 +185,68 @@ def hits(
     no in/out edges hold 0 (max-normalized HITS convention here —
     documented and replayed identically by the oracle)."""
     spark = edges.sparkSession
-    e = edges.repartition("src").persist()
-    nodes = spark.range(n_nodes).select(F.col("id"))
-    auth = nodes.select("id", F.lit(HITS_SCALE).cast("long").alias("auth"))
-    hub = nodes.select("id", F.lit(HITS_SCALE).cast("long").alias("hub"))
-    prev_cps: list[DataFrame] = []  # last iteration's checkpoints, dead
-    # once the current iteration's are materialized (r9 ADVICE: release
-    # them with util.release_checkpoint)
-    for _ in range(iterations):
-        # eager localCheckpoint per iteration (the repo's standard move
-        # for iterative DataFrame loops, cf. neardup admission): each
-        # raw frame feeds BOTH its max agg and the normalization join,
-        # and without truncation the final action re-derives the whole
-        # iteration prefix once per consumer — measured 190+ stages for
-        # 3 iterations at sf0.01 vs ~20 with checkpoints
-        a_raw = (
-            e.join(hub, e.src == hub.id)
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        a_max = a_raw.agg(F.max("raw").alias("mx"))
-        auth = (
-            nodes.join(a_raw, nodes.id == a_raw.dst, "left")
-            .crossJoin(F.broadcast(a_max))
-            .select(
-                "id",
-                F.coalesce(
-                    F.expr(f"raw * CAST({HITS_SCALE} AS BIGINT) div mx"), F.lit(0)
-                ).cast("long").alias("auth"),
+    with materialized(edges.repartition("src")) as e:
+        nodes = spark.range(n_nodes).select(F.col("id"))
+        auth = nodes.select("id", F.lit(HITS_SCALE).cast("long").alias("auth"))
+        hub = nodes.select("id", F.lit(HITS_SCALE).cast("long").alias("hub"))
+        # the last iteration's checkpoints, dead once the current
+        # iteration's are materialized
+        prev_cps: list[DataFrame] = []
+        for _ in range(iterations):
+            # eager localCheckpoint per iteration (the repo's standard move
+            # for iterative DataFrame loops, cf. neardup admission): each
+            # raw frame feeds BOTH its max agg and the normalization join,
+            # and without truncation the final action re-derives the whole
+            # iteration prefix once per consumer — measured 190+ stages for
+            # 3 iterations at sf0.01 vs ~20 with checkpoints
+            a_raw = (
+                e.join(hub, e.src == hub.id)
+                .groupBy("dst")
+                .agg(F.sum("hub").alias("raw"))
+                .localCheckpoint(eager=True)
             )
-        )
-        h_raw = (
-            e.join(auth, e.dst == auth.id)
-            .groupBy("src")
-            .agg(F.sum("auth").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        h_max = h_raw.agg(F.max("raw").alias("mx"))
-        hub = (
-            nodes.join(h_raw, nodes.id == h_raw.src, "left")
-            .crossJoin(F.broadcast(h_max))
-            .select(
-                "id",
-                F.coalesce(
-                    F.expr(f"raw * CAST({HITS_SCALE} AS BIGINT) div mx"), F.lit(0)
-                ).cast("long").alias("hub"),
+            a_max = a_raw.agg(F.max("raw").alias("mx"))
+            auth = (
+                nodes.join(a_raw, nodes.id == a_raw.dst, "left")
+                .crossJoin(F.broadcast(a_max))
+                .select(
+                    "id",
+                    F.coalesce(
+                        F.expr(f"raw * CAST({HITS_SCALE} AS BIGINT) div mx"), F.lit(0)
+                    ).cast("long").alias("auth"),
+                )
             )
+            h_raw = (
+                e.join(auth, e.dst == auth.id)
+                .groupBy("src")
+                .agg(F.sum("auth").alias("raw"))
+                .localCheckpoint(eager=True)
+            )
+            h_max = h_raw.agg(F.max("raw").alias("mx"))
+            hub = (
+                nodes.join(h_raw, nodes.id == h_raw.src, "left")
+                .crossJoin(F.broadcast(h_max))
+                .select(
+                    "id",
+                    F.coalesce(
+                        F.expr(f"raw * CAST({HITS_SCALE} AS BIGINT) div mx"), F.lit(0)
+                    ).cast("long").alias("hub"),
+                )
+            )
+            # h_raw (eager) sealed this iteration: the previous iteration's
+            # two checkpoints can no longer be referenced by anything live
+            for cp in prev_cps:
+                release_checkpoint(cp)
+            prev_cps = [a_raw, h_raw]
+        # seal the result as ONE eager node-sized checkpoint, then free the
+        # final iteration's raw frames and the edges — a run leaves a single
+        # result-sized block (ContextCleaner reclaims it when the caller
+        # drops the frame; tests release it explicitly)
+        out = auth.join(hub, "id").select("id", "auth", "hub").localCheckpoint(
+            eager=True
         )
-        # h_raw (eager) sealed this iteration: the previous iteration's
-        # two checkpoints can no longer be referenced by anything live
         for cp in prev_cps:
             release_checkpoint(cp)
-        prev_cps = [a_raw, h_raw]
-    # seal the result as ONE eager node-sized checkpoint, then free the
-    # final iteration's raw frames too — a 3-iteration run now leaves a
-    # single result-sized block (ContextCleaner reclaims it when the
-    # caller drops the frame; tests release it explicitly)
-    out = auth.join(hub, "id").select("id", "auth", "hub").localCheckpoint(
-        eager=True
-    )
-    for cp in prev_cps:
-        release_checkpoint(cp)
-    e.unpersist()
     return out
 
 
@@ -345,8 +337,9 @@ def components(edges: DataFrame, n_nodes: int, iterations: int = 6) -> DataFrame
     engine either way.
 
     100 TB shape: mirrors pagerank — the undirected edge set is built
-    once (one distinct), repartitioned by src, and persisted; each
-    round pays exactly one groupBy(dst) MIN exchange (the irreducible
+    once (one distinct) and repartitioned by src, an exchange every
+    round reads (AQE reuses it); each round pays exactly one groupBy(dst)
+    MIN exchange (the irreducible
     label-propagation shuffle). Label state is one (id, long) row per
     node. Pure integer MIN has no float drift, so no per-iteration
     checkpoint pressure builds (join diamond depth = 1 per round, same
@@ -355,8 +348,7 @@ def components(edges: DataFrame, n_nodes: int, iterations: int = 6) -> DataFrame
     und = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    e = und.repartition("src").persist()
-    e.count()
+    e = und.repartition("src")
     nodes = spark.range(n_nodes).select(F.col("id"))
     lab = nodes.select("id", F.col("id").cast("long").alias("label"))
     for _ in range(iterations):
@@ -374,9 +366,7 @@ def components(edges: DataFrame, n_nodes: int, iterations: int = 6) -> DataFrame
                 ).alias("label"),
             )
         )
-    out = lab.select("id", F.col("label").alias("component"))
-    e.unpersist()
-    return out
+    return lab.select("id", F.col("label").alias("component"))
 
 
 def components_oracle_sql(iterations: int = 6) -> str:

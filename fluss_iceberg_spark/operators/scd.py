@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fluss_iceberg_spark.lake.table import LakeTable
+from fluss_iceberg_spark.operators.util import materialized
 
 
 def scd2_apply(
@@ -52,37 +53,36 @@ def scd2_apply(
         # still counts as a change
         changed_cond = changed_cond | ~F.col(a).eqNullSafe(F.col(f"__cur_{a}"))
     is_new = F.col("__cur_from").isNull()
-    touched = joined.filter(is_new | changed_cond).persist()
-    # batch time must move strictly forward for every touched key: at
-    # ts == current valid_from the close and open rows would share the
-    # (key, valid_from) PK and merge would collapse them arbitrarily;
-    # at ts < valid_from a key would end with two open versions
-    max_cur = touched.agg(F.max("__cur_from").alias("m")).collect()[0].m
-    if max_cur is not None and ts <= max_cur:
-        touched.unpersist()
-        raise ValueError(
-            f"scd2_apply: batch ts {ts} is not after the newest touched "
-            f"version's valid_from ({max_cur}) — batches must apply in "
-            "increasing logical time"
+    with materialized(joined.filter(is_new | changed_cond)) as touched:
+        # one job answers both: how many keys change, and whether batch
+        # time moves strictly forward for every one of them. At ts ==
+        # current valid_from the close and open rows would share the
+        # (key, valid_from) PK and merge would collapse them arbitrarily;
+        # at ts < valid_from a key would end with two open versions
+        n, max_cur = touched.agg(F.count(F.lit(1)), F.max("__cur_from")).first()
+        if max_cur is not None and ts <= max_cur:
+            raise ValueError(
+                f"scd2_apply: batch ts {ts} is not after the newest touched "
+                f"version's valid_from ({max_cur}) — batches must apply in "
+                "increasing logical time"
+            )
+        closed = (
+            touched.filter(~is_new)
+            .select(
+                F.col(key_col),
+                *[F.col(f"__cur_{a}").alias(a) for a in attr_cols],
+                F.col("__cur_from").alias("valid_from"),
+                F.lit(ts).cast("long").alias("valid_to"),
+                F.lit(False).alias("is_current"),
+            )
         )
-    closed = (
-        touched.filter(~is_new)
-        .select(
+        opened = touched.select(
             F.col(key_col),
-            *[F.col(f"__cur_{a}").alias(a) for a in attr_cols],
-            F.col("__cur_from").alias("valid_from"),
-            F.lit(ts).cast("long").alias("valid_to"),
-            F.lit(False).alias("is_current"),
+            *[F.col(a) for a in attr_cols],
+            F.lit(ts).cast("long").alias("valid_from"),
+            F.lit(None).cast("long").alias("valid_to"),
+            F.lit(True).alias("is_current"),
         )
-    )
-    opened = touched.select(
-        F.col(key_col),
-        *[F.col(a) for a in attr_cols],
-        F.lit(ts).cast("long").alias("valid_from"),
-        F.lit(None).cast("long").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    n = touched.count()
-    if n:
-        t.merge(closed.unionByName(opened).select(*t.schema.fieldNames()))
+        if n:
+            t.merge(closed.unionByName(opened).select(*t.schema.fieldNames()))
     return n

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fluss_iceberg_spark.operators.dedup import dot_expanded, vec_norm
+from fluss_iceberg_spark.operators.util import materialized
 
 
 def _as_double(
@@ -378,39 +379,39 @@ def kmeans_fit(
     """
     import numpy as np
 
-    # persist: every Lloyd iteration (and the seed) re-executes this
+    # held cached: every Lloyd iteration (and the seed) re-executes this
     # frame; without it each iteration re-scans + re-casts the vectors
-    v = _as_double(vectors).select("vec_id", "v", "nrm").persist()
-    seed_rows = v.orderBy("vec_id").limit(n_clusters).collect()
-    C = np.array([r.v for r in seed_rows], dtype="float64")
-    k = len(C)
-    spark = vectors.sparkSession
-    for _ in range(n_iters):
-        model = [
-            (i, [float(x) for x in C[i]], float(np.linalg.norm(C[i])))
-            for i in range(k)
-        ]
-        assigned = _assign_clusters(v, model, dim)
-        sums = (
-            assigned.select(
-                "cid",
-                F.posexplode(F.col("v")).alias("comp_idx", "val"),
+    v = _as_double(vectors).select("vec_id", "v", "nrm")
+    with materialized(v) as v:
+        seed_rows = v.orderBy("vec_id").limit(n_clusters).collect()
+        C = np.array([r.v for r in seed_rows], dtype="float64")
+        k = len(C)
+        spark = vectors.sparkSession
+        for _ in range(n_iters):
+            model = [
+                (i, [float(x) for x in C[i]], float(np.linalg.norm(C[i])))
+                for i in range(k)
+            ]
+            assigned = _assign_clusters(v, model, dim)
+            sums = (
+                assigned.select(
+                    "cid",
+                    F.posexplode(F.col("v")).alias("comp_idx", "val"),
+                )
+                .groupBy("cid", "comp_idx")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+                .collect()
             )
-            .groupBy("cid", "comp_idx")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        newC = C.copy()
-        counts = np.zeros(k)
-        acc = np.zeros((k, dim))
-        for r in sums:
-            acc[r.cid][r.comp_idx] = r.s
-            counts[r.cid] = r.n
-        for c in range(k):
-            if counts[c] > 0:
-                newC[c] = acc[c] / counts[c]
-        C = newC
-    v.unpersist()
+            newC = C.copy()
+            counts = np.zeros(k)
+            acc = np.zeros((k, dim))
+            for r in sums:
+                acc[r.cid][r.comp_idx] = r.s
+                counts[r.cid] = r.n
+            for c in range(k):
+                if counts[c] > 0:
+                    newC[c] = acc[c] / counts[c]
+            C = newC
     return [
         (i, [float(x) for x in C[i]], float(np.linalg.norm(C[i])))
         for i in range(k)

@@ -724,11 +724,10 @@ def unigram_scores(
     tok_rows = spread(df).select(
         "doc_id", F.explode(tokens(F.col(text_col))).alias("w")
     )
-    # dc feeds BOTH the vocabulary count and the scoring join (a diamond):
-    # persist it or each branch re-runs the scan + explode
-    dc = (
-        tok_rows.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("cnt")).persist()
-    )
+    # dc feeds BOTH the vocabulary count and the scoring join (a diamond);
+    # both branches read its aggregate exchange, which AQE reuses, so the
+    # scan + explode runs once without a cache
+    dc = tok_rows.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("cnt"))
     freq = dc.groupBy("w").agg(F.sum("cnt").alias("c"))
     per_doc = (
         dc.join(freq, on="w")
@@ -792,9 +791,9 @@ def bigram_scores(
             "doc_id", F.explode(F.expr(_ngram_array("toks", 2))).alias("bg")
         )
     )
-    # dc feeds the vocabulary AND the scoring join (a diamond): persist
-    # it or each branch re-runs the scan + explode
-    dc = grams.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    # dc feeds the vocabulary AND the scoring join (a diamond); both read
+    # its aggregate exchange, which AQE reuses: one scan + explode
+    dc = grams.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("cnt"))
     freq = dc.groupBy("bg").agg(F.sum("cnt").alias("c_bg"))
     pref = (
         freq.groupBy(F.substring_index("bg", " ", 1).alias("w1"))
@@ -1267,10 +1266,6 @@ def ilog2_local(c: int) -> int:
     return e * (1 << _ILOG_FRAC_BITS) + frac
 
 
-def _spark_idiv(a, b) -> str:
-    return f"({a} div {b})"
-
-
 @F.pandas_udf(LongType())
 def _bits_q16_udf(num, den):
     """ilog2(den) - ilog2(num) in 2^-16 units — the model-table scoring
@@ -1321,11 +1316,9 @@ def perplexity_scores(
             "doc_id", F.explode(F.expr(_ngram_array("toks", 2))).alias("bg")
         )
     )
-    dc = (
-        grams.groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
+    # the model and the scoring branches both read dc's aggregate
+    # exchange, which AQE reuses: one scan + explode
+    dc = grams.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("cnt"))
     freq = dc.groupBy("bg").agg(F.sum("cnt").alias("c_bg"))
     pref = (
         freq.groupBy(F.substring_index("bg", " ", 1).alias("w"))
@@ -1484,28 +1477,28 @@ def bm25_scores(
     """Top-``top`` documents for an OR-semantics term query under
     integer-exact BM25 (k1=1.2, b=0.75). Scale shape: ONE corpus
     tokenize total — the doc-length and term-filtered tf aggregates are
-    persisted before the stats read, so the scoring job reuses them
-    instead of re-tokenizing; the ilog chain runs driver-side on the
+    held cached across the stats read and the scoring job, so the
+    scoring job reuses them instead of re-tokenizing; the ilog chain runs driver-side on the
     |terms|+2 collected ints; scoring is a broadcast of (term, idf) onto
     the tf rows with N/TL as plan literals, one per-doc aggregate, and a
-    bounded top-k (materialized eagerly — <= ``top`` rows — so the
-    cached aggregates can be released before returning)."""
-    from fluss_iceberg_spark.operators.util import spread
+    bounded top-k (collected — <= ``top`` rows — so the cached
+    aggregates are released before returning)."""
+    from fluss_iceberg_spark.operators.util import arrow_local_df, materialized, spread
 
     toks = (
         spread(df)
         .select("doc_id", F.explode(tokens(F.col(text_col))).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    # ONE-PASS per-doc aggregate (r13, guide §2 "aggregate before you
+    # ONE-PASS per-doc aggregate (guide §2 "aggregate before you
     # shuffle"): the doc length and every query term's tf come out of a
     # single groupBy over the token stream as conditional counts, so the
-    # corpus is tokenized exactly ONCE at cache-fill time (the r12 shape
-    # persisted dl and tf separately, and each cache FILL re-ran the
-    # tokenize — two corpus passes). No exploded-token persist either
-    # (corpus-scale memory at 100 TB); the cached state is one row per
-    # doc. Unpersisted before returning (the final top-k is bounded by
-    # `top`, materialized eagerly and handed back as a local frame).
+    # corpus is tokenized exactly ONCE, when the cache fills; caching dl
+    # and tf separately would tokenize it once per cache. No
+    # exploded-token cache either (corpus-scale memory at 100 TB): the
+    # cached state is one row per doc, held while the stats and the
+    # top-k are collected; the top-k comes back as a local frame of at
+    # most `top` rows.
     term_list = list(dict.fromkeys(terms))  # dedupe, keep query order
     if not term_list:
         return (
@@ -1513,100 +1506,95 @@ def bm25_scores(
             .limit(0)
             .withColumn("score_scaled", F.lit(0).cast("long"))
         )
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            *[
-                F.count(F.when(F.col("tok") == F.lit(t), 1)).alias(f"__tf{i}")
-                for i, t in enumerate(term_list)
-            ],
-        )
-        .persist()
+    per_doc = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tok"),
+        *[
+            F.count(F.when(F.col("tok") == F.lit(t), 1)).alias(f"__tf{i}")
+            for i, t in enumerate(term_list)
+        ],
     )
-    dl = per_doc.select("doc_id", "n_tok")
-    # unpivot the per-term counts back to the (doc_id, tok, tf > 0) rows
-    # the scoring join consumes — bit-identical to the former
-    # filter+groupBy aggregate (counts are exact integers either way)
-    tf = (
-        per_doc.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tok"),
-                            F.col(f"__tf{i}").alias("tf"),
-                        )
-                        for i, t in enumerate(term_list)
-                    ]
-                )
-            ).alias("__p"),
+    with materialized(per_doc) as per_doc:
+        dl = per_doc.select("doc_id", "n_tok")
+        # unpivot the per-term counts back to the (doc_id, tok, tf > 0) rows
+        # the scoring join consumes — bit-identical to the former
+        # filter+groupBy aggregate (counts are exact integers either way)
+        tf = (
+            per_doc.select(
+                "doc_id",
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(t).alias("tok"),
+                                F.col(f"__tf{i}").alias("tf"),
+                            )
+                            for i, t in enumerate(term_list)
+                        ]
+                    )
+                ).alias("__p"),
+            )
+            .select(
+                "doc_id", F.col("__p.tok").alias("tok"), F.col("__p.tf").alias("tf")
+            )
+            .filter(F.col("tf") > 0)
         )
-        .select("doc_id", F.col("__p.tok").alias("tok"), F.col("__p.tf").alias("tf"))
-        .filter(F.col("tf") > 0)
-    )
-    # the idf model is |terms|+2 integers — a bounded, documented driver
-    # read (same class as the classifier moments / BPE vocab): ONE
-    # collect pulls (df_t per term, N, TL), then the 52-step ilog chain
-    # runs as literal Python on those ints instead of 104 analyzer
-    # passes of the column-chain form — identical values by construction
-    # (ilog2_local IS the recurrence; the oracle replays the full SQL
-    # chain). N and TL enter the scoring expression as literals, so the
-    # executed plan is one corpus tokenize feeding the tf/dl branches.
-    stats = (
-        tf.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df_cnt"))
-        .crossJoin(
-            F.broadcast(
-                dl.agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("n_tok").alias("tl"),
+        # the idf model is |terms|+2 integers — a bounded, documented driver
+        # read (same class as the classifier moments / BPE vocab): ONE
+        # collect pulls (df_t per term, N, TL), then the 52-step ilog chain
+        # runs as literal Python on those ints instead of 104 analyzer
+        # passes of the column-chain form — identical values by construction
+        # (ilog2_local IS the recurrence; the oracle replays the full SQL
+        # chain). N and TL enter the scoring expression as literals, so the
+        # executed plan is one corpus tokenize feeding the tf/dl branches.
+        stats = (
+            tf.groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("df_cnt"))
+            .crossJoin(
+                F.broadcast(
+                    dl.agg(
+                        F.count(F.lit(1)).alias("n_docs"),
+                        F.sum("n_tok").alias("tl"),
+                    )
                 )
             )
+            .collect()
         )
-        .collect()
-    )
-    if not stats:
-        # no query term occurs anywhere in the corpus: the ranking is
-        # empty by definition — return an empty frame with the contract
-        # schema instead of crashing on stats[0]
-        per_doc.unpersist()
-        return (
-            df.select("doc_id")
-            .limit(0)
-            .withColumn("score_scaled", F.lit(0).cast("long"))
+        if not stats:
+            # no query term occurs anywhere in the corpus: the ranking is
+            # empty by definition — return an empty frame with the contract
+            # schema instead of crashing on stats[0]
+            return (
+                df.select("doc_id")
+                .limit(0)
+                .withColumn("score_scaled", F.lit(0).cast("long"))
+            )
+        n_docs, tl = int(stats[0]["n_docs"]), int(stats[0]["tl"])
+        inn = ilog2_local(n_docs)
+        idf = arrow_local_df(
+            df.sparkSession,
+            sorted((r["tok"], inn - ilog2_local(r["df_cnt"])) for r in stats),
+            "tok string, idf_q16 long",
         )
-    n_docs, tl = int(stats[0]["n_docs"]), int(stats[0]["tl"])
-    inn = ilog2_local(n_docs)
-    from fluss_iceberg_spark.operators.util import arrow_local_df
-
-    idf = arrow_local_df(
-        df.sparkSession,
-        sorted((r["tok"], inn - ilog2_local(r["df_cnt"])) for r in stats),
-        "tok string, idf_q16 long",
-    )
-    scored = (
-        tf.join(F.broadcast(idf), on="tok")
-        .join(dl, on="doc_id")
-        .withColumn(
-            "tfsat_milli",
-            F.expr(
-                f"(22 * CAST({tl} AS BIGINT) * tf * 1000) div "
-                f"(10 * CAST({tl} AS BIGINT) * tf + 3 * CAST({tl} AS BIGINT)"
-                f" + 9 * n_tok * CAST({n_docs} AS BIGINT))"
-            ),
+        scored = (
+            tf.join(F.broadcast(idf), on="tok")
+            .join(dl, on="doc_id")
+            .withColumn(
+                "tfsat_milli",
+                F.expr(
+                    f"(22 * CAST({tl} AS BIGINT) * tf * 1000) div "
+                    f"(10 * CAST({tl} AS BIGINT) * tf + 3 * CAST({tl} AS BIGINT)"
+                    f" + 9 * n_tok * CAST({n_docs} AS BIGINT))"
+                ),
+            )
+            .groupBy("doc_id")
+            .agg(F.sum(F.expr("idf_q16 * tfsat_milli")).alias("score_scaled"))
         )
-        .groupBy("doc_id")
-        .agg(F.sum(F.expr("idf_q16 * tfsat_milli")).alias("score_scaled"))
-    )
-    rows = (
-        scored.orderBy(F.desc("score_scaled"), F.asc("doc_id"))
-        .limit(top)
-        .select("doc_id", F.col("score_scaled").cast("long").alias("score_scaled"))
-        .collect()
-    )
-    per_doc.unpersist()
+        rows = (
+            scored.orderBy(F.desc("score_scaled"), F.asc("doc_id"))
+            .limit(top)
+            .select("doc_id", F.col("score_scaled").cast("long").alias("score_scaled"))
+            .collect()
+        )
     out_schema = StructType(
         [df.schema["doc_id"], StructField("score_scaled", LongType(), True)]
     )

@@ -1,4 +1,8 @@
-"""Shared operator utilities."""
+"""Shared operator utilities. ``materialized`` is the one way to hold a
+frame in executor storage for a block and ``session_conf`` the one way
+to change a session conf for a while; both give it back on every exit
+path. ``release_checkpoint`` frees a local checkpoint whose lifetime is
+not one block (loop-carried iteration state, a route cache)."""
 
 from __future__ import annotations
 
@@ -22,6 +26,23 @@ def release_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Py4JError:
         pass
+
+
+@contextmanager
+def materialized(df: DataFrame, checkpoint: bool = False):
+    """Yield ``df`` persisted, or with ``checkpoint=True`` as an eager
+    ``localCheckpoint`` (lineage run once and truncated), and unpersist
+    or release it on every exit path of the ``with`` block. A frame built
+    on the held one and read after the block no longer reads it, so what
+    an operator returns is computed inside: collected, or checkpointed."""
+    held = df.localCheckpoint(eager=True) if checkpoint else df.persist()
+    try:
+        yield held
+    finally:
+        if checkpoint:
+            release_checkpoint(held)
+        else:
+            held.unpersist()
 
 
 @contextmanager

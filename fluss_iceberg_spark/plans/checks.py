@@ -21,10 +21,6 @@ def physical_plan(df: DataFrame) -> str:
     )
 
 
-def count_occurrences(df: DataFrame, needle: str) -> int:
-    return physical_plan(df).count(needle)
-
-
 def count_nodes(df: DataFrame, node: str) -> int:
     """Count physical operator nodes by their detail headers '(N) Node'
     (the formatted plan prints each node once in the tree and once in the

@@ -1,4 +1,4 @@
-"""File-format sources beyond parquet: CSV / JSON / ORC with explicit
+"""File-format sources beyond parquet: CSV / JSON with explicit
 schemas (schema-on-write, no inference — SURVEY §1.3).
 
 The reference's only file format is Parquet (trino/iceberg.properties:6);
@@ -28,11 +28,3 @@ def write_json(df: DataFrame, path: str) -> None:
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).json(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)

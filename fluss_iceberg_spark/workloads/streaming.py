@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fluss_iceberg_spark.lake.table import LakeCatalog
-from fluss_iceberg_spark.operators.util import arrow_local_df, session_conf
+from fluss_iceberg_spark.operators.util import arrow_local_df, materialized, session_conf
 from fluss_iceberg_spark.registry import query
 from fluss_iceberg_spark.sources import faker
 from fluss_iceberg_spark.sources.tpch import load_table, micros_ts, read_fixture
@@ -889,13 +889,6 @@ def stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fluss_iceberg_spark.operators import dedup as DD
 
     cat = LakeCatalog(spark, _scratch(sf_dir, "neardup_wh"))
-    # persist the raw source once: all four replay ticks filter the same
-    # table, and re-parsing the parquet per tick is pure input-IO waste
-    # (caching INPUT rows, not any computed feature — each tick's work
-    # still happens strictly within that tick)
-    docs = (
-        load_table(spark, sf_dir, "documents").select("doc_id", "text").persist()
-    )
     buckets = cat.create_table(
         "nd_buckets",
         spark.createDataFrame([], "bkey string, owner long").schema,
@@ -917,8 +910,8 @@ def stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame([], "doc_id long, batch int").schema,
     )
     # per-batch state joins are small; 200 default shuffle partitions
-    # would dominate wall time with empty-task overhead — volume-sized
-    # from the documents table per the r10 state-churn rule. AQE is pure
+    # would dominate wall time with empty-task overhead, so the count
+    # follows the documents table's volume (_state_partitions). AQE is pure
     # overhead inside the tick loop too: every join is explicitly
     # broadcast and every frame micro-batch-bounded, so its per-stage
     # re-planning round-trips buy nothing (measured ~1.5 s/query at
@@ -927,13 +920,15 @@ def stream_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.shuffle.partitions": _state_partitions(spark, sf_dir, "documents"),
         "spark.sql.adaptive.enabled": "false",
     }
-    try:
-        with session_conf(spark, tick_confs):
-            for b in range(4):
-                batch = docs.filter(F.pmod("doc_id", F.lit(4)) == b)
-                DD.neardup_admit_batch(buckets, owner_sets, admitted, batch, b)
-    finally:
-        docs.unpersist()
+    # hold the raw source once: all four replay ticks filter the same
+    # table, and re-parsing the parquet per tick is pure input-IO waste
+    # (caching INPUT rows, not any computed feature — each tick's work
+    # still happens strictly within that tick)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    with materialized(docs) as docs, session_conf(spark, tick_confs):
+        for b in range(4):
+            batch = docs.filter(F.pmod("doc_id", F.lit(4)) == b)
+            DD.neardup_admit_batch(buckets, owner_sets, admitted, batch, b)
     return admitted.read().select("doc_id", "batch")
 
 

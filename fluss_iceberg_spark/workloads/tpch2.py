@@ -593,8 +593,9 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery -> broadcast cross join; the threshold compare stays in
     exact decimal cents so both engines agree bit-for-bit). One fact
     shuffle for the per-part aggregate; the per-part result feeds both
-    the global total and the final filter (a diamond), so it is
-    persisted — otherwise each branch re-runs the fact scan + join."""
+    the global total and the final filter (a diamond), and both branches
+    read its aggregate exchange, which AQE reuses: the fact scan + join
+    runs once."""
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
@@ -603,7 +604,6 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .groupBy("l_partkey")
         .agg(F.sum(_dec("l_extendedprice")).alias("value"))
-        .persist()
     )
     total = v.agg(F.sum("value").alias("total"))
     return (

@@ -66,11 +66,8 @@ def test_observed_buckets_equal_the_distinct_collect(spark, cat, keys):
     delta = _keyed(spark, keys)
     want = _distinct_buckets(t, delta)
     obs = Observation()
-    frame, release = t._materialize_delta(delta.dropDuplicates(["k"]), obs)
-    try:
+    with t._materialize_delta(delta.dropDuplicates(["k"]), obs) as frame:
         seen = t._observed(obs)
-    finally:
-        release()
     assert frame is not delta
     assert set(seen["buckets"]) == want
     assert seen["rows"] == len(keys)
@@ -81,8 +78,8 @@ def test_trivial_delta_is_not_observed(spark, cat, tmp_path):
     spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(str(tmp_path / "src"))
     scan = spark.read.parquet(str(tmp_path / "src"))
     obs = Observation()
-    frame, release = t._materialize_delta(scan, obs)
-    release()
+    with t._materialize_delta(scan, obs) as frame:
+        pass
     assert frame is scan
     assert t._observed(obs) is None
 

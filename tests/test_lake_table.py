@@ -211,6 +211,5 @@ def test_scan_filter_delta_stays_unmaterialized(spark, cat, tmp_path):
     t = cat.create_table("scan_delta", PK_SCHEMA, primary_key=["k"], n_buckets=4)
     _df(spark, [(1, "a", None), (2, "b", None)]).write.parquet(str(tmp_path / "src"))
     scan = spark.read.parquet(str(tmp_path / "src")).filter(F.col("k") > 1)
-    frame, release = t._materialize_delta(scan)
-    assert frame is scan
-    release()
+    with t._materialize_delta(scan) as frame:
+        assert frame is scan

@@ -47,12 +47,17 @@ SCOPED_CONFS = (
 
 def test_all_queries_return_rows(spark):
     """Queries without oracles still get the rows-only smoke check, and
-    no query leaves a session conf changed behind it."""
+    no query leaves a session conf changed or a cached frame behind it:
+    in a long-lived session a cache nobody releases holds executor
+    memory for the rest of the session."""
     from fluss_iceberg_spark import registry
 
     registry.load_all()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # what earlier tests cached is not a query's
     for name, fn in registry.QUERIES.items():
         before = [spark.conf.get(k) for k in SCOPED_CONFS]
         df = fn(spark, SF_DIR)
         assert df.count() >= 0, name
         assert [spark.conf.get(k) for k in SCOPED_CONFS] == before, name
+        assert cache.isEmpty(), f"{name} left a cached frame"

@@ -4,6 +4,7 @@ back to the shuffle-heavy / driver-collect shapes fails here)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluss_iceberg_spark import registry
@@ -260,16 +261,42 @@ def test_decontaminate_self_benchmark_all_contaminated(spark):
     assert out.count() == docs.count()
 
 
+def _final_plan(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    return final
+
+
 def test_unigram_single_corpus_scan(spark):
     """The unigram LM must derive vocabulary counts and per-doc scores
-    from one persisted per-(doc, word) reduction — never scan + explode
-    the corpus once per branch."""
+    from one per-(doc, word) reduction — never scan + explode the corpus
+    once per branch: after an action the final AQE plan scans the corpus
+    once, and the second branch reads the reduction's reused exchange."""
     from fluss_iceberg_spark.operators import text as TX
 
-    df = TX.unigram_scores(load_table(spark, SF, "documents"))
-    plan = physical_plan(df)
-    assert plan.count("documents.parquet") <= 1  # cached branch may hide it
-    assert "InMemoryTableScan" in plan
+    final = _final_plan(TX.unigram_scores(load_table(spark, SF, "documents")))
+    assert final.count("FileScan parquet") == 1
+    assert "ReusedExchange" in final
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_unigram_lm_score",
+        "text_bigram_coherence",
+        "text_perplexity_filter",
+        "tpch_q11_important_stock",
+    ],
+)
+def test_diamond_queries_reuse_the_shared_exchange(spark, name):
+    """Each of these queries reads one aggregate from two branches. The
+    branches share it through an exchange that AQE reuses, not through a
+    cache: the final plan holds a ReusedExchange and no InMemoryTableScan."""
+    final = _final_plan(registry.QUERIES[name](spark, SF))
+    assert "ReusedExchange" in final
+    assert "InMemoryTableScan" not in final
 
 
 def test_budget_select_single_key_exchange(spark):
